@@ -4,8 +4,8 @@ import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.execution.joins.HashedRelation;
 
 /**
- * Broadcast payload wrapper for graft's custom range-join broadcast
- * modes (the HashedRelationBroadcastMode precedent: the index is built
+ * Broadcast payload wrapper for graft's custom interval-join broadcast
+ * mode (the HashedRelationBroadcastMode precedent: the index is built
  * ONCE on the driver inside the BroadcastExchange, and executors
  * receive the ready structure).
  *
@@ -23,10 +23,10 @@ import org.apache.spark.sql.execution.joins.HashedRelation;
  * only the six abstract methods and {@code estimatedSize}).
  *
  * Only {@code estimatedSize} is ever invoked by the exchange; the
- * key-lookup surface is unreachable because only the graft range-join
- * strategies consume these modes' exchanges — those methods throw to
- * keep that contract loud. The payload is opaque here (a RangeIndex or
- * a key-to-RangeIndex HashMap, both built from UnsafeRow copies);
+ * key-lookup surface is unreachable because only the graft interval-join
+ * strategy consumes this mode's exchanges — those methods throw to
+ * keep that contract loud. The payload is opaque here (a key-to-RangeIndex
+ * HashMap built from UnsafeRow copies);
  * serialization is plain Java serialization (UnsafeRow is
  * Externalizable), and the generated comparator is deliberately NOT
  * part of the payload — each task regenerates it from the value type.
@@ -82,6 +82,6 @@ public final class DriverBuiltRelation implements HashedRelation, java.io.Serial
 
   private static UnsupportedOperationException unsupported() {
     return new UnsupportedOperationException(
-        "DriverBuiltRelation is consumed only by the graft range-join execs");
+        "DriverBuiltRelation is consumed only by the graft interval-join exec");
   }
 }

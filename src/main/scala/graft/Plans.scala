@@ -34,9 +34,11 @@ object Plans {
       "semi-join; AQE reuses the counts exchange at runtime"),
     "q_json_extract" -> ("props JSON parsed EXACTLY once per row " +
       "(single from_json in one project, no per-row filter to duplicate)"),
-    "q_interval_join" -> ("banded time-range join as a binned equi-join " +
-      "(hour-bucket keys + explode + residual filter) — hash join, " +
-      "never BroadcastNestedLoop"),
+    "q_interval_join" -> ("keyed point-in-interval join (IntervalJoin): " +
+      "views probe their user's purchases broadcast as lo-sorted " +
+      "[purchase_ts, purchase_ts + 1 h] groups — BroadcastIntervalJoin, " +
+      "never BroadcastNestedLoop; past the size ceiling the same call " +
+      "plans the binned equi-join"),
     "q_tfidf" -> ("tf/df/N joins all broadcast (df table is " +
       "dimension-sized after aggregation); per-doc top-k via one " +
       "doc-keyed window"),
@@ -127,9 +129,10 @@ object Plans {
       "centroid profiles: one scan, cosine + argmax window at vec " +
       "grain — the only shuffle builds the |labels|-row centroid " +
       "table"),
-    "q_range_bands" -> ("custom BroadcastRangeJoinExec: interval dim " +
-      "broadcast (the exchange is visible below the exec), fact side " +
-      "probes by binary search + running-max-hi walk — the plan a " +
+    "q_range_bands" -> ("custom BroadcastIntervalJoinExec, point probe: " +
+      "interval dim broadcast (the exchange is visible below the " +
+      "exec), fact side probes by binary search + running-max-hi " +
+      "walk — the plan a " +
       "naive BETWEEN join would render as BroadcastNestedLoopJoin"),
     "q_kmeans" -> ("multi-round Lloyd trainer, final-round inertia " +
       "plan: assignment is a MAP-ONLY array_min fold over the literal " +
@@ -142,9 +145,10 @@ object Plans {
       "broadcast probe join at list grain — train rounds are separate " +
       "fixed-width jobs of the q_kmeans shape, the serve plan itself " +
       "is one scan + one broadcast join + per-query top-k window"),
-    "q_overlap_join" -> ("custom BroadcastOverlapJoinExec: BOTH overlap " +
-      "inequalities reference both sides, so no equi-key rewrite " +
-      "exists and the native plan is BroadcastNestedLoopJoin — here " +
+    "q_overlap_join" -> ("custom BroadcastIntervalJoinExec, interval " +
+      "probe: BOTH overlap inequalities reference both sides, so no " +
+      "equi-key rewrite exists and the native plan is " +
+      "BroadcastNestedLoopJoin — here " +
       "the window dim broadcasts and each session probes the " +
       "lo-sorted index in O(log W + matches)"),
     "q_scd2_lookup" -> ("LEFT OUTER keyed range lookup: key equality + " +

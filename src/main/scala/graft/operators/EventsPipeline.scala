@@ -537,42 +537,32 @@ object EventsPipeline {
   }
 
   /** Batch interval join — every view paired with the same user's
-    * purchases in the preceding hour — via TIME BINNING. A naive range
-    * join plans as BroadcastNestedLoopJoin (O(N·M) comparisons); here
-    * both sides get an hour-bucket key (purchases exploded into the two
-    * buckets their one-hour validity window can touch), the join becomes
-    * a plain equi-join on (user_id, bucket) — shuffle-partitionable,
-    * AQE-skew-splittable — and the exact range predicate is a residual
-    * post-filter. Each qualifying (view, purchase) pair matches in
-    * exactly one bucket (the view's), so no dedup is needed. This is the
-    * standard scalable range-join rewrite; at 100 TB the equi-join
-    * shuffles only key+id columns. */
+    * purchases in the preceding hour. `purchase_ts` in
+    * [view_ts − 1 h, view_ts] is `view_ts` in [purchase_ts,
+    * purchase_ts + 1 h], so this is a keyed point-in-interval join
+    * ([[graft.plans.IntervalJoin]]): key user_id, each purchase an
+    * interval of validity. A naive range join plans as
+    * BroadcastNestedLoopJoin (O(N·M) comparisons); the interval join
+    * probes the user's lo-sorted purchases instead, and a purchase side
+    * past the broadcast ceiling takes the binned equi-join on
+    * (user_id, bucket) — shuffle-partitionable, AQE-skew-splittable. */
   def intervalJoinBinned(events: DataFrame): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    def bucketOf(c: Column): Column =
-      ((unix_micros(c) - pmod(unix_micros(c), lit(hourUs))) / lit(hourUs))
-        .cast("long")
     val views = events.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"), bucketOf(col("ts")).as("bucket"))
+        col("ts").as("view_ts"))
     val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
-      .withColumn("bucket",
-        explode(array(bucketOf(col("purchase_ts")),
-          bucketOf(col("purchase_ts")) + 1)))
-    views.join(purchases,
-        col("user_id") === col("p_user_id") &&
-          views("bucket") === purchases("bucket") &&
-          col("purchase_ts") <= col("view_ts") &&
-          col("purchase_ts") >= col("view_ts") - expr("INTERVAL 1 HOUR"))
+      .select(col("event_id").as("id"), col("user_id"), col("ts"),
+        (col("ts") + expr("INTERVAL 1 HOUR")).as("until"))
+    graft.plans.IntervalJoin
+      .join(views, purchases, "view_ts", "view_ts", "ts", "until",
+        key = Some("user_id" -> "user_id"), prefix = "purchase_")
       .select(col("view_id"), col("user_id"), col("view_ts"),
         col("purchase_id"), col("purchase_ts"))
       .orderBy(col("view_id"), col("purchase_id"))
   }
 
-  /** Interval-containment lookup via the custom BROADCAST RANGE JOIN
-    * physical operator ([[graft.plans.RangeJoin]]): events routed into
+  /** Interval-containment lookup via the custom broadcast interval
+    * join ([[graft.plans.IntervalJoin]], a point probe): events routed into
     * OVERLAPPING data-anchored time bands — a 12-hour grid (8 bands)
     * and a 24-hour grid (4 bands) over the trailing 4 days, so every
     * in-range event matches exactly TWO intervals (the multi-match
@@ -599,16 +589,15 @@ object EventsPipeline {
           (col("anchor") - col("id") * lit(w)).as("hi"))
     val bands = grid(1200, 8, h12).unionAll(grid(2400, 4, 2 * h12))
     val probe = events.select(unix_micros(col("ts")).as("x"), col("value"))
-    graft.plans.RangeJoin
-      .broadcastRangeJoin(probe, bands, "x", "lo", "hi",
-        forceBinned = forceBinned)
+    graft.plans.IntervalJoin
+      .join(probe, bands, "x", "x", "lo", "hi", forceBinned = forceBinned)
       .groupBy(col("r_band_id").as("band_id"))
       .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
       .orderBy(col("band_id"))
   }
 
-  /** SCD2-style KEYED temporal lookup via the keyed broadcast range
-    * join (plans.KeyedRangeJoin — custom operator #4): each event_type
+  /** SCD2-style KEYED temporal lookup via the keyed interval join
+    * ([[graft.plans.IntervalJoin]] with a key): each event_type
     * carries its OWN band grid (band width grows with the type's rank,
     * so the grids genuinely differ per key), and the natural plan is
     * key equality + interval containment in ONE probe — the shape of
@@ -635,17 +624,16 @@ object EventsPipeline {
         (col("anchor") - col("id") * (lit(h6) * (col("ti") + 1))).as("hi"))
     val probe = events.select(col("event_type"),
       unix_micros(col("ts")).as("x"), col("value"))
-    graft.plans.KeyedRangeJoin
-      .broadcastKeyedRangeJoin(probe, bands,
-        "event_type", "x", "etype", "lo", "hi",
-        forceBinned = forceBinned)
+    graft.plans.IntervalJoin
+      .join(probe, bands, "x", "x", "lo", "hi",
+        key = Some("event_type" -> "etype"), forceBinned = forceBinned)
       .groupBy(col("event_type"), col("r_band_id").as("band_id"))
       .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
       .orderBy(col("event_type"), col("band_id"))
   }
 
-  /** Session×window OVERLAP join via the custom broadcast overlap
-    * operator (plans.OverlapJoin — custom operator #5): user sessions
+  /** Session×window OVERLAP join via the custom broadcast interval
+    * join ([[graft.plans.IntervalJoin]], an interval probe): user sessions
     * (the [[sessionize]] gaps-and-islands intervals) matched against
     * every maintenance window their [start, end] span touches — two
     * overlapping data-anchored grids (12×6 h + 6×12 h over the
@@ -671,9 +659,8 @@ object EventsPipeline {
           (col("anchor") - (col("id") + 1) * lit(w) + 1).as("lo"),
           (col("anchor") - col("id") * lit(w)).as("hi"))
     val wins = grid(600, 12, h6).unionAll(grid(1200, 6, 2 * h6))
-    graft.plans.OverlapJoin
-      .broadcastOverlapJoin(sessions, wins, "s", "e", "lo", "hi",
-        forceBinned = forceBinned)
+    graft.plans.IntervalJoin
+      .join(sessions, wins, "s", "e", "lo", "hi", forceBinned = forceBinned)
       .groupBy(col("r_window_id").as("window_id"))
       .agg(count(lit(1)).as("n_sessions"),
         sum(col("n_events")).as("sum_events"))
@@ -721,8 +708,8 @@ object EventsPipeline {
          CAST(sum(n_events) AS BIGINT) AS sum_events
        FROM j GROUP BY window_id ORDER BY window_id"""
 
-  /** SCD2 dimension LOOKUP via the LEFT-OUTER keyed broadcast range
-    * join: every event resolved against a versioned per-type rate
+  /** SCD2 dimension LOOKUP via the LEFT-OUTER keyed interval join:
+    * every event resolved against a versioned per-type rate
     * dimension (type ti carries ti+2 versions of 12 h validity each,
     * so coverage depth differs per key), with facts outside every
     * version's window SURVIVING as version −1 — the SCD2 contract a
@@ -748,10 +735,10 @@ object EventsPipeline {
         (col("anchor") - col("v") * lit(h12)).as("valid_to"))
     val probe = events.select(col("event_type"),
       unix_micros(col("ts")).as("x"), col("value"))
-    graft.plans.KeyedRangeJoin
-      .broadcastKeyedRangeJoin(probe, dim,
-        "event_type", "x", "etype", "valid_from", "valid_to",
-        leftOuter = true, forceBinned = forceBinned)
+    graft.plans.IntervalJoin
+      .join(probe, dim, "x", "x", "valid_from", "valid_to",
+        key = Some("event_type" -> "etype"), leftOuter = true,
+        forceBinned = forceBinned)
       .groupBy(col("event_type"),
         coalesce(col("r_version"), lit(-1L)).as("version"))
       .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))

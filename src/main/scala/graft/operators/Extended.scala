@@ -509,21 +509,25 @@ object Extended {
     // of paying two sequential job schedules. This is NOT the rejected
     // r16 rollup fusion — no Expand, the global branch never touches
     // the theta-sketch update, each event row is sketched exactly once.
-    // The global row is tagged by a null sentinel in `sk` (event_type
-    // strings can be anything; a null sketch cannot occur in the per-
-    // type branch).
+    // The global row is tagged by an explicit `is_global` column
+    // (event_type strings can be anything, null included).
     val perDf = events.groupBy(col("event_type"))
       .agg(ThetaSketch.thetaSketch(col("event_id")).as("sk"),
         countDistinct(col("event_id")).as("exact_ids"))
+      .withColumn("is_global", lit(false))
     val globalDf = events
       .agg(countDistinct(col("event_id")).as("exact_ids"))
       .select(lit(null).cast("string").as("event_type"),
-        lit(null).cast("binary").as("sk"), col("exact_ids"))
-    val fetched = perDf.unionAll(globalDf)
-      .as[(String, Array[Byte], Long)]
-      .collect()
-    val per = fetched.filter(_._2 != null).sortBy(_._1)
-    val globalExact = fetched.find(_._2 == null).get._3
+        lit(null).cast("binary").as("sk"), col("exact_ids"),
+        lit(true).as("is_global"))
+    val (globals, perRows) = perDf.unionAll(globalDf)
+      .as[(String, Array[Byte], Long, Boolean)]
+      .collect().partition(_._4)
+    val per = perRows.map(r => (r._1, r._2, r._3)).sortBy(_._1)
+    val globalExact = globals.headOption.getOrElse(
+      throw new IllegalStateException(
+        "thetaBound: the global exact-count row is missing from the " +
+          "union result"))._3
     def ok(est: Double, exact: Long): Boolean =
       math.abs(est - exact) <= 0.05 * exact
     val rows = per.map { case (t, sk, ex) =>

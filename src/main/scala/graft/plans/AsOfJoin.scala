@@ -93,7 +93,7 @@ case class AsOfJoinExec(leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     (leftKeys ++ leftOrd).map(SortOrder(_, Ascending))
 
   /** The merge preserves the left side's rows and clustering, so
-    * forward it (the BroadcastRangeJoin/KeyedRangeJoin precedent) —
+    * forward it (the BroadcastIntervalJoinExec precedent) —
     * without this, SparkPlan's default UnknownPartitioning makes a
     * downstream same-key operator (e.g. the nearest composition's
     * second as-of) re-exchange the whole relation. */

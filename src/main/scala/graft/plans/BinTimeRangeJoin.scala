@@ -32,9 +32,11 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * rejected). The rewrite inserts its own equi-conjunct, so a second
   * fixed-point pass no longer matches (tag + equi guard).
   *
-  * This is the same rewrite [[graft.operators.EventsPipeline
-  * .intervalJoinBinned]] spells by hand; the rule makes the naive
-  * formulation scale without the caller knowing the trick. */
+  * This is the rewrite [[BinnedRangeFallback]] builds for the
+  * interval-join API with a data-derived width; the rule makes the
+  * naive SQL formulation scale without the caller knowing the trick.
+  * It runs only in sessions built with [[graft.functions
+  * .GraftExtensions]]. */
 object BinTimeRangeJoin extends Rule[LogicalPlan] {
   private val BINNED = TreeNodeTag[Boolean]("graft.binned.range.join")
 
@@ -51,12 +53,10 @@ object BinTimeRangeJoin extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Bucket start (micros rounded down to a multiple of w) — equality of
-    * bucket starts is equality of buckets, no division needed. */
-  private def bucketStart(ts: Expression, w: Long): Expression = {
-    val us = UnixMicros(ts)
-    Subtract(us, Pmod(us, Literal(w)))
-  }
+  /** Bucket start of a timestamp's micros ([[BinnedRangeFallback
+    * .bucketStart]], the definition the fallback uses too). */
+  private def bucketStart(ts: Expression, w: Long): Expression =
+    BinnedRangeFallback.bucketStart(UnixMicros(ts), w)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner, Some(cond), hint)

@@ -1,59 +1,60 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Pmod, Subtract}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Broadcast-ceiling guard + shuffle-plan fallback for the three
-  * driver-built range-join operators ([[RangeJoin]], [[KeyedRangeJoin]],
-  * [[OverlapJoin]]) — VERDICT r11 item 1.
+/** Broadcast-ceiling guard + shuffle-plan fallback for the driver-built
+  * interval join ([[IntervalJoin]]) — VERDICT r11 item 1.
   *
-  * The custom execs build their lo-sorted interval index ON THE DRIVER
-  * inside the BroadcastExchange (the HashedRelationBroadcastMode
-  * precedent — see [[RangeIndexSupport]]). That is the right plan while
-  * the build side is dimension-sized, but a build side that outgrows
-  * the driver heap / broadcast ceiling at 100× kills the exchange with
-  * an OOM or a broadcast-size error instead of degrading. This object
-  * is the escape hatch the APIs route to BY SIZE: when Catalyst's
-  * logical size estimate for the build side exceeds
+  * The exec builds its lo-sorted interval index ON THE DRIVER inside
+  * the BroadcastExchange (the HashedRelationBroadcastMode precedent —
+  * see [[RangeIndexSupport]]). That is the right plan while the build
+  * side is dimension-sized, but a build side that outgrows the driver
+  * heap / broadcast ceiling at 100× kills the exchange with an OOM or
+  * a broadcast-size error instead of degrading. This object is the
+  * escape hatch the API routes to BY SIZE: when Catalyst's logical size
+  * estimate for the build side exceeds
   * `spark.graft.rangeJoin.maxBuildBytes` (default 256 MB — comfortable
   * 3× index-copy headroom on a 4-8 GB driver, far under Spark's 8 GB
   * broadcast hard cap), the join is planned as the standard BINNED
-  * EQUI-JOIN instead: both sides get a W-wide bucket key (W = the
-  * build side's max interval width + 1, computed by one metadata-sized
-  * aggregate over the build side), the build intervals explode into
-  * the ≤ 2 buckets they can touch, bucket equality hash-partitions the
-  * pair space, and the original range predicate stays as the residual
-  * filter — the [[BinTimeRangeJoin]] rewrite generalized from the
-  * fixed-width time band to data-derived W. No driver index, no
-  * broadcast: the plan is shuffle-bound and scales with executors.
+  * EQUI-JOIN instead: both sides get a W-wide bucket key (W = the build
+  * side's max interval width + 1, computed by one metadata-sized
+  * aggregate over the build side), the build intervals explode into the
+  * ≤ 2 buckets they can touch, the probe intervals into the buckets
+  * they span (one for a point), bucket (and key) equality
+  * hash-partitions the pair space, and the original range predicate
+  * stays as the residual filter — the [[BinTimeRangeJoin]] rewrite
+  * generalized from the fixed-width time band to data-derived W. No
+  * driver index, no broadcast: the plan is shuffle-bound and scales
+  * with executors.
   *
-  * Exactness: with W > every build width, a build interval spans at
-  * most two buckets and a probe point lives in exactly one, so each
-  * qualifying pair meets in exactly one bucket — row-identical output
-  * (as a multiset) to the broadcast exec, pinned both sides of the
-  * threshold by RangeJoinSpec. The interval×interval (overlap) form
-  * dedups via the canonical-bucket condition `bucket(greatest(s, lo))`
-  * — a point inside both intervals' PHYSICAL spans whenever they
-  * overlap. Reversed intervals are handled per form to stay
-  * row-identical with the broadcast exec: for the containment forms a
-  * reversed BUILD interval (hi < lo) matches nothing under
-  * `x >= lo AND x <= hi`, so it is dropped pre-explosion; for the
-  * overlap form the predicate `lo <= e AND hi >= s` CAN match a
-  * reversed build interval (exactly when the probe spans the whole
-  * reversal: s <= hi < lo <= e), so reversed build rows are KEPT,
-  * binned over their physical span [min(lo,hi), max(lo,hi)], and their
-  * absolute width counts toward W; the canonical point greatest(s, lo)
-  * is then `lo` — inside both physical spans. A reversed PROBE
-  * interval (s > e) can only match a non-reversed build that spans the
-  * whole reversal (`lo <= e < s <= hi`); the canonical point is `s`,
-  * inside both spans (reversed×reversed cannot satisfy the predicate).
+  * Exactness: a point probe lives in exactly one bucket, so each
+  * qualifying pair meets once. An interval probe can share several
+  * buckets with a build interval, so the join keeps the pair only in
+  * the canonical bucket of `greatest(s, lo)` — a point inside both
+  * intervals' PHYSICAL spans whenever they overlap. Reversed
+  * intervals: a reversed build interval (hi < lo) matches `lo <= e AND
+  * hi >= s` exactly when the probe spans the whole reversal
+  * (s <= hi < lo <= e), so interval probes keep such rows, binned over
+  * their physical span [min(lo,hi), max(lo,hi)] with their absolute
+  * width counting toward W; the canonical point greatest(s, lo) is then
+  * `lo`, inside both spans. A point probe can never span a reversal, so
+  * point probes drop reversed build rows before the explosion, which
+  * keeps W to the joinable widths. A reversed PROBE interval (s > e)
+  * can only match a build that spans the whole reversal
+  * (`lo <= e < s <= hi`); the canonical point is `s`, inside both spans.
+  * The output is row-identical (as a multiset) to the broadcast exec,
+  * pinned both sides of the threshold by RangeJoinSpec and
+  * RangeJoinDifferentialSpec.
   *
   * Bucket arithmetic needs a long-valued bound domain
   * ([[supportedBoundType]]): integral types map through `cast(long)`,
   * timestamps through `unix_micros`. Other bound types keep the
-  * broadcast plan regardless of size — the APIs gate the size-based
-  * flip on `supportedBoundType` and only throw when the caller FORCES
+  * broadcast plan regardless of size — the API gates the size-based
+  * flip on `supportedBoundType` and only throws when the caller FORCES
   * the fallback on an unsupported type (pre-convert in that case). */
 private[graft] object BinnedRangeFallback {
   /** Size ceiling (bytes) for the driver-built broadcast range index;
@@ -73,7 +74,7 @@ private[graft] object BinnedRangeFallback {
   }
 
   /** Bound types the binned plan can bucket (long-valued domain). The
-    * broadcast execs order ANY comparable type (GenerateOrdering), so
+    * broadcast exec orders ANY comparable type (GenerateOrdering), so
     * unsupported-type builds keep the broadcast plan regardless of the
     * size estimate rather than failing plan construction — Catalyst
     * estimates RDD-backed builds at defaultSizeInBytes, which would
@@ -96,126 +97,53 @@ private[graft] object BinnedRangeFallback {
   }
 
   /** Bucket start: v rounded down to a multiple of w (pmod handles
-    * negatives — the BinTimeRangeJoin construction). */
-  private def bucketStart(v: Column, w: Long): Column =
-    v - pmod(v, lit(w))
-
-  /** Build-side max interval width + 1, via one metadata-sized
-    * aggregate job (the one extra action the fallback costs — the
-    * Databricks range-join bin size, derived instead of asked for).
-    * With `keepReversed` (overlap form) the width is the PHYSICAL span
-    * |hi − lo| and reversed intervals count; without it (containment
-    * forms) reversed intervals are excluded, matching their exclusion
-    * from the build explosion. Returns 1 for an empty build. */
-  private def maxWidthPlus1(build: DataFrame, lo: Column, hi: Column,
-      dt: DataType, keepReversed: Boolean): Long = {
-    val base = build.filter(lo.isNotNull && hi.isNotNull)
-    val joinable = if (keepReversed) base else base.filter(hi >= lo)
-    val row = joinable
-      .agg(max(abs(asLong(hi, dt) - asLong(lo, dt))).as("w"))
-      .head()
-    if (row.isNullAt(0)) 1L else math.max(1L, row.getLong(0) + 1L)
-  }
+    * negatives) — equality of bucket starts is equality of buckets, no
+    * division needed. The one definition behind both binned plans: this
+    * fallback and the [[BinTimeRangeJoin]] rule. */
+  def bucketStart(v: Expression, w: Long): Expression =
+    Subtract(v, Pmod(v, Literal(w)))
 
   private val BinP = "__graft_bin_p"
   private val BinB = "__graft_bin_b"
 
-  /** Build side renamed with `prefix` (the broadcast path's aliasing
-    * contract), filtered to joinable rows, exploded into the ≤ 2
-    * buckets each interval's PHYSICAL span touches. `keepReversed`
-    * (overlap form only) retains hi < lo rows — the overlap predicate
-    * can match them — binning over [min(lo,hi), max(lo,hi)]; the
-    * containment forms drop them (they match nothing there). */
-  private def binnedBuild(build: DataFrame, prefix: String,
-      loCol: String, hiCol: String, w: Long,
-      keepReversed: Boolean): DataFrame = {
+  /** Binned form of [[IntervalJoin.join]]: same arguments, same output
+    * columns, same rows. Costs one extra action, the build-side width
+    * aggregate (the Databricks range-join bin size, derived instead of
+    * asked for). */
+  def join(probe: DataFrame, build: DataFrame, probeLo: String,
+      probeHi: String, lo: String, hi: String, key: Option[(String, String)],
+      prefix: String, leftOuter: Boolean): DataFrame = {
+    val dt = build.schema(lo).dataType
     val renamed = build.select(
       build.columns.toIndexedSeq.map(c => col(c).as(prefix + c)): _*)
-    val lo = col(prefix + loCol)
-    val hi = col(prefix + hiCol)
-    val dt = renamed.schema(prefix + loCol).dataType
-    val base = renamed.filter(lo.isNotNull && hi.isNotNull)
-    val joinable = if (keepReversed) base else base.filter(hi >= lo)
-    val loL = asLong(lo, dt)
-    val hiL = asLong(hi, dt)
-    joinable.withColumn(BinB, explode(sequence(
-      bucketStart(least(loL, hiL), w), bucketStart(greatest(loL, hiL), w),
-      lit(w))))
-  }
-
-  private def outCols(probe: DataFrame, build: DataFrame,
-      prefix: String): Seq[Column] =
-    probe.columns.toIndexedSeq.map(col) ++
-      build.columns.toIndexedSeq.map(c => col(prefix + c))
-
-  /** Binned form of [[RangeJoin.broadcastRangeJoin]] (point-in-interval,
-    * inner). */
-  def rangeJoin(probe: DataFrame, build: DataFrame, probeCol: String,
-      loCol: String, hiCol: String, prefix: String): DataFrame = {
-    val dt = build.schema(loCol).dataType
-    val w = maxWidthPlus1(build, col(loCol), col(hiCol), dt,
-      keepReversed = false)
-    val b = binnedBuild(build, prefix, loCol, hiCol, w,
-      keepReversed = false)
-    val x = col(probeCol)
-    val p = probe.withColumn(BinP, bucketStart(asLong(x, dt), w))
-    p.join(b, col(BinP) === col(BinB) &&
-        x >= col(prefix + loCol) && x <= col(prefix + hiCol))
-      .select(outCols(probe, build, prefix): _*)
-  }
-
-  /** Binned form of [[KeyedRangeJoin.broadcastKeyedRangeJoin]] (key
-    * equality + containment; inner or LEFT OUTER). The probe side has
-    * exactly one bucket row, so the native left-outer join over the
-    * exploded build emits exactly one null-padded row per miss — the
-    * custom exec's SCD2 contract. */
-  def keyedRangeJoin(probe: DataFrame, build: DataFrame,
-      probeKeyCol: String, probeCol: String, keyCol: String,
-      loCol: String, hiCol: String, prefix: String,
-      leftOuter: Boolean): DataFrame = {
-    val dt = build.schema(loCol).dataType
-    val w = maxWidthPlus1(build, col(loCol), col(hiCol), dt,
-      keepReversed = false)
-    val b = binnedBuild(build, prefix, loCol, hiCol, w,
-      keepReversed = false)
-    val x = col(probeCol)
-    val p = probe.withColumn(BinP, bucketStart(asLong(x, dt), w))
-    val cond = col(BinP) === col(BinB) &&
-      col(probeKeyCol) === col(prefix + keyCol) &&
-      x >= col(prefix + loCol) && x <= col(prefix + hiCol)
+    val (bLo, bHi) = (col(prefix + lo), col(prefix + hi))
+    val (bLoL, bHiL) = (asLong(bLo, dt), asLong(bHi, dt))
+    val (s, e) = (col(probeLo), col(probeHi))
+    val (sL, eL) = (asLong(s, dt), asLong(e, dt))
+    val point = probeLo == probeHi
+    val nonNull = renamed.filter(bLo.isNotNull && bHi.isNotNull)
+    val joinable = if (point) nonNull.filter(bHi >= bLo) else nonNull
+    val wRow = joinable.agg(max(abs(bHiL - bLoL))).head()
+    val w = if (wRow.isNullAt(0)) 1L else wRow.getLong(0) + 1L
+    def bucket(v: Column): Column =
+      Shim.column(bucketStart(Shim.expression(v), w))
+    // every bucket start the physical span [min, max] of (a, b) touches
+    def span(a: Column, b: Column): Column =
+      sequence(bucket(least(a, b)), bucket(greatest(a, b)), lit(w))
+    val b = joinable.withColumn(BinB, explode(span(bLoL, bHiL)))
+    // a point probe lives in exactly one bucket (a null one for a null
+    // probe, which a left outer join pads once); an interval probe is
+    // exploded into every bucket it spans, and a pair that shares
+    // several buckets is kept only in the canonical one
+    val (p, canonical) =
+      if (point) (probe.withColumn(BinP, bucket(sL)), Nil)
+      else (probe.withColumn(BinP, explode(span(sL, eL))),
+        Seq(col(BinB) === bucket(greatest(sL, bLoL))))
+    val cond = (key.map { case (pk, bk) => col(pk) === col(prefix + bk) } ++
+      Seq(col(BinP) === col(BinB), bLo <= e, bHi >= s) ++ canonical)
+      .reduce(_ && _)
     p.join(b, cond, if (leftOuter) "left_outer" else "inner")
-      .select(outCols(probe, build, prefix): _*)
-  }
-
-  /** Binned form of [[OverlapJoin.broadcastOverlapJoin]]
-    * (interval×interval, inner). Both sides explode into the buckets
-    * their PHYSICAL spans cover (probe explosion factor = span / W
-    * + 1); reversed build intervals are kept — the inclusive overlap
-    * predicate matches them when the probe spans the reversal — and
-    * the canonical-bucket condition keeps each qualifying pair exactly
-    * once (see the object doc's case analysis). */
-  def overlapJoin(probe: DataFrame, build: DataFrame, probeLoCol: String,
-      probeHiCol: String, loCol: String, hiCol: String,
-      prefix: String): DataFrame = {
-    val dt = build.schema(loCol).dataType
-    val w = maxWidthPlus1(build, col(loCol), col(hiCol), dt,
-      keepReversed = true)
-    val b = binnedBuild(build, prefix, loCol, hiCol, w,
-      keepReversed = true)
-    val s = col(probeLoCol)
-    val e = col(probeHiCol)
-    val sL = asLong(s, dt)
-    val eL = asLong(e, dt)
-    // least/greatest keep `sequence` monotone for reversed probes
-    val p = probe
-      .filter(s.isNotNull && e.isNotNull)
-      .withColumn(BinP, explode(sequence(
-        least(bucketStart(sL, w), bucketStart(eL, w)),
-        greatest(bucketStart(sL, w), bucketStart(eL, w)), lit(w))))
-    p.join(b, col(BinP) === col(BinB) &&
-        col(prefix + loCol) <= e && col(prefix + hiCol) >= s &&
-        col(BinB) === bucketStart(
-          greatest(sL, asLong(col(prefix + loCol), dt)), w))
-      .select(outCols(probe, build, prefix): _*)
+      .select(probe.columns.toIndexedSeq.map(col) ++
+        build.columns.toIndexedSeq.map(c => col(prefix + c)): _*)
   }
 }

@@ -5,24 +5,20 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.physical.BroadcastMode
 
-/** Machinery shared by the three broadcast range-join execs
-  * ([[BroadcastRangeJoinExec]] containment, [[BroadcastOverlapJoinExec]]
-  * overlap, [[KeyedBroadcastRangeJoinExec]] keyed) — ONE copy of the
-  * index build, the probe-walk correctness logic, and the custom
-  * broadcast modes (r9 review: the first keyed cut duplicated the
-  * build/walk line-for-line).
+/** The lo-sorted interval index behind [[BroadcastIntervalJoinExec]]:
+  * the index build, the probe walk, and the broadcast mode that builds
+  * the index once on the driver.
   *
-  * Floating-point caveat (applies to all three execs, documented here
-  * once): bounds comparisons use a generated ASCENDING ordering, under
-  * which -0.0 < 0.0 strictly (java.lang.Double.compare semantics),
-  * while Spark's native BETWEEN codegen treats them equal; a probe of
-  * 0.0 against a bound of -0.0 (and vice versa) can therefore diverge
-  * from the BroadcastNestedLoopJoin form on FloatType/DoubleType
-  * ranges. Keys are stricter still — the keyed lookup is UnsafeRow
-  * byte-equality, where -0.0 ≠ 0.0 and NaN payloads differ, so
-  * floating-point KEY types are rejected outright at plan construction
-  * (the native equi-join would normalize them via
-  * NormalizeFloatingNumbers). */
+  * Floating-point bounds: every index sort and probe comparison uses
+  * the generated ascending [[ordering]], whose code compares doubles
+  * and floats through `SQLOrderingUtil` — -0.0 equals 0.0 and NaN
+  * sorts above every value, which is exactly how the native `<=` and
+  * `>=` compare. Double ranges therefore match the nested-loop
+  * BETWEEN form (RangeJoinDifferentialSpec pins -0.0, 0.0 and NaN
+  * bounds and probes). Keys are another matter: the keyed lookup is
+  * UnsafeRow byte equality, under which -0.0 ≠ 0.0 and NaN payloads
+  * differ while the native equi-join normalizes them, so
+  * [[IntervalJoin.join]] rejects floating-point key types. */
 private[graft] object RangeIndexSupport {
   import org.apache.spark.sql.execution.graftshim.DriverBuiltRelation
 
@@ -32,9 +28,11 @@ private[graft] object RangeIndexSupport {
     * Java-serialize inside a broadcast. */
   final case class RangeIndex(lo: Array[InternalRow],
       hi: Array[InternalRow], rows: Array[InternalRow],
-      maxHi: Array[InternalRow]) {
-    def isEmpty: Boolean = lo.isEmpty
-  }
+      maxHi: Array[InternalRow])
+
+  /** The broadcast payload: equi-key → its group. An unkeyed join is a
+    * single group under the empty (zero-column) key. */
+  type Groups = java.util.HashMap[UnsafeRow, RangeIndex]
 
   /** Sort collected (lo, hi, row) interval copies by lo and attach the
     * running-max-hi array. */
@@ -53,25 +51,17 @@ private[graft] object RangeIndexSupport {
     RangeIndex(ivs.map(_._1), ivs.map(_._2), ivs.map(_._3), maxHi)
   }
 
-  /** Probe one group with a point x: binary-search the last interval
-    * with lo ≤ x, then walk left emitting containing intervals,
-    * early-exiting when the running-max-hi drops below x. Emits
-    * joined+projected output rows. The caller passes an already-copied
-    * left row. Containment is the s = e = x special case of overlap. */
-  def probe(g: RangeIndex, cmp: BaseOrdering, x: UnsafeRow,
-      lCopy: InternalRow, joined: JoinedRow, outProj: UnsafeProjection)
-      : Iterator[InternalRow] =
-    probeOverlap(g, cmp, x, x, lCopy, joined, outProj)
-
-  /** Probe one group with an INTERVAL [s, e]: emit every build interval
-    * [lo, hi] with lo ≤ e AND hi ≥ s (inclusive overlap — touching
-    * endpoints count). Same walk as the point probe: binary-search the
-    * last lo ≤ e, walk left while the running-max-hi can still reach s.
-    * A build interval strictly inside [s, e], one containing it, and
+  /** Probe one group with [s, e]: emit every build interval [lo, hi]
+    * with lo ≤ e AND hi ≥ s (inclusive overlap — touching endpoints
+    * count; a point probe is s = e). Binary-search the last lo ≤ e,
+    * then walk left while the running-max-hi can still reach s. A
+    * build interval strictly inside [s, e], one containing it, and
     * partial overlaps on either side all satisfy the two comparisons —
-    * one walk covers every overlap taxonomy case. */
-  def probeOverlap(g: RangeIndex, cmp: BaseOrdering, s: UnsafeRow,
-      e: UnsafeRow, lCopy: InternalRow, joined: JoinedRow,
+    * one walk covers every overlap case, in O(log G + matches) for
+    * non- or moderately-overlapping intervals. The caller passes an
+    * already-copied left row. */
+  def probe(g: RangeIndex, cmp: BaseOrdering, s: InternalRow,
+      e: InternalRow, lCopy: InternalRow, joined: JoinedRow,
       outProj: UnsafeProjection): Iterator[InternalRow] = {
     var a = 0; var b = g.lo.length - 1; var ub = -1
     while (a <= b) {
@@ -109,91 +99,54 @@ private[graft] object RangeIndexSupport {
     GenerateOrdering.generate(vAttr.map(SortOrder(_, Ascending)), vAttr)
   }
 
-  private def sizeOf(rows: Iterable[InternalRow]): Long =
-    rows.iterator.map {
-      case u: UnsafeRow => u.getSizeInBytes.toLong
-      case _ => 64L
-    }.sum
-
   /** Custom [[BroadcastMode]] (the HashedRelationBroadcastMode
-    * precedent, closing ADVICE r8 the way it suggested): the exchange
-    * runs `transform` ONCE on the driver, so the O(M log M) sort and
-    * the per-interval row copies happen exactly once per query — not
-    * once per task (the r8 state) or once per executor (the r9 interim
-    * SoftReference cache, now deleted) — and what ships over the wire
-    * is the READY index, never the raw row array. Cross-query reuse is
-    * Spark's own broadcast-exchange reuse (ReusedExchange), which this
-    * mode joins for free via case-class equality of its canonicalized
-    * form. */
-  case class RangeIndexBroadcastMode(loExpr: Expression, hiExpr: Expression,
-      output: Seq[Attribute]) extends BroadcastMode {
-    override def transform(rows: Array[InternalRow]): AnyRef =
-      transform(rows.iterator, Some(rows.length.toLong))
-    override def transform(rows: Iterator[InternalRow],
-        sizeHint: Option[Long]): AnyRef = {
-      val loProj = UnsafeProjection.create(loExpr :: Nil, output)
-      val hiProj = UnsafeProjection.create(hiExpr :: Nil, output)
-      val buf = new scala.collection.mutable.ArrayBuffer[
-        (InternalRow, InternalRow, InternalRow)]()
-      rows.foreach { row =>
-        val lo = loProj(row)
-        val hi = hiProj(row)
-        if (!lo.isNullAt(0) && !hi.isNullAt(0))
-          buf += ((lo.copy(), hi.copy(), row.copy()))
-      }
-      val idx = buildIndex(buf.toArray, ordering(loExpr.dataType))
-      new DriverBuiltRelation(idx,
-        sizeOf(idx.rows) + sizeOf(idx.lo) + sizeOf(idx.hi))
-    }
-    override def canonicalized: BroadcastMode =
-      copy(loExpr = loExpr.canonicalized, hiExpr = hiExpr.canonicalized,
-        output = Seq.empty)
-  }
-
-  /** Keyed variant: hash-partition by key, each group lo-sorted with
-    * its running-max-hi. Null keys and null bounds are dropped at
-    * build (they can match nothing under the join's SQL semantics). */
-  case class KeyedRangeIndexBroadcastMode(keyExpr: Expression,
-      loExpr: Expression, hiExpr: Expression, output: Seq[Attribute])
+    * precedent): the exchange runs `transform` ONCE on the driver, so
+    * the O(M log M) sort and the per-interval row copies happen exactly
+    * once per query — not once per task or per executor — and what
+    * ships over the wire is the READY [[Groups]] map, never the raw row
+    * array. Rows with a null key or a null bound are dropped at build:
+    * they can match nothing under the join's SQL semantics.
+    * Cross-query reuse is Spark's own broadcast-exchange reuse
+    * (ReusedExchange), which this mode joins via case-class equality of
+    * its canonicalized form. */
+  case class IntervalIndexBroadcastMode(key: Option[Expression],
+      lo: Expression, hi: Expression, output: Seq[Attribute])
       extends BroadcastMode {
     override def transform(rows: Array[InternalRow]): AnyRef =
       transform(rows.iterator, Some(rows.length.toLong))
     override def transform(rows: Iterator[InternalRow],
         sizeHint: Option[Long]): AnyRef = {
-      val keyProj = UnsafeProjection.create(keyExpr :: Nil, output)
-      val loProj = UnsafeProjection.create(loExpr :: Nil, output)
-      val hiProj = UnsafeProjection.create(hiExpr :: Nil, output)
+      val keyProj = UnsafeProjection.create(key.toSeq, output)
+      val loProj = UnsafeProjection.create(lo :: Nil, output)
+      val hiProj = UnsafeProjection.create(hi :: Nil, output)
       val byKey = new java.util.HashMap[UnsafeRow,
         scala.collection.mutable.ArrayBuffer[
           (InternalRow, InternalRow, InternalRow)]]()
       var size = 0L
       rows.foreach { row =>
         val k = keyProj(row)
-        val lo = loProj(row)
-        val hi = hiProj(row)
-        if (!k.isNullAt(0) && !lo.isNullAt(0) && !hi.isNullAt(0)) {
+        val l = loProj(row)
+        val h = hiProj(row)
+        if (!k.anyNull && !l.isNullAt(0) && !h.isNullAt(0)) {
           var buf = byKey.get(k)
           if (buf == null) {
             buf = new scala.collection.mutable.ArrayBuffer()
             byKey.put(k.copy(), buf)
           }
-          buf += ((lo.copy(), hi.copy(), row.copy()))
-          size += (row match {
-            case u: UnsafeRow => u.getSizeInBytes.toLong + 16L
-            case _ => 80L
+          buf += ((l.copy(), h.copy(), row.copy()))
+          size += l.getSizeInBytes + h.getSizeInBytes + (row match {
+            case u: UnsafeRow => u.getSizeInBytes.toLong
+            case _ => 64L
           })
         }
       }
-      val cmp = ordering(loExpr.dataType)
-      val out = new java.util.HashMap[UnsafeRow, RangeIndex](
-        byKey.size * 2)
-      byKey.forEach { (k, buf) =>
-        out.put(k, buildIndex(buf.toArray, cmp))
-      }
-      new DriverBuiltRelation(out, size)
+      val cmp = ordering(lo.dataType)
+      val groups = new Groups(byKey.size * 2)
+      byKey.forEach((k, buf) => groups.put(k, buildIndex(buf.toArray, cmp)))
+      new DriverBuiltRelation(groups, size)
     }
     override def canonicalized: BroadcastMode =
-      copy(keyExpr = keyExpr.canonicalized, loExpr = loExpr.canonicalized,
-        hiExpr = hiExpr.canonicalized, output = Seq.empty)
+      copy(key = key.map(_.canonicalized), lo = lo.canonicalized,
+        hi = hi.canonicalized, output = Seq.empty)
   }
 }

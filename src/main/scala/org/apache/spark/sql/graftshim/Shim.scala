@@ -23,4 +23,9 @@ object Shim {
   /** Wrap a logical plan back into a DataFrame (private[sql] ofRows). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every event posted so far has reached every listener
+    * (private[spark] listener bus), so listener counts are complete. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

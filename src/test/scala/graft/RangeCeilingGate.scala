@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{BinnedRangeFallback, KeyedRangeJoin, OverlapJoin, RangeJoin}
+import graft.plans.{BinnedRangeFallback, IntervalJoin}
 
 /** Real-stats proof of the broadcast-ceiling auto-flip (VERDICT r12
   * item 5): RangeJoinSpec certifies the binned fallback by FORCING it
@@ -15,7 +15,7 @@ import graft.plans.{BinnedRangeFallback, KeyedRangeJoin, OverlapJoin, RangeJoin}
   * `overCeiling(build)` branch fires on real statistics — the path a
   * 100×-grown dimension takes in production, with no knob touched.
   *
-  * For each of the three range-join APIs it then pins:
+  * For each of the three interval-join forms it then pins:
   *   1. the DEFAULT-ceiling plan contains NO custom broadcast exec
   *      (the binned shuffle plan was chosen automatically), and
   *   2. a ceiling-raised construction of the SAME query plans the
@@ -110,22 +110,19 @@ object RangeCeilingGate {
     // string match, not tree exists(): AdaptiveSparkPlanExec does not
     // expose its current physical plan as children, so a tree
     // traversal is blind to anything under the AQE root
-    def hasCustomExec(df: DataFrame): Boolean = {
-      val s = df.queryExecution.executedPlan.toString
-      s.contains("BroadcastRangeJoin") ||
-        s.contains("BroadcastOverlapJoin") ||
-        s.contains("KeyedBroadcastRangeJoin")
-    }
+    def hasCustomExec(df: DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString
+        .contains("BroadcastIntervalJoin")
 
     val cases = Seq[(String, () => DataFrame)](
-      "range" -> (() => RangeJoin.broadcastRangeJoin(
-        points, dim, "x", "lo", "hi")
+      "range" -> (() => IntervalJoin.join(
+        points, dim, "x", "x", "lo", "hi")
         .select(col("x"), col("r_band_id"), col("r_payload"))),
-      "overlap" -> (() => OverlapJoin.broadcastOverlapJoin(
+      "overlap" -> (() => IntervalJoin.join(
         intervals, dim, "s", "e", "lo", "hi")
         .select(col("s"), col("e"), col("r_band_id"), col("r_payload"))),
-      "keyed" -> (() => KeyedRangeJoin.broadcastKeyedRangeJoin(
-        keyedPoints, keyedDim, "kx", "x", "kcol", "lo", "hi")
+      "keyed" -> (() => IntervalJoin.join(
+        keyedPoints, keyedDim, "x", "x", "lo", "hi", Some("kx" -> "kcol"))
         .select(col("x"), col("kx"), col("r_band_id"), col("r_payload"))))
 
     val results = cases.map { case (name, mk) =>

@@ -22,6 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * build side, on the size-gated plan and, for long and timestamp
   * bounds, on the forced binned plan as well. */
 class RangeJoinDifferentialSpec extends AnyFunSuite {
+  import RangeJoinDifferentialSpec.Domain
   private lazy val spark = TestSpark.spark
 
   private val seed = rng.Seed(20261017L)
@@ -37,11 +38,6 @@ class RangeJoinDifferentialSpec extends AnyFunSuite {
 
   private def orNull[A](g: Gen[A]): Gen[Any] =
     Gen.frequency(1 -> Gen.const(null), 6 -> g)
-
-  /** A bound domain: its Spark type, a generator of (start, end) pairs
-    * (reversed pairs included), and whether the binned plan applies. */
-  private final case class Domain(name: String, dt: DataType,
-      probeIv: Gen[(Any, Any)], buildIv: Gen[(Any, Any)], binnable: Boolean)
 
   /** Long intervals: narrow build intervals and wider probes, so an
     * interval probe spans several buckets of the binned plan. */
@@ -132,8 +128,8 @@ class RangeJoinDifferentialSpec extends AnyFunSuite {
   test("point probe equals the nested-loop BETWEEN join") {
     everyCase(salt = 1L) { (d, force, build) =>
       val probe = probeOf(d, 1L)
-      (rows(plans.RangeJoin.broadcastRangeJoin(probe, build, "s", "lo",
-          "hi", forceBinned = force)),
+      (rows(plans.IntervalJoin.join(probe, build, "s", "s", "lo", "hi",
+          forceBinned = force)),
         rows(native(probe, build, "inner")(r =>
           col("s") >= r("lo") && col("s") <= r("hi"))))
     }
@@ -142,8 +138,8 @@ class RangeJoinDifferentialSpec extends AnyFunSuite {
   test("interval probe equals the nested-loop overlap join") {
     everyCase(salt = 2L) { (d, force, build) =>
       val probe = probeOf(d, 2L)
-      (rows(plans.OverlapJoin.broadcastOverlapJoin(probe, build, "s", "e",
-          "lo", "hi", forceBinned = force)),
+      (rows(plans.IntervalJoin.join(probe, build, "s", "e", "lo", "hi",
+          forceBinned = force)),
         rows(native(probe, build, "inner")(r =>
           r("lo") <= col("e") && r("hi") >= col("s"))))
     }
@@ -154,12 +150,18 @@ class RangeJoinDifferentialSpec extends AnyFunSuite {
         "predicate in the join condition") {
       everyCase(salt = if (outer) 4L else 3L) { (d, force, build) =>
         val probe = probeOf(d, 3L)
-        (rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(probe, build,
-            "k", "s", "k", "lo", "hi", leftOuter = outer,
-            forceBinned = force)),
+        (rows(plans.IntervalJoin.join(probe, build, "s", "s", "lo", "hi",
+            Some("k" -> "k"), leftOuter = outer, forceBinned = force)),
           rows(native(probe, build, jt)(r => col("k") === r("k") &&
             col("s") >= r("lo") && col("s") <= r("hi"))))
       }
     }
   }
+}
+
+object RangeJoinDifferentialSpec {
+  /** A bound domain: its Spark type, a generator of (start, end) pairs
+    * (reversed pairs included), and whether the binned plan applies. */
+  final case class Domain(name: String, dt: DataType,
+      probeIv: Gen[(Any, Any)], buildIv: Gen[(Any, Any)], binnable: Boolean)
 }

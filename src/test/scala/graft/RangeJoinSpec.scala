@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The custom broadcast range-join operator (plans/BroadcastRangeJoin):
+/** The custom broadcast interval-join operator (plans/IntervalJoin):
   * semantics pinned against the BroadcastNestedLoopJoin form Spark
   * would otherwise plan, plus the operator-specific edges (boundary
   * inclusivity, multi-match, nulls, empty build) and the plan shape. */
@@ -28,8 +28,8 @@ class RangeJoinSpec extends AnyFunSuite {
       .select((lit(1200) + col("id")).as("band_id"),
         (col("anchor") - (col("id") + 1) * lit(h12) + 1).as("lo"),
         (col("anchor") - col("id") * lit(h12)).as("hi"))
-    val custom = plans.RangeJoin
-      .broadcastRangeJoin(events, bands, "x", "lo", "hi")
+    val custom = plans.IntervalJoin
+      .join(events, bands, "x", "x", "lo", "hi")
       .select(col("event_id"), col("r_band_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val bnlj = events.join(broadcast(bands),
@@ -41,9 +41,9 @@ class RangeJoinSpec extends AnyFunSuite {
 
   test("boundary inclusivity, multi-match, and miss cases") {
     val build = intervals(Seq((1L, 10L, 20L), (2L, 15L, 30L), (3L, 40L, 40L)))
-    val out = plans.RangeJoin
-      .broadcastRangeJoin(probes(Seq(10L, 20L, 17L, 35L, 40L, 41L)),
-        build, "x", "lo", "hi")
+    val out = plans.IntervalJoin
+      .join(probes(Seq(10L, 20L, 17L, 35L, 40L, 41L)),
+        build, "x", "x", "lo", "hi")
       .select(col("x"), col("r_band_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(out == Seq(
@@ -58,31 +58,31 @@ class RangeJoinSpec extends AnyFunSuite {
     val sq = spark; import sq.implicits._
     val build = Seq((1L, Some(10L), Some(20L)), (2L, None, Some(30L)),
       (3L, Some(5L), None)).toDF("band_id", "lo", "hi")
-    val out = plans.RangeJoin
-      .broadcastRangeJoin(probes(Seq(15L, null)), build, "x", "lo", "hi")
+    val out = plans.IntervalJoin
+      .join(probes(Seq(15L, null)), build, "x", "x", "lo", "hi")
       .collect()
     assert(out.length == 1)
     assert(out(0).getAs[Long]("r_band_id") == 1L)
   }
 
   test("empty build side yields an empty inner join") {
-    val out = plans.RangeJoin
-      .broadcastRangeJoin(probes(Seq(1L, 2L)),
-        intervals(Seq.empty), "x", "lo", "hi")
+    val out = plans.IntervalJoin
+      .join(probes(Seq(1L, 2L)),
+        intervals(Seq.empty), "x", "x", "lo", "hi")
     assert(out.count() == 0)
   }
 
   test("plan shape: custom exec + broadcast exchange, no BNLJ") {
-    val plan = plans.RangeJoin
-      .broadcastRangeJoin(probes(Seq(1L)),
-        intervals(Seq((1L, 0L, 5L))), "x", "lo", "hi")
+    val plan = plans.IntervalJoin
+      .join(probes(Seq(1L)),
+        intervals(Seq((1L, 0L, 5L))), "x", "x", "lo", "hi")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastRangeJoin"), plan.take(800))
+    assert(plan.contains("BroadcastIntervalJoin"), plan.take(800))
     assert(plan.contains("BroadcastExchange"), plan.take(800))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
   }
 
-  // ---- keyed variant (plans/KeyedRangeJoin): key equality + range ----
+  // ---- keyed form: key equality + range ----
 
   private def keyedIntervals(rows: Seq[(String, Long, Long, Long)]) = {
     val sq = spark; import sq.implicits._
@@ -133,11 +133,11 @@ class RangeJoinSpec extends AnyFunSuite {
       ("b", 2L, Some(10L), Some(20L)),
       (null.asInstanceOf[String], 3L, Some(0L), Some(100L)))
       .toDF("k", "band_id", "lo", "hi")
-    val out = plans.KeyedRangeJoin
-      .broadcastKeyedRangeJoin(
+    val out = plans.IntervalJoin
+      .join(
         keyedProbes(Seq(("a", 15L), ("b", 15L), ("c", 15L), ("a", 25L),
           (null, 15L), ("a", null))),
-        build, "pk", "x", "k", "lo", "hi")
+        build, "x", "x", "lo", "hi", Some("pk" -> "k"))
       .select(col("pk"), col("x"), col("r_band_id"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
@@ -153,11 +153,11 @@ class RangeJoinSpec extends AnyFunSuite {
     val build = keyedIntervals(Seq(
       ("a", 1L, 10L, 20L), ("a", 2L, 15L, 30L), ("a", 3L, 40L, 40L),
       ("b", 9L, 0L, 100L)))
-    val out = plans.KeyedRangeJoin
-      .broadcastKeyedRangeJoin(
+    val out = plans.IntervalJoin
+      .join(
         keyedProbes(Seq(("a", 10L), ("a", 17L), ("a", 20L), ("a", 40L),
           ("a", 35L))),
-        build, "pk", "x", "k", "lo", "hi")
+        build, "x", "x", "lo", "hi", Some("pk" -> "k"))
       .select(col("x"), col("r_band_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(out == Seq((10L, 1L), (17L, 1L), (17L, 2L), (20L, 1L),
@@ -176,9 +176,9 @@ class RangeJoinSpec extends AnyFunSuite {
       ("c", 5L),              // no key group -> 1 null row
       (null, 5L), ("a", null) // null key / null value -> 1 null row each
     ))
-    val out = plans.KeyedRangeJoin
-      .broadcastKeyedRangeJoin(probesDf, build,
-        "pk", "x", "k", "lo", "hi", leftOuter = true)
+    val out = plans.IntervalJoin
+      .join(probesDf, build,
+        "x", "x", "lo", "hi", Some("pk" -> "k"), leftOuter = true)
       .select(col("pid"), col("r_band_id"))
       .collect().map(r =>
         (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
@@ -220,21 +220,22 @@ class RangeJoinSpec extends AnyFunSuite {
   }
 
   test("keyed: empty build and plan shape") {
-    val empty = plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
+    val empty = plans.IntervalJoin.join(
       keyedProbes(Seq(("a", 1L))), keyedIntervals(Seq.empty),
-      "pk", "x", "k", "lo", "hi")
+      "x", "x", "lo", "hi", Some("pk" -> "k"))
     assert(empty.count() == 0)
-    val plan = plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
+    val plan = plans.IntervalJoin.join(
       keyedProbes(Seq(("a", 1L))),
-      keyedIntervals(Seq(("a", 1L, 0L, 5L))), "pk", "x", "k", "lo", "hi")
+      keyedIntervals(Seq(("a", 1L, 0L, 5L))), "x", "x", "lo", "hi",
+      Some("pk" -> "k"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("KeyedBroadcastRangeJoin"), plan.take(800))
+    assert(plan.contains("BroadcastIntervalJoin"), plan.take(800))
     assert(plan.contains("BroadcastExchange"), plan.take(800))
     assert(!plan.contains("BroadcastHashJoin"), plan.take(800))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
   }
 
-  // ---- interval-OVERLAP variant (plans/OverlapJoin) ----
+  // ---- interval-OVERLAP form: an interval probe ----
 
   private def ivProbes(xs: Seq[(java.lang.Long, java.lang.Long)]) = {
     val sq = spark; import sq.implicits._
@@ -274,7 +275,7 @@ class RangeJoinSpec extends AnyFunSuite {
   test("overlap: full taxonomy — touching endpoints, containment both " +
       "directions, partial overlaps, disjoint, reversed, nulls") {
     val build = intervals(Seq((1L, 10L, 20L)))
-    val out = plans.OverlapJoin.broadcastOverlapJoin(
+    val out = plans.IntervalJoin.join(
       ivProbes(Seq(
         (0L, 5L),     // disjoint left (hi 5 < lo 10)
         (5L, 10L),    // touches at lo -> overlap
@@ -296,7 +297,7 @@ class RangeJoinSpec extends AnyFunSuite {
     // predicate lo <= e AND hi >= s with s=25, e=15 against [0, 100]:
     // 0 <= 15 && 100 >= 25 -> MATCHES (mechanical SQL semantics, same
     // as the BNLJ form — pinned so nobody "fixes" it to interval logic)
-    val out = plans.OverlapJoin.broadcastOverlapJoin(
+    val out = plans.IntervalJoin.join(
       ivProbes(Seq((25L, 15L))), intervals(Seq((7L, 0L, 100L))),
       "s", "e", "lo", "hi")
       .select(col("r_band_id")).collect().map(_.getLong(0)).toSeq
@@ -305,11 +306,11 @@ class RangeJoinSpec extends AnyFunSuite {
 
   test("overlap: multi-match across adjacent windows and empty build") {
     val build = intervals(Seq((1L, 0L, 9L), (2L, 10L, 19L), (3L, 20L, 29L)))
-    val out = plans.OverlapJoin.broadcastOverlapJoin(
+    val out = plans.IntervalJoin.join(
       ivProbes(Seq((5L, 25L))), build, "s", "e", "lo", "hi")
       .select(col("r_band_id")).collect().map(_.getLong(0)).sorted.toSeq
     assert(out == Seq(1L, 2L, 3L))
-    val empty = plans.OverlapJoin.broadcastOverlapJoin(
+    val empty = plans.IntervalJoin.join(
       ivProbes(Seq((1L, 2L))), intervals(Seq.empty), "s", "e", "lo", "hi")
     assert(empty.count() == 0)
   }
@@ -322,8 +323,8 @@ class RangeJoinSpec extends AnyFunSuite {
       .toDF("band_id", "lo", "hi")
     val plan = build.queryExecution.executedPlan
     val attrs = plan.output
-    val mode = plans.RangeIndexSupport.RangeIndexBroadcastMode(
-      attrs(1), attrs(2), attrs)
+    val mode = plans.RangeIndexSupport.IntervalIndexBroadcastMode(
+      None, attrs(1), attrs(2), attrs)
     val rel = mode.transform(
       build.queryExecution.executedPlan.executeCollect()
         .map(_.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
@@ -338,7 +339,7 @@ class RangeJoinSpec extends AnyFunSuite {
       .readObject().asInstanceOf[
         org.apache.spark.sql.execution.graftshim.DriverBuiltRelation]
     val idx = back.payload.asInstanceOf[
-      graft.plans.RangeIndexSupport.RangeIndex]
+      graft.plans.RangeIndexSupport.Groups].values.iterator.next()
     // the deserialized index must reproduce the probe semantics: x=17
     // hits bands 1 and 2, x=35 hits nothing, x=40 hits band 3
     import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
@@ -354,7 +355,7 @@ class RangeJoinSpec extends AnyFunSuite {
         Seq(LongType, LongType, LongType, LongType).toArray[
           org.apache.spark.sql.types.DataType])
       graft.plans.RangeIndexSupport
-        .probe(idx, cmp, probeRow, probeRow, joined, outProj)
+        .probe(idx, cmp, probeRow, probeRow, probeRow, joined, outProj)
         .map(_.getLong(1)).toSeq.sorted
     }
     assert(hits(17L) == Seq(1L, 2L))
@@ -366,12 +367,12 @@ class RangeJoinSpec extends AnyFunSuite {
     val sq = spark; import sq.implicits._
     val build = Seq((1L, Some(0L), Some(100L)), (2L, None, Some(100L)),
       (3L, Some(0L), None)).toDF("band_id", "lo", "hi")
-    val df = plans.OverlapJoin.broadcastOverlapJoin(
+    val df = plans.IntervalJoin.join(
       ivProbes(Seq((5L, 10L))), build, "s", "e", "lo", "hi")
     assert(df.select(col("r_band_id")).collect().map(_.getLong(0)).toSeq
       == Seq(1L))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastOverlapJoin"), plan.take(800))
+    assert(plan.contains("BroadcastIntervalJoin"), plan.take(800))
     assert(plan.contains("BroadcastExchange"), plan.take(800))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
   }
@@ -400,11 +401,11 @@ class RangeJoinSpec extends AnyFunSuite {
       (3L, Some(5L), None)).toDF("band_id", "lo", "hi")
     val ps = probes(Seq(10L, 20L, 17L, 35L, 40L, 41L, null))
     def run() = Seq(
-      rows(plans.RangeJoin.broadcastRangeJoin(ps, build, "x", "lo", "hi")),
-      rows(plans.RangeJoin
-        .broadcastRangeJoin(ps, nullBuild, "x", "lo", "hi")),
-      rows(plans.RangeJoin
-        .broadcastRangeJoin(ps, intervals(Seq.empty), "x", "lo", "hi")))
+      rows(plans.IntervalJoin.join(ps, build, "x", "x", "lo", "hi")),
+      rows(plans.IntervalJoin
+        .join(ps, nullBuild, "x", "x", "lo", "hi")),
+      rows(plans.IntervalJoin
+        .join(ps, intervals(Seq.empty), "x", "x", "lo", "hi")))
     val broadcastForm = run()
     val binnedForm = forcedFallback(run())
     assert(binnedForm == broadcastForm)
@@ -418,12 +419,14 @@ class RangeJoinSpec extends AnyFunSuite {
     val ps = keyedProbes(Seq(("a", 17L), ("a", 99L), ("c", 5L),
       (null, 5L), ("a", null), ("b", 50L)))
     def run() = Seq(
-      rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, build, "pk", "x", "k", "lo", "hi")),
-      rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, build, "pk", "x", "k", "lo", "hi", leftOuter = true)),
-      rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, keyedIntervals(Seq.empty), "pk", "x", "k", "lo", "hi",
+      rows(plans.IntervalJoin.join(
+        ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"))),
+      rows(plans.IntervalJoin.join(
+        ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"),
+        leftOuter = true)),
+      rows(plans.IntervalJoin.join(
+        ps, keyedIntervals(Seq.empty), "x", "x", "lo", "hi",
+        Some("pk" -> "k"),
         leftOuter = true)))
     val broadcastForm = run()
     val binnedForm = forcedFallback(run())
@@ -440,11 +443,11 @@ class RangeJoinSpec extends AnyFunSuite {
       (5L, 25L), (18L, 25L), (20L, 30L), (21L, 30L), (25L, 15L),
       (null, 15L), (15L, null)))
     def run() = Seq(
-      rows(plans.OverlapJoin
-        .broadcastOverlapJoin(ps, build, "s", "e", "lo", "hi")),
-      rows(plans.OverlapJoin
-        .broadcastOverlapJoin(ps, wide, "s", "e", "lo", "hi")),
-      rows(plans.OverlapJoin.broadcastOverlapJoin(
+      rows(plans.IntervalJoin
+        .join(ps, build, "s", "e", "lo", "hi")),
+      rows(plans.IntervalJoin
+        .join(ps, wide, "s", "e", "lo", "hi")),
+      rows(plans.IntervalJoin.join(
         ps, intervals(Seq.empty), "s", "e", "lo", "hi")))
     val broadcastForm = run()
     val binnedForm = forcedFallback(run())
@@ -470,19 +473,19 @@ class RangeJoinSpec extends AnyFunSuite {
   test("ceiling gate: the fallback plans an equi-join — no driver-built " +
       "index, no BroadcastNestedLoopJoin") {
     val plan = forcedFallback {
-      plans.RangeJoin.broadcastRangeJoin(probes(Seq(1L)),
-        intervals(Seq((1L, 0L, 5L))), "x", "lo", "hi")
+      plans.IntervalJoin.join(probes(Seq(1L)),
+        intervals(Seq((1L, 0L, 5L))), "x", "x", "lo", "hi")
         .queryExecution.executedPlan.toString
     }
-    assert(!plan.contains("BroadcastRangeJoin"), plan.take(800))
+    assert(!plan.contains("BroadcastIntervalJoin"), plan.take(800))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
     assert(plan.contains("Join"), plan.take(800))
     // under the default ceiling the dimension-sized build still takes
     // the index plan
-    val normal = plans.RangeJoin.broadcastRangeJoin(probes(Seq(1L)),
-      intervals(Seq((1L, 0L, 5L))), "x", "lo", "hi")
+    val normal = plans.IntervalJoin.join(probes(Seq(1L)),
+      intervals(Seq((1L, 0L, 5L))), "x", "x", "lo", "hi")
       .queryExecution.executedPlan.toString
-    assert(normal.contains("BroadcastRangeJoin"), normal.take(800))
+    assert(normal.contains("BroadcastIntervalJoin"), normal.take(800))
   }
 
   test("overlap: reversed BUILD intervals match identically under both " +
@@ -498,7 +501,7 @@ class RangeJoinSpec extends AnyFunSuite {
       (12L, 18L),  // inside the reversal but spans neither end -> no
       (15L, 35L),  // e >= 20 but s > 10 -> no (matches band 2 only)
       (25L, 5L)))  // reversed probe vs reversed build -> impossible
-    def run(force: Boolean) = rows(plans.OverlapJoin.broadcastOverlapJoin(
+    def run(force: Boolean) = rows(plans.IntervalJoin.join(
       ps, build, "s", "e", "lo", "hi", forceBinned = force))
     val broadcastForm = run(force = false)
     val binnedForm = run(force = true)
@@ -518,10 +521,10 @@ class RangeJoinSpec extends AnyFunSuite {
     val build = Seq((1L, "b", "d"), (2L, "m", "p")).toDF("band_id", "lo", "hi")
     val ps = Seq((1L, "c"), (2L, "n"), (3L, "z")).toDF("pid", "x")
     val out = forcedFallback {
-      plans.RangeJoin.broadcastRangeJoin(ps, build, "x", "lo", "hi")
+      plans.IntervalJoin.join(ps, build, "x", "x", "lo", "hi")
     }
     val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastRangeJoin"), plan.take(800))
+    assert(plan.contains("BroadcastIntervalJoin"), plan.take(800))
     assert(out.select(col("pid"), col("r_band_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       == Seq((1L, 1L), (2L, 2L)))
@@ -533,7 +536,7 @@ class RangeJoinSpec extends AnyFunSuite {
     val build = Seq((1L, "b", "d")).toDF("band_id", "lo", "hi")
     val ps = Seq((1L, "c")).toDF("pid", "x")
     val e = intercept[IllegalArgumentException] {
-      plans.RangeJoin.broadcastRangeJoin(ps, build, "x", "lo", "hi",
+      plans.IntervalJoin.join(ps, build, "x", "x", "lo", "hi",
         forceBinned = true)
     }
     assert(e.getMessage.contains("integral or timestamp"))
@@ -545,8 +548,8 @@ class RangeJoinSpec extends AnyFunSuite {
     val build = Seq((1.0d, 1L, 0L, 10L)).toDF("k", "band_id", "lo", "hi")
     val ps = Seq((1L, 1L, 5L)).toDF("pid", "pk", "x")
     val e = intercept[IllegalArgumentException] {
-      plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, build, "pk", "x", "k", "lo", "hi")
+      plans.IntervalJoin.join(
+        ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"))
     }
     assert(e.getMessage.contains("build side"))
   }
@@ -558,16 +561,19 @@ class RangeJoinSpec extends AnyFunSuite {
     val ps = keyedProbes(Seq(("a", 17L), ("a", 99L), ("c", 5L),
       (null, 5L), ("a", null), ("b", 50L)))
     def run(force: Boolean) = Seq(
-      rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, build, "pk", "x", "k", "lo", "hi", forceBinned = force)),
-      rows(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-        ps, build, "pk", "x", "k", "lo", "hi", leftOuter = true,
+      rows(plans.IntervalJoin.join(
+        ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"),
+        forceBinned = force)),
+      rows(plans.IntervalJoin.join(
+        ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"),
+        leftOuter = true,
         forceBinned = force)))
     assert(run(force = true) == run(force = false))
     // and the forced plan really is the equi-join, not the exec
-    val plan = plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-      ps, build, "pk", "x", "k", "lo", "hi", forceBinned = true)
+    val plan = plans.IntervalJoin.join(
+      ps, build, "x", "x", "lo", "hi", Some("pk" -> "k"),
+      forceBinned = true)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("KeyedBroadcastRangeJoin"), plan.take(800))
+    assert(!plan.contains("BroadcastIntervalJoin"), plan.take(800))
   }
 }

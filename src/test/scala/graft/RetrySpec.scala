@@ -20,11 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * shuffle/broadcast input). The assertion is exact multiset equality
   * with the uninjected run.
   *
-  * All six custom execs run here: AsOfJoinExec (backward + forward),
-  * BroadcastRangeJoinExec, KeyedBroadcastRangeJoinExec (inner + LEFT
-  * OUTER), BroadcastOverlapJoinExec, TopKPerGroupExec, and the
-  * AuditedJsonlSink DSv2 write path (whose retried write task must
-  * publish exactly-once through the 2-phase commit). The binned
+  * Every custom exec runs here: AsOfJoinExec (backward + forward),
+  * BroadcastIntervalJoinExec (point probe; keyed inner + LEFT OUTER;
+  * interval probe), TopKPerGroupExec, and the AuditedJsonlSink DSv2
+  * write path (whose retried write task must publish exactly-once
+  * through the 2-phase commit). The binned
   * over-ceiling fallback plan is retried too, so both sides of the
   * broadcast-ceiling threshold hold under retry. */
 class RetrySpec extends AnyFunSuite {
@@ -77,12 +77,12 @@ class RetrySpec extends AnyFunSuite {
   test("broadcast range join is retry-deterministic (both plans)") {
     val probe = events.select(col("event_id"),
       unix_micros(col("ts")).as("x"))
-    val df = plans.RangeJoin.broadcastRangeJoin(
-      probe, bands(8, H6, 600), "x", "lo", "hi")
+    val df = plans.IntervalJoin.join(
+      probe, bands(8, H6, 600), "x", "x", "lo", "hi")
     assertRetryStable(df)
     spark.conf.set(plans.BinnedRangeFallback.CeilingConf, "-1")
-    try assertRetryStable(plans.RangeJoin.broadcastRangeJoin(
-      probe, bands(8, H6, 600), "x", "lo", "hi"))
+    try assertRetryStable(plans.IntervalJoin.join(
+      probe, bands(8, H6, 600), "x", "x", "lo", "hi"))
     finally spark.conf.unset(plans.BinnedRangeFallback.CeilingConf)
   }
 
@@ -96,10 +96,10 @@ class RetrySpec extends AnyFunSuite {
         col("lo"), col("hi"))
     val probe = events.select(col("event_id"), col("event_type"),
       unix_micros(col("ts")).as("x"))
-    assertRetryStable(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-      probe, keyed, "event_type", "x", "etype", "lo", "hi"))
-    assertRetryStable(plans.KeyedRangeJoin.broadcastKeyedRangeJoin(
-      probe, keyed, "event_type", "x", "etype", "lo", "hi",
+    assertRetryStable(plans.IntervalJoin.join(
+      probe, keyed, "x", "x", "lo", "hi", Some("event_type" -> "etype")))
+    assertRetryStable(plans.IntervalJoin.join(
+      probe, keyed, "x", "x", "lo", "hi", Some("event_type" -> "etype"),
       leftOuter = true))
   }
 
@@ -108,7 +108,7 @@ class RetrySpec extends AnyFunSuite {
       .select(col("user_id"), col("session_id"),
         unix_micros(col("session_start")).as("s"),
         unix_micros(col("session_end")).as("e"))
-    assertRetryStable(plans.OverlapJoin.broadcastOverlapJoin(
+    assertRetryStable(plans.IntervalJoin.join(
       sessions, bands(12, H6, 600), "s", "e", "lo", "hi"))
   }
 

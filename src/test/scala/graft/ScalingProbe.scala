@@ -148,7 +148,7 @@ object ScalingProbe {
       e.unpersist()
     } }
 
-    // --- BroadcastRangeJoinExec vs the native BNLJ plan (A/B) ---
+    // --- BroadcastIntervalJoinExec vs the native plans (A/B) ---
     // Same query, growing BUILD side over a fixed 6.4M-row probe:
     // disjoint band grids of B intervals spanning the ts range. Spark
     // plans the BETWEEN theta join as BroadcastNestedLoopJoin — B
@@ -170,8 +170,8 @@ object ScalingProbe {
           (lit(lo0) + col("id") * w).as("lo"),
           (lit(lo0) + (col("id") + 1) * w - 1).as("hi"))
         time("range_ab_custom", b) {
-          graft.plans.RangeJoin
-            .broadcastRangeJoin(probe, bands, "x", "lo", "hi")
+          graft.plans.IntervalJoin
+            .join(probe, bands, "x", "x", "lo", "hi")
             .groupBy(col("r_band_id")).agg(count(lit(1))).count()
         }
         time("range_ab_bnlj", b) {
@@ -199,9 +199,9 @@ object ScalingProbe {
               (lit(lo0) + col("id") * w).as("lo"),
               (lit(lo0) + (col("id") + 1) * w - 1).as("hi"))
           time("keyed_ab_custom", g) {
-            graft.plans.KeyedRangeJoin
-              .broadcastKeyedRangeJoin(kProbe, bands,
-                "event_type", "x", "etype", "lo", "hi")
+            graft.plans.IntervalJoin
+              .join(kProbe, bands, "x", "x", "lo", "hi",
+                Some("event_type" -> "etype"))
               .groupBy(col("r_etype"), col("r_band_id"))
               .agg(count(lit(1))).count()
           }
@@ -231,8 +231,8 @@ object ScalingProbe {
             (lit(lo0) + col("id") * w).as("lo"),
             (lit(lo0) + (col("id") + 1) * w - 1).as("hi"))
           time("overlap_ab_custom", b) {
-            graft.plans.OverlapJoin
-              .broadcastOverlapJoin(oProbe, wins, "s", "e", "lo", "hi")
+            graft.plans.IntervalJoin
+              .join(oProbe, wins, "s", "e", "lo", "hi")
               .groupBy(col("r_window_id")).agg(count(lit(1))).count()
           }
           time("overlap_ab_bnlj", b) {
