@@ -1,32 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's cores (capped at 32) — a fixed small
-    // default silently wastes the box when the driver doesn't set the env.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    // Shuffle partitions sized for the bench SF (measured flat 8-32 at
-    // sf0.1, overhead-dominated below 8): keep enough for parallelism,
-    // not 200 empty tasks. Override with SPARK_GRAFT_PARTS.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS",
-      math.max(8, math.min(32, cpus.toInt)).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      // keep state-store maintenance (snapshot/cleanup, default every
-      // 60s) from landing inside the measured window — the bench's
-      // streaming queries drain in seconds and their state dies with
-      // the session, so mid-run maintenance is pure timing noise
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      // timestamp semantics must match Verify/the oracle: the events ts
-      // normalization (Tables.normalizeTs) reinterprets NTZ wall-clocks
-      // as UTC instants, which is only the identity under a UTC session.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder.getOrCreate()
     // Fixed-work calibration probe (2M-row codegen'd sum). Run BEFORE,
     // MIDWAY and AFTER the measured loop: on an idle box all three land
     // within noise of each other, so a contended box shows up ON THE

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named catalog queries to files —
   * the before/after plan evidence for optimization rounds
   * (plans/r16/<query>_{before,after}.txt).
@@ -23,17 +21,7 @@ object ExplainDump {
     }
     val Array(outDir, suffix, namesCsv) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS",
-      math.max(8, math.min(32, cpus.toInt)).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     var failed = 0

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Generates PLANS.md: formatted physical plans of representative queries,
   * annotated with the scale property each plan demonstrates. Regenerate
@@ -183,13 +182,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence (generated by graft.Plans)\n\n")
     sb.append(s"Source: `$sfDir`. Each plan is the `AdaptiveSparkPlan` as\n")

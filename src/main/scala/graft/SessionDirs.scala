@@ -7,18 +7,15 @@ import org.apache.spark.sql.SparkSession
   * (Sources.partitionedEventsDir's date layout, Similarity.ivfIndexDir's
   * inverted lists).
   *
-  * - WEAK session keys: a static strong map would pin every
-  *   SparkSession (and its executor state) for the life of the JVM
-  *   (ADVICE r6).
+  * - Per-session paths live in a [[SessionCache]] (weak session keys;
+  *   a path never references its session).
   * - Temp roots live until JVM exit (sessions can share them through
   *   the cache) and are then deleted by ONE shutdown hook,
   *   deepest-first, so long-lived multi-session processes don't
   *   accrete orphan directories.
   */
 object SessionDirs {
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]])
+  private val cache = new SessionCache[String]
   private val tmpRoots =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   private lazy val cleanupHook: Unit =
@@ -39,16 +36,7 @@ object SessionDirs {
     * (e.g. "ivf:<sfDir>") so different artifacts never collide. */
   def getOrBuild(spark: SparkSession, key: String, prefix: String)(
       build: java.nio.file.Path => String): String = {
-    val perSession = {
-      var m = cache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, String]
-        val prev = cache.putIfAbsent(spark, m)
-        if (prev != null) m = prev
-      }
-      m
-    }
-    perSession.getOrElseUpdate(key, {
+    cache(spark).getOrElseUpdate(key, {
       cleanupHook
       val root = java.nio.file.Files.createTempDirectory(prefix)
       tmpRoots.add(root)

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: exercises the driver's t1 contract
   * (SparkEntry.entry rows > 0) and optionally one named query.
   * Usage: runMain graft.Smoke [queryName sfDir] */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     args match {
       case Array(name, sfDir) =>
         val df = SparkEntry.queries(name)(spark, sfDir)

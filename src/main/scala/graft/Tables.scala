@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Fixture-table access (TESTDATA.md / FIXTURES.md).
@@ -21,26 +22,39 @@ object Tables {
   // One analyzed DataFrame per (session, dir, table): a fresh
   // `spark.read.parquet` re-lists the directory and re-reads footers for
   // schema inference on every call, which at 92 queries × ~10 tables was
-  // ~40% of the whole bench. Reusing the DataFrame keeps the logical plan
-  // (and its resolved relation) while every query still gets its own
+  // ~40% of the whole bench. Reusing the analyzed plan keeps the resolved
+  // relation (and its file index) while every query still gets its own
   // Catalyst optimization — pushdown/pruning are per-query, not per-load.
-  // Keyed on the session so test suites with their own sessions don't
-  // cross wires; sessions are few, so the map never grows meaningfully.
-  private val cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String), DataFrame]
+  //
+  // Ownership rule: the reused plan lives in storage the SESSION owns — a
+  // temp view in its own catalog — so it dies with the session. A static
+  // map cannot hold it, not even weakly keyed: a DataFrame (and its
+  // HadoopFsRelation) references its session, so the value would pin its
+  // own key (see SessionCache). The view name is reserved and injective
+  // per (dir, table): the dir is hex-encoded, never hashed. A hit reads
+  // the view's stored analyzed plan directly: `spark.table(view)` would
+  // re-parse and re-analyze it, 0.2-1 ms per load (measured at sf0.1).
+  private[graft] def viewName(sfDir: String, name: String): String =
+    "__graft_" + sfDir.getBytes("UTF-8").map(b => f"$b%02x").mkString +
+      "_" + name
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, name), {
-      val df = raw(spark, sfDir, name)
-      // events.ts normalization, branched on the ON-DISK type — fixture
-      // vintages have shipped both Parquet TIMESTAMP(NANOS) and
-      // TIMESTAMP(MICROS), and assuming either one breaks every events
-      // query when the driver regenerates the other (the round-5 lesson).
-      // All downstream code sees one canonical type: TimestampType
-      // (instant, session-UTC), matching DuckDB's read of the same file.
-      if (name == "events") normalizeTs(df) else df
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val view = viewName(sfDir, name)
+    Shim.tempView(spark, view).getOrElse(synchronized {
+      Shim.tempView(spark, view).getOrElse {
+        val df = raw(spark, sfDir, name)
+        // events.ts normalization, branched on the ON-DISK type — fixture
+        // vintages have shipped both Parquet TIMESTAMP(NANOS) and
+        // TIMESTAMP(MICROS), and assuming either one breaks every events
+        // query when the fixtures are regenerated in the other (the round-5
+        // lesson). All downstream code sees one canonical type:
+        // TimestampType (instant, session-UTC), matching DuckDB's read.
+        val loaded = if (name == "events") normalizeTs(df) else df
+        loaded.createTempView(view)
+        loaded
+      }
     })
+  }
 
   private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {

@@ -1047,12 +1047,13 @@ object Dedup {
       .select(col("doc_id"), size(shingles(col("text"), n)).as("n_sh"))
     val nMatch = size(filter(zip_with(col("sig_a"), col("sig_b"),
       (p, q) => p === q), v => v))
-    // The signatures RIDE THROUGH the n_common aggregation (first() is
+    // The signatures RIDE THROUGH the n_common aggregation (min() is
     // exact here: sig_a/sig_b are functionally determined by the group
-    // key) instead of joining `cand` back against itself — the old
-    // `cand.join(common, ...)` form planned the whole band-index
-    // self-join + signature aggregation TWICE (r17 plan audit). The
-    // re-join was lossless anyway (shared band ⇒ r equal minima ⇒ a
+    // key; unlike first(), min() stays deterministic should that
+    // uniqueness ever break) instead of joining `cand` back against
+    // itself — the old `cand.join(common, ...)` form planned the whole
+    // band-index self-join + signature aggregation TWICE (r17 plan
+    // audit). The re-join was lossless anyway (shared band ⇒ r equal minima ⇒ a
     // shared shingle ⇒ n_common ≥ 1, see scale note above), so every
     // cand pair survives and the rows are identical; at scale this
     // carries 2k longs per candidate-shingle row instead of a second
@@ -1063,7 +1064,7 @@ object Dedup {
         Seq("doc_b", "h"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_common"),
-        first(col("sig_a")).as("sig_a"), first(col("sig_b")).as("sig_b"))
+        min(col("sig_a")).as("sig_a"), min(col("sig_b")).as("sig_b"))
     common
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))

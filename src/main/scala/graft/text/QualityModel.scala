@@ -91,22 +91,9 @@ object QualityModel {
     * data), keyed by caller-supplied corpus identity + task + iters +
     * lr; the trajectory is deterministic (exact decimal gradient sums,
     * IEEE updates), so a cache hit is bit-identical to retraining.
-    * Weak session keys: dropping the session drops its models. No key
-    * (tests, ad-hoc frames) = always retrain. */
-  private val weightCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, Array[Double]]])
-
-  private def cacheMap(spark: org.apache.spark.sql.SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Array[Double]] = {
-    var m = weightCache.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-      val prev = weightCache.putIfAbsent(spark, m)
-      if (prev != null) m = prev
-    }
-    m
-  }
+    * Weak session keys ([[graft.SessionCache]]): dropping the session
+    * drops its models. No key (tests, ad-hoc frames) = always retrain. */
+  private val weightCache = new graft.SessionCache[Array[Double]]
 
   private def trainOn(documents: DataFrame, label: Column, iters: Int,
       lr: Double): Array[Double] = computeTrainOn(documents, label, iters, lr)
@@ -125,7 +112,7 @@ object QualityModel {
     cacheKey match {
       case None => single()
       case Some(k) =>
-        val m = cacheMap(documents.sparkSession)
+        val m = weightCache(documents.sparkSession)
         val kl = s"lang:$k:i$iters:lr$lr"
         val kn = s"len:$k:i$iters:lr$lr"
         val want = if (task == "lang") kl else kn

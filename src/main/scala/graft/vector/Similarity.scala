@@ -194,7 +194,11 @@ object Similarity {
     * Scale: the codebook (m × #codes rows) broadcasts; the ADC join
     * touches only (vec_id, sub, code) triples — 100 TB of vectors never
     * move. This demo scans all codes per query; a deployment composes the
-    * IVF probe in front (scan one cell's codes, same ADC). */
+    * IVF probe in front (scan one cell's codes, same ADC).
+    *
+    * Non-null contract: rows with a null `label` are dropped from the
+    * codebook by its reuse-alignment `isNotNull` filter, so they train
+    * no codeword (every fixture label is non-null). */
   def pqTopK(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
       m: Int = 8, dim: Int = 64, rerank: Int = 100): DataFrame = {
     val subLen = dim / m
@@ -406,7 +410,12 @@ object Similarity {
     * re-mean = one exact-decimal aggregation) that a full k-means job
     * repeats to convergence. Queries then probe the refined index.
     * Every step is deterministic (exact-decimal means, fixed tie-breaks)
-    * so the whole refinement is oracle-checked in SQL. */
+    * so the whole refinement is oracle-checked in SQL.
+    *
+    * Non-null contract: rows with a null `vec_id` are dropped from the
+    * assignment by its reuse-alignment `isNotNull` filter, so they
+    * shape no refined centroid and are never returned (every fixture
+    * vec_id is non-null). */
   def ivfRefinedTopK(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
     val corpus = embeddings
@@ -517,20 +526,19 @@ object Similarity {
     df.orderBy(col("cluster")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
 
-  /** Session-scoped Lloyd MODEL cache (VERDICT r11 item 3, the
-    * SessionDirs weak-key pattern): q_kmeans, q_knn_ivf_trained and
-    * q_ann_recall_ivf each ran the same multi-round trainer over the
-    * same corpus — ~11 s of the r11 bench retraining one model. The
-    * cached value is the centroid SEQUENCE cent₀..cent_R (≤ R·k·d
-    * doubles — model-sized, never data), keyed by a caller-supplied
-    * corpus identity; a request for more rounds EXTENDS the cached
-    * prefix (Lloyd round r depends only on cent_{r-1}, so the 2-round
-    * and 3-round trainings share their first two rounds bit-exactly).
-    * Weak session keys: dropping the session drops its models. */
-  private val lloydCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        IndexedSeq[Seq[(Int, Seq[Double])]]]])
+  /** Session-scoped Lloyd MODEL cache (VERDICT r11 item 3):
+    * q_kmeans, q_knn_ivf_trained and q_ann_recall_ivf each ran the
+    * same multi-round trainer over the same corpus — ~11 s of the r11
+    * bench retraining one model. The cached value is the centroid
+    * SEQUENCE cent₀..cent_R (≤ R·k·d doubles — model-sized, never
+    * data), keyed by a caller-supplied corpus identity; a request for
+    * more rounds EXTENDS the cached prefix (Lloyd round r depends only
+    * on cent_{r-1}, so the 2-round and 3-round trainings share their
+    * first two rounds bit-exactly).
+    * Weak session keys ([[graft.SessionCache]]): dropping the session
+    * drops its models. */
+  private val lloydCache =
+    new graft.SessionCache[IndexedSeq[Seq[(Int, Seq[Double])]]]
 
   /** cent₀ (per-label seed means) through cent_rounds over `corpus`
     * (`vec_id`, `label`, `v`), reusing/extending the session cache when
@@ -538,17 +546,7 @@ object Similarity {
     * persisted while this trains. */
   private def lloydSeq(corpus: DataFrame, rounds: Int,
       cacheKey: Option[String]): IndexedSeq[Seq[(Int, Seq[Double])]] = {
-    val spark = corpus.sparkSession
-    val perSession = cacheKey.map { _ =>
-      var m = lloydCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[String, IndexedSeq[Seq[(Int, Seq[Double])]]]
-        val prev = lloydCache.putIfAbsent(spark, m)
-        if (prev != null) m = prev
-      }
-      m
-    }
+    val perSession = cacheKey.map(_ => lloydCache(corpus.sparkSession))
     var seq = perSession.flatMap(m => cacheKey.flatMap(m.get))
       .getOrElse(IndexedSeq.empty)
     if (seq.isEmpty)

@@ -24,6 +24,14 @@ object Shim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The analyzed plan stored under temp view `name` in the session's
+    * own catalog, as a DataFrame: no identifier parse and no
+    * re-analysis, so reuse costs what a held DataFrame costs
+    * (private[sql] sessionState). */
+  def tempView(spark: SparkSession, name: String): Option[DataFrame] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .getRawTempView(name).flatMap(_.plan).map(ofRows(spark, _))
+
   /** Block until every event posted so far has reached every listener
     * (private[spark] listener bus), so listener counts are complete. */
   def drainListenerBus(spark: SparkSession): Unit =

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,15 +94,12 @@ object AnnScaleGate {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val shuffleParts = math.min(2048, math.max(32, k * 4))
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.rdd.compress", "true")
       .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // peak per-task execution memory across the whole gate — the
     // flat-in-k number SCALING.md tracks for every family

@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.ref.WeakReference
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture-drift canary (see Tables.contract): when the driver
@@ -56,5 +60,45 @@ class FixtureContractSpec extends AnyFunSuite {
     val a = Tables.normalizeTs(ntz).select(unix_micros(col("ts"))).head().getLong(0)
     val b = Tables.normalizeTs(nanos).select(unix_micros(col("ts"))).head().getLong(0)
     assert(a == 1706572694607263L && b == 1706572694607263L)
+  }
+
+  // ---- session lifecycle: per-session state must die with the session.
+  // The sessions below run NO action: Spark itself keeps a session
+  // reachable once it has run a shuffle, a pin outside graft.
+
+  /** Builds a `newSession()`, runs `use` on it, and returns only a weak
+    * reference, so no frame of the caller keeps the session alive. */
+  private def dropped(use: SparkSession => Unit): WeakReference[AnyRef] = {
+    val s = spark.newSession()
+    use(s)
+    new WeakReference[AnyRef](s)
+  }
+
+  private def collected(ref: WeakReference[AnyRef]): Boolean =
+    (1 to 30).exists { _ => System.gc(); Thread.sleep(20); ref.get == null }
+
+  test("a dropped session that ran no action is collected (control)") {
+    assert(collected(dropped(_ => ())))
+  }
+
+  test("a dropped session that loaded every table and a session dir is " +
+      "collected") {
+    val ref = dropped { s =>
+      Tables.all.foreach(Tables.load(s, TestSpark.sf, _))
+      SessionDirs.getOrBuild(s, "lifecycle", "graft_lifecycle")(_.toString)
+    }
+    assert(collected(ref), "Tables/SessionDirs pin a dropped session")
+  }
+
+  test("Tables.load reuses one file index per (session, dir, table)") {
+    def index(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.get
+    val otherSf = TestSpark.sf.replace("sf0.001", "sf0.01")
+    Seq("lineitem", "events").foreach { t =>
+      val a = index(Tables.load(spark, TestSpark.sf, t))
+      assert(a eq index(Tables.load(spark, TestSpark.sf, t)), t)
+      assert(a ne index(Tables.load(spark, otherSf, t)), t)
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off generator for the embedded BPE merge table
   * (functions/BpeExpressions.scala): runs [[graft.text.TextAnalysis.bpeTrain]]
   * over the largest fixture corpus and prints the learned table as a
@@ -14,13 +12,7 @@ object GenBpeTable {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = sys.env.getOrElse("SPARK_GRAFT_BPE_K", "64").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder.getOrCreate()
     val docs = Tables.load(spark, sfDir, "documents")
     val t0 = System.nanoTime()
     val merges = graft.text.TextAnalysis.bpeTrain(docs, k = k).collect()

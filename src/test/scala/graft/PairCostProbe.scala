@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Published cost model for the (r13) posting-list-free pair join
@@ -51,14 +50,11 @@ object PairCostProbe {
         args(3).split(",").map(_.trim.toDouble).toSeq
       else Seq.empty
     val cores = if (args.length > 4) args(4) else "32"
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", "1024")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val spillD = new java.util.concurrent.atomic.AtomicLong
     val spillM = new java.util.concurrent.atomic.AtomicLong

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler for bpeTrain round timing (not a test; run via
   * `sbt "Test/runMain graft.ProfileBpe"`). */
 object ProfileBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder.getOrCreate()
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch memory profiler for the CC pair join at scale (r13): runs
@@ -23,15 +22,12 @@ object ProfileCcMem {
     val parts = if (args.length > 2) args(2) else "1024"
     val advisory = if (args.length > 3) args(3) else "16m"
     val cores = if (args.length > 4) args(4) else "32"
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
       .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val peak = new mutable.HashMap[Int, Long]
     val spillM = new mutable.HashMap[Int, Long]
     val spillD = new mutable.HashMap[Int, Long]

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch memory profiler for the graph invariant gate (r13): runs
   * GraphInvariants.check against an already-built scaled lineitem with
@@ -21,15 +20,12 @@ object ProfileGraphMem {
     val parts = if (args.length > 1) args(1) else "1024"
     val advisory = if (args.length > 2) args(2) else "16m"
     val cores = if (args.length > 3) args(3) else "32"
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
       .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val peak = new mutable.HashMap[Int, Long]
     val spillD = new mutable.HashMap[Int, Long]
     spark.sparkContext.addSparkListener(new SparkListener {

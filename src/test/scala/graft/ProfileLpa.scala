@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Probe: community structure of labelPropagation across posting caps
   * (documents the random-projection density argument in the scaladoc).
   * Not a test — run via Test/runMain graft.ProfileLpa. */
 object ProfileLpa {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder.getOrCreate()
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); spp <- Seq(2, 3, 5)) {
       val li = Tables.load(spark, s"/root/testdata/$sf", "lineitem")
       val out = operators.Graph.labelPropagation(li, suppPerPart = spp)

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler: cold/warm timing for named queries in one warmed
   * session (`sbt "Test/runMain graft.ProfileQ q_a q_b"`). */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder.getOrCreate()
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()

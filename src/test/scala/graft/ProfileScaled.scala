@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler over the SCALED probe corpus — times named ops in
@@ -16,13 +15,7 @@ object ProfileScaled {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     val ops: Map[String, org.apache.spark.sql.DataFrame => Long] = Map(
       "jaccard_prefix" ->

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch A/B (r9 verdict item 6): the triangles operator's persist
@@ -16,13 +16,7 @@ import org.apache.spark.sql.functions._
 object ProfileTriangles {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     val lineitem = Tables.load(spark, sfDir, "lineitem")
 

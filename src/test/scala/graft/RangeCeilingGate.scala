@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.{BinnedRangeFallback, IntervalJoin}
@@ -41,13 +41,10 @@ object RangeCeilingGate {
     val k = args.headOption.map(_.toInt).getOrElse(256)
     val outDir = if (args.length > 1) args(1)
       else s"/tmp/graft_range_ceiling_$k"
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val n = k.toLong * 2048L
     val dimPath = s"$outDir/range_dim.parquet"
     val marker = Paths.get(s"$outDir/_built")

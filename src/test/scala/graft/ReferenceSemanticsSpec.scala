@@ -14,17 +14,12 @@ object TestSpark {
     // (the silent-wrong-answer class speculation/retry hits at scale).
     // Deterministically-failing tests (corrupt file, abort taxonomy)
     // still fail their jobs, one extra attempt later.
-    val s = SparkSession.builder()
+    Session.builder
       .master("local[4,2]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
   }
   val sf: String = "/root/testdata/sf0.001"
 }

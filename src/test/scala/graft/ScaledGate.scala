@@ -157,7 +157,7 @@ object ScaledGate {
     if (deepGraph && slotOverride.isDefined)
       println(s"GATE deep-graph slots=${slots} " +
         "(SPARK_GRAFT_GATE_SLOTS override)")
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master(s"local[$slots]")
       .config("spark.memory.storageFraction",
         if (deepGraph) "0.3" else "0.5")
@@ -200,10 +200,7 @@ object ScaledGate {
       // the same two knobs size executor local disks.
       .config("spark.rdd.compress", "true")
       .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // ---- build the scaled tables once per (base, k) ----
     val tablesDir = s"$outDir/tables"

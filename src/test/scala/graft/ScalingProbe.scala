@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence probe (dev tool, like ProfileQ): times representative
@@ -23,13 +23,7 @@ object ScalingProbe {
     def sec(name: String)(body: => Unit): Unit =
       if (only.isEmpty || only.contains(name)) body
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
 
     // k = 0 marks the untimed codegen/JIT warmup pass so the curve

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Shim
 
 /** Counts the jobs/stages/tasks a catalog query actually EXECUTES —
@@ -20,13 +19,7 @@ object StageCountProbe {
     val names = args.headOption.getOrElse(
       sys.error("usage: <query>[,<query>...] [sfDir]")).split(",")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder.getOrCreate()
     @volatile var stages = 0
     @volatile var tasks = 0
     @volatile var jobs = 0

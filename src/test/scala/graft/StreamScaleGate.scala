@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -87,18 +87,15 @@ object StreamScaleGate {
       else Files.createTempDirectory("graft_streamgate").toString
     val restart = args.length > 3 &&
       (args(3) == "RESTART" || args(3) == "--restart")
-    val spark = SparkSession.builder()
+    val spark = Session.builder
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // keep ALL progresses: the max-over-batches state metric is the
       // gate's subject (default retention is 100, batches ≤ ~70 here)
       .config("spark.sql.streaming.numRecentProgressUpdates", "200")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     def source(redeliver: Boolean): DataFrame = spark.readStream
