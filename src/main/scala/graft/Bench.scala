@@ -35,23 +35,14 @@ object Bench {
       org.apache.spark.sql.functions.expr("r_regionkey = n_regionkey"))
       .count()
     // Streaming-engine warmup (~2.5-3 s one-time: state store, offset/commit
-    // log, streaming listeners): a tiny stateful AvailableNow query, so the
-    // first MEASURED streaming query pays only its own micro-batch cost —
-    // the same rationale as the batch warmup above (measured: 5.7 s -> ~2 s
+    // log, streaming listeners): a tiny stateful drain through the same
+    // StreamingPipeline.drain the streaming queries use, so the first
+    // MEASURED streaming query pays only its own micro-batch cost — the
+    // same rationale as the batch warmup above (measured: 5.7 s -> ~2 s
     // for q_stream_windowed once init is off its back).
-    locally {
-      import org.apache.spark.sql.functions.col
-      val w = spark.readStream
-        .format("graft.sources.SyntheticEventsSource")
-        .option("n", 100).option("slices", 2).option("rowsPerBatch", 100)
-        .load()
-        .groupBy(col("event_type")).count()
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("bench_stream_warmup")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      w.awaitTermination()
-    }
+    streaming.StreamingPipeline.drain(spark, "complete")(
+      streaming.StreamingPipeline.syntheticStream(spark, 100, 100)
+        .groupBy("event_type").count()).count()
     // Optional comma-separated name filter for single-query profiling
     // inside the warmed bench session (SPARK_GRAFT_ONLY=q_a,q_b).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

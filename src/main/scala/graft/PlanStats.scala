@@ -14,8 +14,9 @@ import java.nio.file.{Files, Paths}
   *
   * Note: constructing a query runs any eager builders (streaming
   * drains, iterative trainers), so a sweep takes a few minutes; the
-  * streaming queries' plans are their post-drain memory-table reads
-  * (their real plans are exercised in StreamingSpec).
+  * streaming queries' plans are reads of their drained, locally
+  * checkpointed results (their real plans are exercised in
+  * StreamingSpec).
   */
 object PlanStats {
   def main(args: Array[String]): Unit = {
@@ -63,7 +64,7 @@ object PlanStats {
     sb.append("PageRank, BFS) unroll rounds into repeated subtrees, so ")
     sb.append("their counts are plan-size, not per-round cost — ")
     sb.append("ReusedExchange shows the dedup. Queries reading persisted ")
-    sb.append("or post-drain memory relations (q_triangles, streaming ")
+    sb.append("or drained local checkpoints (q_triangles, streaming ")
     sb.append("family, q_jaccard_sliced's eagerly-built pair artifact) ")
     sb.append("appear near-shuffle-free here because the exchanges ")
     sb.append("live in the cached/materialized build step.\n\n")

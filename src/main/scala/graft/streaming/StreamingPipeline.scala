@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming re-expression of the reference's dual pipeline
@@ -295,53 +297,106 @@ object StreamingPipeline {
         org.apache.spark.sql.streaming.OutputMode.Append())
   }
 
-  /** Streaming state-partition sizing: a stateful query creates (and
-    * commits, every micro-batch) one state store per shuffle partition,
-    * and the partition count is FROZEN into the query at start. The
-    * session's batch-tuned 32 oversizes the stores ~4× for these
-    * drain-in-seconds demo volumes (~10⁴ rows/batch, ≤10² distinct
-    * keys) — exactly the sizing a production streaming job does
-    * per-query against its throughput. Scoped set/restore around
-    * `start()`: the conf is only read at stream planning. */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+  /** The synthetic DSv2 event stream (sources/SyntheticEventsSource):
+    * `n` deterministic events over 4 slices, `rowsPerBatch` per
+    * micro-batch; `redeliver` re-emits each batch's rows once more in the
+    * next one (at-least-once delivery). */
+  def syntheticStream(spark: SparkSession, n: Long, rowsPerBatch: Long,
+      redeliver: Boolean = false): DataFrame =
+    spark.readStream
+      .format("graft.sources.SyntheticEventsSource")
+      .option("n", n).option("slices", 4)
+      .option("rowsPerBatch", rowsPerBatch)
+      .option("redeliver", redeliver)
+      .load()
+
+  /** Run a streaming `query` to completion (AvailableNow) and return its
+    * result as a batch DataFrame bound to the CALLER's session: the last
+    * micro-batch's output in `complete` mode, the union of every
+    * micro-batch's output in `append` mode, and an empty frame with the
+    * query's schema when no micro-batch ran. Each micro-batch goes to
+    * `foreachBatch` and is materialised there with
+    * `localCheckpoint(eager = true)`, so the result stays on the
+    * executors (no driver-side collect, unlike the memory sink) and
+    * reading it never re-runs the stream; in complete mode each batch
+    * unpersists the one it replaces. A failed query rethrows from here.
+    *
+    * Two settings are scoped around `start()` (the stream's cloned
+    * session freezes them; the caller's values are restored even when
+    * `start()` throws):
+    *  - state partitions = min(8, defaultParallelism): a stateful query
+    *    opens and commits one state store per shuffle partition every
+    *    micro-batch, and these drains carry ~10⁴ rows and ≤10³ keys per
+    *    batch, so one wave of state tasks is the right size;
+    *  - Spark's `FileSystemBasedCheckpointFileManager`. Without the
+    *    native Hadoop library, the default FileContext-based manager
+    *    forks a shell (`readlink`, `chmod`) for every offset, commit and
+    *    state file it creates or renames on the local file system: a JFR
+    *    `jdk.ProcessStart` count gave 236 forks (176 `readlink`, 60
+    *    `chmod`) per q_stream_sessions drain at 8 state partitions, and
+    *    40 (`chmod` only) with this manager at 4. The FileSystem-based
+    *    manager writes a temp file and renames it into place; Spark
+    *    documents it as safe where rename is atomic, and the checkpoint
+    *    here is always a fresh local temp dir, where `rename(2)` is.
+    *    Hadoop still writes `.crc` files (LocalFileSystem is a
+    *    ChecksumFileSystem).
+    * The checkpoint dir is deleted before this returns. */
+  def drain(spark: SparkSession, outputMode: String)(query: DataFrame): DataFrame = {
+    require(outputMode == "complete" || outputMode == "append",
+      s"drain: output mode '$outputMode' is neither complete nor append")
+    val checkpoint = java.nio.file.Files.createTempDirectory("temporary-")
+    // written by the stream thread; awaitTermination's latch publishes it
+    var kept = Vector.empty[DataFrame]
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" ->
+        math.min(8, spark.sparkContext.defaultParallelism).toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      val q =
+        try {
+          scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+          query.writeStream
+            .outputMode(outputMode)
+            .option("checkpointLocation", checkpoint.toString)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val local = batch.localCheckpoint(eager = true)
+              if (outputMode == "complete") {
+                kept.foreach(Shim.unpersistCheckpoint)
+                kept = Vector(local)
+              } else kept :+= local
+            }
+            .start()
+        } finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      q.awaitTermination()
+      kept.map(b => Shim.ofRows(spark, Shim.logicalPlan(b))).reduceOption(_ union _)
+        .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], query.schema))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(checkpoint.toFile)
   }
 
-  /** Run the windowed aggregation synchronously over the sf events table
-    * (AvailableNow → memory sink) and return the completed result — lets
-    * the batch-oriented driver harness exercise the streaming path. */
+  /** Run the windowed aggregation synchronously over the synthetic
+    * stream and return the completed result — lets the batch-oriented
+    * query catalog exercise the streaming path. */
   def runSyntheticStream(spark: SparkSession, n: Long = 50000,
-      rowsPerBatch: Long = 20000): DataFrame = {
+      rowsPerBatch: Long = 20000): DataFrame =
     // End-to-end ORACLED streaming: the custom DSv2 streaming source
-    // (sources/SyntheticEventsSource) drains under AvailableNow in
-    // ceil(n/rowsPerBatch) real micro-batches through a watermarked
-    // event-time window agg; generation is deterministic arithmetic, so
-    // the completed result is exactly DuckDB-checkable via range().
-    val name = "synth_stream_out"
-    val q = withStreamPartitions(spark, 8) {
-      spark.readStream
-        .format("graft.sources.SyntheticEventsSource")
-        .option("n", n).option("slices", 4)
-        .option("rowsPerBatch", rowsPerBatch)
-        .load()
+    // drains under AvailableNow in ceil(n/rowsPerBatch) real
+    // micro-batches through a watermarked event-time window agg;
+    // generation is deterministic arithmetic, so the completed result is
+    // exactly DuckDB-checkable via range().
+    drain(spark, "complete")(
+      syntheticStream(spark, n, rowsPerBatch)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .select(col("window.start").as("window_start"),
           col("event_type"), col("n"), col("sum_cents"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy(col("window_start"), col("event_type"))
-  }
+    ).orderBy(col("window_start"), col("event_type"))
 
   /** End-to-end ORACLED streaming dedup (the oracled face of
     * [[dedupStream]]): the synthetic DSv2 source in `redeliver` mode
@@ -362,34 +417,18 @@ object StreamingPipeline {
     * StreamingSpec additionally pins that the redelivering source
     * WITHOUT dedup really does emit the extra rows. */
   def runDedupStream(spark: SparkSession, n: Long = 50000,
-      rowsPerBatch: Long = 10000): DataFrame = {
-    val name = "stream_dedup_out"
-    val q = withStreamPartitions(spark, 8) {
-      spark.readStream
-        .format("graft.sources.SyntheticEventsSource")
-        .option("n", n).option("slices", 4)
-        .option("rowsPerBatch", rowsPerBatch)
-        .option("redeliver", "true")
-        .load()
+      rowsPerBatch: Long = 10000): DataFrame =
+    drain(spark, "append")(
+      syntheticStream(spark, n, rowsPerBatch, redeliver = true)
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name)
-      .groupBy(col("event_type"))
+    ).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("event_id")).as("sum_ids"),
         sum(col("cents")).as("sum_cents"),
         min(col("event_id")).as("min_id"),
         max(col("event_id")).as("max_id"))
       .orderBy(col("event_type"))
-  }
 
   /** Drain the file stream through the SESSION-window aggregation
     * (AvailableNow, complete mode) — streaming/batch parity for
@@ -397,41 +436,21 @@ object StreamingPipeline {
     * micro-batches (maxFilesPerTrigger=1 forces several), and the fully
     * drained result must equal the one-shot batch `session_window` agg,
     * which the gaps-and-islands oracle replays. */
-  def runSessionBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "stream_sessions_out"
-    val q = withStreamPartitions(spark, 8) {
+  def runSessionBatch(spark: SparkSession, sfDir: String): DataFrame =
+    drain(spark, "complete")(
       sessionCounts(eventsStream(spark, sfDir, maxFilesPerTrigger = 1))
         .select(
           col("user_id"),
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy(col("user_id"), col("session_start"))
-  }
+    ).orderBy(col("user_id"), col("session_start"))
 
-  def runWindowedBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "stream_windowed_out"
-    val q = withStreamPartitions(spark, 8) {
+  def runWindowedBatch(spark: SparkSession, sfDir: String): DataFrame =
+    drain(spark, "complete")(
       windowedCounts(eventsStream(spark, sfDir, maxFilesPerTrigger = 1))
         .select(
           col("window.start").as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    spark.table(name).orderBy(col("window_start"), col("event_type"))
-  }
+    ).orderBy(col("window_start"), col("event_type"))
 }

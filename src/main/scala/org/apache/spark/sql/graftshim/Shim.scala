@@ -32,6 +32,14 @@ object Shim {
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog
       .getRawTempView(name).flatMap(_.plan).map(ofRows(spark, _))
 
+  /** Drop the blocks behind a `localCheckpoint`ed DataFrame (the RDD of
+    * its LogicalRDD leaf; private[sql] plan node). */
+  def unpersistCheckpoint(df: DataFrame): Unit =
+    logicalPlan(df).foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Block until every event posted so far has reached every listener
     * (private[spark] listener bus), so listener counts are complete. */
   def drainListenerBus(spark: SparkSession): Unit =

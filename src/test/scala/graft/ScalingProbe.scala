@@ -248,14 +248,8 @@ object ScalingProbe {
     // (state store merging session fragments per user across batches)
     // at the same volumes.
     sec("streaming") {
-      import org.apache.spark.sql.streaming.Trigger
-      def drain(tag: String, n: Long, rpb: Long,
-          sessions: Boolean): Long = {
-        val name = s"probe_${tag}_out"
-        val src = spark.readStream
-          .format("graft.sources.SyntheticEventsSource")
-          .option("n", n).option("slices", 4).option("rowsPerBatch", rpb)
-          .load()
+      def drain(n: Long, rpb: Long, sessions: Boolean): Long = {
+        val src = streaming.StreamingPipeline.syntheticStream(spark, n, rpb)
           .withWatermark("ts", "10 minutes")
         val agg =
           if (sessions)
@@ -265,25 +259,21 @@ object ScalingProbe {
           else
             src.groupBy(window(col("ts"), "1 hour"), col("event_type"))
               .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        spark.table(name).count()
+        streaming.StreamingPipeline.drain(spark, "complete")(agg).count()
       }
-      drain("warmup", 1000, 1000, sessions = false)
-      drain("warmup2", 1000, 1000, sessions = true)
+      drain(1000, 1000, sessions = false)
+      drain(1000, 1000, sessions = true)
       for ((batches, rpb) <- Seq((1, 320000L), (4, 80000L), (32, 10000L)))
         time("stream_floor", batches) {
-          drain(s"floor$batches", 320000L, rpb, sessions = false)
+          drain(320000L, rpb, sessions = false)
         }
       for (kk <- Seq(1, 8, 64)) {
         val n = 50000L * kk
         time("stream_drain", kk) {
-          drain(s"drain$kk", n, n / 4, sessions = false)
+          drain(n, n / 4, sessions = false)
         }
         time("stream_sessions", kk) {
-          drain(s"sess$kk", n, n / 4, sessions = true)
+          drain(n, n / 4, sessions = true)
         }
       }
     }

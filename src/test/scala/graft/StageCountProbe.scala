@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.graftshim.Shim
 
@@ -9,10 +10,18 @@ import org.apache.spark.sql.graftshim.Shim
   * plan dumps alone can't prove a duplicated subtree was folded).
   *
   * Run:  sbt "Test/runMain graft.StageCountProbe <query>[,<query>...] [sfDir]"
-  * Prints one line per query: PROBE <query> jobs=J stages=S tasks=T
-  * (second, warm execution — the first run absorbs session/JIT
-  * one-times). The listener bus is drained before each read, so the
-  * counts are complete.
+  * Prints one line per query:
+  *   PROBE <query> jobs=J stages=S tasks=T compiles=C fresh_compiles=F
+  * J/S/T/C are the second, warm execution (the first run absorbs
+  * session/JIT one-times); the listener bus is drained before each
+  * read, so the counts are complete. `compiles` counts the codegen
+  * compilations a run paid (the count of Spark's `CodegenMetrics`
+  * compilation-time histogram); `fresh_compiles` is a third run in a
+  * new `newSession()`. The codegen cache is keyed by (context class
+  * loader, code) and per-session artifact isolation gives every new or
+  * cloned session (each streaming query's too) a fresh executor class
+  * loader, so F > 0 = C on a warm session is Spark 4.1's per-session
+  * floor (SCALING.md, "Codegen recompiles per session").
   */
 object StageCountProbe {
   def main(args: Array[String]): Unit = {
@@ -34,9 +43,15 @@ object StageCountProbe {
       fn(spark, sfDir).count() // warm (JIT, parquet footer cache)
       Shim.drainListenerBus(spark)
       stages = 0; tasks = 0; jobs = 0
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       fn(spark, sfDir).count()
       Shim.drainListenerBus(spark)
-      println(s"PROBE $name jobs=$jobs stages=$stages tasks=$tasks")
+      val compiles1 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val warm = s"PROBE $name jobs=$jobs stages=$stages tasks=$tasks " +
+        s"compiles=${compiles1 - compiles0}"
+      fn(spark.newSession(), sfDir).count()
+      val fresh = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles1
+      println(s"$warm fresh_compiles=$fresh")
     }
     spark.stop()
   }

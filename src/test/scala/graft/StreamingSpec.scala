@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -659,5 +660,109 @@ class StreamingSpec extends AnyFunSuite {
         col("cnt"), col("sum_cents"))
       .collect().map(_.toString).sorted.toSeq
     assert(streamed.nonEmpty && streamed == batch)
+  }
+
+  // --- StreamingPipeline.drain: foreachBatch + localCheckpoint ---
+
+  /** The memory-sink path `drain` replaced: AvailableNow into a memory
+    * table at 8 state partitions, read back through `spark.table`. */
+  private def memorySinkDrain(name: String, mode: String)(
+      query: DataFrame): DataFrame = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = try query.writeStream.outputMode(mode).format("memory")
+        .queryName(name).trigger(Trigger.AvailableNow()).start()
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+    spark.table(name)
+  }
+
+  private def multiset(df: DataFrame): Map[String, Int] =
+    df.collect().toSeq.groupBy(_.toString).map { case (k, v) => k -> v.size }
+
+  private def checkpointDirs: Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .map(_.getName).filter(_.startsWith("temporary-")).toSet
+
+  test("each drain equals the memory-sink drain as a multiset and is " +
+      "bound to the caller's session") {
+    import streaming.StreamingPipeline._
+    def check(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.sparkSession eq spark)
+      val g = multiset(got)
+      assert(g.nonEmpty && g == multiset(want))
+    }
+    // complete mode over 4 micro-batches (ceil(1000 / 300))
+    check(runSyntheticStream(spark, 1000, 300),
+      memorySinkDrain("ref_synth", "complete")(
+        syntheticStream(spark, 1000, 300)
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
+          .select(col("window.start").as("window_start"),
+            col("event_type"), col("n"), col("sum_cents"))))
+    // append mode over 4 redelivering micro-batches
+    check(runDedupStream(spark, 4000, 1000),
+      memorySinkDrain("ref_dedup", "append")(
+        syntheticStream(spark, 4000, 1000, redeliver = true)
+          .withWatermark("ts", "10 minutes")
+          .dropDuplicatesWithinWatermark("event_id"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_ids"),
+          sum(col("cents")).as("sum_cents"), min(col("event_id")).as("min_id"),
+          max(col("event_id")).as("max_id")))
+    check(runSessionBatch(spark, TestSpark.sf),
+      memorySinkDrain("ref_sessions", "complete")(
+        sessionCounts(eventsStream(spark, TestSpark.sf))
+          .select(col("user_id"),
+            col("session_window.start").as("session_start"),
+            col("session_window.end").as("session_end"), col("n_events"))))
+    check(runWindowedBatch(spark, TestSpark.sf),
+      memorySinkDrain("ref_windowed", "complete")(
+        windowedCounts(eventsStream(spark, TestSpark.sf))
+          .select(col("window.start").as("window_start"),
+            col("event_type"), col("n"), col("sum_value"))))
+  }
+
+  test("drain restores its scoped settings and removes its checkpoint, " +
+      "also when the drain throws") {
+    import streaming.StreamingPipeline.{drain, syntheticStream}
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    try {
+      val before = keys.map(spark.conf.getOption)
+      assert(before(1).isEmpty)
+      def unchanged[T](body: => T): T = {
+        val dirs = checkpointDirs
+        val out = body
+        assert(keys.map(spark.conf.getOption) == before)
+        assert(checkpointDirs.subsetOf(dirs), "checkpoint dir left behind")
+        out
+      }
+      val ok = unchanged(drain(spark, "append")(syntheticStream(spark, 100, 50)))
+      assert(ok.count() == 100L)
+      // fails inside a micro-batch: awaitTermination rethrows
+      val failed = unchanged(intercept[
+          org.apache.spark.sql.streaming.StreamingQueryException] {
+        drain(spark, "append")(syntheticStream(spark, 100, 50)
+          .withColumn("boom", raise_error(lit("drain-test failure"))))
+      })
+      assert(failed.getMessage.contains("drain-test failure"))
+      // fails at start(): a batch frame cannot be written as a stream
+      unchanged(intercept[org.apache.spark.sql.AnalysisException] {
+        drain(spark, "complete")(spark.range(3).toDF())
+      })
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  test("a drain with no input returns an empty frame with the query's schema") {
+    import streaming.StreamingPipeline.{drain, syntheticStream}
+    val query = syntheticStream(spark, 0, 100).groupBy(col("event_type")).count()
+    val out = drain(spark, "complete")(query)
+    assert(out.sparkSession eq spark)
+    assert(out.schema == query.schema)
+    assert(out.isEmpty)
   }
 }
