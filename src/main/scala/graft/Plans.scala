@@ -50,10 +50,11 @@ object Plans {
     "q_synth_source" -> ("custom DSv2 scan: id-range filter pushed INTO " +
       "generation (range=[25000,75000) in the scan node), pruned " +
       "ReadSchema, sliced partitions"),
-    "q_pagerank" -> ("3 fixed-point rounds as ONE declarative plan; " +
-      "repeated edges/deg subtrees dedup via ReusedExchange at runtime"),
-    "q_minhash_neutral" -> ("explode-once signature build: shingle scan " +
-      "feeds 16 salted hashes into one map-side-combining hash " +
+    "q_pagerank" -> ("3 fixed-point rounds as ONE declarative plan over " +
+      "an edge list pinned once (an eager localCheckpoint): every " +
+      "edges/deg reference reads the pin, lineitem is scanned once"),
+    "q_minhash_neutral" -> ("one native signature kernel per document " +
+      "(shingle, md5, 16 lanes, min) feeds an elementwise-min hash " +
       "aggregate; banded candidates join on the signature slice itself"),
     "q_zorder_range" -> ("2-D box query over the z-order layout key: a " +
       "sargable zval BETWEEN corner-codes range + exact box residual — " +
@@ -64,9 +65,10 @@ object Plans {
     "q_bitmap_distinct" -> ("exact distinct via 32-bit bitmap words: " +
       "bit_or and popcount-sum are both map-side-combining monoids, so " +
       "|users|/32 words shuffle instead of |events| ids"),
-    "q_bfs_hops" -> ("3 BFS rounds as one declarative plan over packed " +
-      "long node ids; only settled distances flow through each " +
-      "join+min-agg round"),
+    "q_bfs_hops" -> ("3 linear BFS rounds over packed long node ids and " +
+      "a pair list pinned once: each round is one join of the step " +
+      "relation (edges plus zero-weight self-loops) with the previous " +
+      "round's distances and one min-agg"),
     "q_pipeline_e2e" -> ("quality gate → lang filter → dedup → sample " +
       "fused into one plan: filters reach the scan, dedup is one " +
       "digest-grain aggregate + semi join, sample is a stateless " +

@@ -864,9 +864,9 @@ object Dedup {
     * hash replaced by arithmetic BOTH engines compute bit-identically,
     * making the full approximate-dedup path DuckDB-oracle-checkable
     * (the trick that oracled SRP-LSH and q_rolling_fp):
-    *  - base shingle hash: first 8 md5 hex chars as a bigint
-    *    (`conv(substr(md5(s),1,8),16,10)` ≡ DuckDB
-    *    `('0x'||substr(md5(s),1,8))::BIGINT`), reduced mod P = 2³¹−1;
+    *  - base shingle hash: the first 4 md5 bytes as an unsigned
+    *    big-endian int (≡ DuckDB `('0x'||substr(md5(s),1,8))::BIGINT`),
+    *    reduced mod P = 2³¹−1;
     *  - k universal-family hashes h_i(x) = (a_i·x + b_i) mod P with
     *    constants from one fixed LCG (products < 2⁶² — no overflow in
     *    either engine, ANSI-safe);
@@ -874,17 +874,24 @@ object Dedup {
     *    equality join — no band hash needed);
     *  - est. Jaccard = agreement/k with k a power of two, so the double
     *    division is exact.
-    * Scale shape is identical to [[minhashLshPairs]]; the md5 base hash
-    * costs ~2× xxhash64, which is why the fast variant stays the default
-    * and this one exists to put the whole minhash path under the oracle. */
+    * Both hashes run inside one native kernel per document
+    * ([[NeutralMinHash.signature]]). Scale shape is identical to
+    * [[minhashLshPairs]]; the md5 base hash costs ~2× xxhash64, which is
+    * why the fast variant stays the default and this one exists to put
+    * the whole minhash path under the oracle. */
   object NeutralMinHash {
-    val P = 2147483647L // 2^31 - 1, Mersenne prime
+    import graft.functions.NeutralMinHashSignature
+    val P: Long = NeutralMinHashSignature.P
     /** Fixed LCG constants (a_i odd-ish nonzero, b_i arbitrary) — embedded
       * identically in the Spark plan and the generated oracle SQL. */
-    def a(i: Int): Long = (2654435761L * (i + 1) + 1) % P
-    def b(i: Int): Long = (40503L * (i + 1) * (i + 1) + 7) % P
-    def baseHash(s: Column): Column =
-      conv(substring(md5(s), 1, 8), 16, 10).cast("long") % P
+    def a(i: Int): Long = NeutralMinHashSignature.a(i)
+    def b(i: Int): Long = NeutralMinHashSignature.b(i)
+
+    /** The k lane minima over the row's distinct word n-gram shingles
+      * (null for null text) — the native
+      * [[graft.functions.NeutralMinHashSignature]] kernel. */
+    def signature(text: Column, k: Int = 16, n: Int = 3): Column =
+      NeutralMinHashSignature.signature(text, k, n)
 
     /** Shared CTE prefix (tok → … → bands) — the SQL twin of
       * [[neutralBands]], used by every neutral-minhash oracle. */
@@ -952,30 +959,33 @@ object Dedup {
          ORDER BY i.doc_id"""
   }
 
-  /** Engine-neutral banded signatures: (doc_id, sig, band, band_key) —
-    * the shared LSH index both [[minhashLshPairsNeutral]] and
-    * [[incrementalDedup]] build. */
   /** Engine-neutral minhash signature at an ARBITRARY grain: one
     * (grain, sig[k]) row per distinct grain value — the shared chain
     * behind [[neutralBands]] (doc grain) and [[sourceSignatures]]
     * (source grain), so the "same constants, same shingling"
-    * cross-operator contract lives in exactly one place. */
-  private def signaturesBy(documents: DataFrame, grain: String,
+    * cross-operator contract lives in exactly one place.
+    *
+    * One [[NeutralMinHash.signature]] kernel call per row, then an
+    * elementwise min per grain value: min is associative, so repeated
+    * doc ids and the source grain fold exactly as the per-shingle min
+    * did. Rows with null text drop out (they have no shingles).
+    * Hashing per document, not per exploded shingle row, keeps the md5
+    * and the k lanes out of ANSI-checked per-row arithmetic (265k
+    * shingle rows at sf0.1); NeutralMinHashSpec keeps the composed
+    * per-shingle chain as the reference. */
+  private[graft] def signaturesBy(documents: DataFrame, grain: String,
       k: Int, n: Int): DataFrame = {
-    import NeutralMinHash.{P, a, b, baseHash}
-    val exploded = documents
-      .select(col(grain), explode(shingles(col("text"), n)).as("s"))
-    val x = baseHash(col("s"))
-    val hashed = exploded.select(
-      col(grain) +: (0 until k).map(i =>
-        ((lit(a(i)) * x + lit(b(i))) % P).as(s"h$i")): _*)
-    hashed.groupBy(col(grain))
-      .agg(min(col("h0")).as("h0"),
-        (1 until k).map(i => min(col(s"h$i")).as(s"h$i")): _*)
+    val sig = col("sig")
+    documents.filter(col("text").isNotNull)
       .select(col(grain),
-        array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
+        NeutralMinHash.signature(col("text"), k, n).as("sig"))
+      .groupBy(col(grain))
+      .agg(array((0 until k).map(i => min(sig(i))): _*).as("sig"))
   }
 
+  /** Engine-neutral banded signatures: (doc_id, sig, band, band_key) —
+    * the shared LSH index both [[minhashLshPairsNeutral]] and
+    * [[incrementalDedup]] build. */
   def neutralBands(documents: DataFrame, k: Int = 16, bands: Int = 4,
       n: Int = 3): DataFrame = {
     require(k % bands == 0, "bands must divide k")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.graftshim.Shim
@@ -85,6 +85,109 @@ object WordShingles {
 
   def wordShingles(text: Column, n: Int): Column =
     Shim.column(WordShingles(Shim.expression(text), n))
+}
+
+/** Native engine-neutral MinHash signature: the k lane minima over a
+  * document's word n-gram shingles in one compiled pass, behind a single
+  * static call that whole-stage codegen inlines (the [[WordShingles]]
+  * idiom). Per shingle (the [[WordShingles]] tokenization: split on the
+  * single space, empty tokens kept, fewer than n tokens → the whole
+  * text):
+  *  - x = the first 4 bytes of MD5 over the shingle's UTF-8 bytes, read
+  *    big-endian and unsigned, mod P = 2³¹−1 — DuckDB's
+  *    `('0x'||substr(md5(s),1,8))::BIGINT % P`;
+  *  - lane i = (a_i·x + b_i) mod P, which cannot overflow (x, a_i,
+  *    b_i < P < 2³¹).
+  * Shingles are hashed straight out of the input's bytes (a shingle is
+  * a byte range of a valid UTF-8 text); duplicates need no dedup, since
+  * min is idempotent. NeutralMinHashSpec checks it against the composed
+  * explode → md5 → hex → conv → lanes → min chain. */
+case class NeutralMinHashSignature(child: Expression, k: Int, n: Int)
+    extends UnaryExpression {
+  require(k >= 1 && n >= 1, "signature length and shingle width must be >= 1")
+  @transient private lazy val laneA =
+    Array.tabulate(k)(NeutralMinHashSignature.a)
+  @transient private lazy val laneB =
+    Array.tabulate(k)(NeutralMinHashSignature.b)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"neutral_minhash requires a string input, got $t")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "neutral_minhash"
+
+  override def nullSafeEval(input: Any): Any =
+    NeutralMinHashSignature.compute(input.asInstanceOf[UTF8String], n,
+      laneA, laneB)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = ctx.addReferenceObj("laneA", laneA, "long[]")
+    val b = ctx.addReferenceObj("laneB", laneB, "long[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.NeutralMinHashSignature.compute(" +
+        s"$c, $n, $a, $b);")
+  }
+
+  override protected def withNewChildInternal(c: Expression)
+      : NeutralMinHashSignature = copy(child = c)
+}
+
+object NeutralMinHashSignature {
+  val P = 2147483647L // 2^31 - 1, Mersenne prime
+  /** Fixed LCG lane constants — embedded identically in the kernel and
+    * the generated oracle SQL. */
+  def a(i: Int): Long = (2654435761L * (i + 1) + 1) % P
+  def b(i: Int): Long = (40503L * (i + 1) * (i + 1) + 7) % P
+
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  def compute(text: UTF8String, n: Int, a: Array[Long],
+      b: Array[Long]): ArrayData = {
+    // Malformed input decodes to U+FFFD in the reference's String form;
+    // re-encode it so the byte ranges hash the same bytes.
+    val bytes = (if (text.isValid) text
+      else UTF8String.fromString(text.toString)).getBytes
+    val len = bytes.length
+    val md = md5.get()
+    val digest = new Array[Byte](16)
+    val mins = Array.fill(a.length)(Long.MaxValue)
+    def fold(from: Int, until: Int): Unit = {
+      md.update(bytes, from, until - from)
+      md.digest(digest, 0, 16)
+      val x = ((digest(0) & 0xffL) << 24 | (digest(1) & 0xffL) << 16 |
+        (digest(2) & 0xffL) << 8 | (digest(3) & 0xffL)) % P
+      var i = 0
+      while (i < mins.length) {
+        val h = (a(i) * x + b(i)) % P
+        if (h < mins(i)) mins(i) = h
+        i += 1
+      }
+    }
+    // ends(j) = the byte offset just past token j
+    var tokens = 1
+    var i = 0
+    while (i < len) { if (bytes(i) == ' ') tokens += 1; i += 1 }
+    if (tokens < n) fold(0, len)
+    else {
+      val ends = new Array[Int](tokens)
+      var j = 0
+      i = 0
+      while (i < len) { if (bytes(i) == ' ') { ends(j) = i; j += 1 }; i += 1 }
+      ends(tokens - 1) = len
+      var s = 0
+      while (s + n <= tokens) {
+        fold(if (s == 0) 0 else ends(s - 1) + 1, ends(s + n - 1))
+        s += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+
+  def signature(text: Column, k: Int, n: Int): Column =
+    Shim.column(NeutralMinHashSignature(Shim.expression(text), k, n))
 }
 
 /** Native Jaro–Winkler similarity (Winkler 1990): the edit-distance

@@ -634,7 +634,8 @@ object Extended {
       round(col("p_retailprice") * 100).cast("long"))
     val cand = priced.groupBy(col("price_cents"))
       .agg(max(col("p_size")).as("best_size"))
-    // strictly-cheaper frame: RANGE upper bound -1 on the cent grid
+    // strictly-cheaper frame: RANGE upper bound -1 on the cent grid.
+    // Unpartitioned window (one task): one row per distinct price cent.
     val cheaper = Window.orderBy(col("price_cents"))
       .rangeBetween(Window.unboundedPreceding, -1)
     val frontier = cand
@@ -845,6 +846,7 @@ object Extended {
       .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long"))
         .as("cents"))
+      // unpartitioned window (one task): one row per calendar month
       .withColumn("prev_cents",
         lag(col("cents"), 1).over(Window.orderBy(col("month"))))
       .withColumn("growth",

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over fixture-derived graphs. Companion to
   * Pipeline.dedupClusters (connected components): where CC iterates to
@@ -16,6 +17,29 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** The capped part↔supplier graph [[pagerank]] and [[bfsHops]] walk:
+    * the deduplicated (p, s) pair list `e0` and both directions of every
+    * pair as packed-long (src, dst) edges — 2p for parts, 2s+1 for
+    * suppliers. `e0` is materialized ONCE with an eager serialized
+    * localCheckpoint (SCALING.md's corpus-scale pin from the 256× graph
+    * gate, where this list holds 145M pairs), so lineitem is scanned and
+    * deduplicated once however often the rounds reference the graph.
+    * The pin is a LogicalRDD inside the returned frames: the
+    * ContextCleaner releases it once they are garbage, so it lives
+    * exactly as long as the result that reads it. */
+  private def bipartite(lineitem: DataFrame, partCap: Long)
+      : (DataFrame, DataFrame) = {
+    val e0 = lineitem.filter(col("l_partkey") <= partCap)
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
+      .distinct()
+      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val edges = e0.select((col("p") * 2).as("src"),
+        (col("s") * 2 + 1).as("dst"))
+      .unionAll(e0.select((col("s") * 2 + 1).as("src"),
+        (col("p") * 2).as("dst")))
+    (e0, edges)
+  }
+
   /** PageRank (damping 0.85, 3 rounds) over the bipartite
     * part↔supplier graph of lineitem (who-supplies-what; part degree =
     * supplier diversity). Undirected: each edge contributes both ways,
@@ -27,9 +51,10 @@ object Graph {
     *   contrib(in-neighbors)) div 1000000.
     *
     * Scale: per round = one shuffle join on src + one agg on dst — the
-    * textbook distributed PageRank. The repeated edges/deg subtrees
-    * stay unpersisted: Catalyst plans them once and runtime dedups via
-    * ReusedExchange. `checkpointEvery` = k > 0 cuts the rank lineage
+    * textbook distributed PageRank. The edge list is pinned once
+    * ([[bipartite]]): ReusedExchange does not fold every edges/deg
+    * reference (unpinned, the final plan at sf0.1 read lineitem 3
+    * times). `checkpointEvery` = k > 0 cuts the rank lineage
     * with an eager localCheckpoint every k rounds — the 100-TB knob for
     * deep iteration counts, where the unrolled plan (one join+agg
     * subtree per round) would dominate analysis/planning; at the
@@ -48,13 +73,7 @@ object Graph {
     // LABEL's lexicographic order ("p10" < "p2"), which the oracle
     // replays; sorting by nid would cut ties at the top-K boundary
     // differently.
-    val e0 = lineitem.filter(col("l_partkey") <= partCap)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    val edges = e0.select((col("p") * 2).as("src"),
-        (col("s") * 2 + 1).as("dst"))
-      .unionAll(e0.select((col("s") * 2 + 1).as("src"),
-        (col("p") * 2).as("dst")))
+    val (_, edges) = bipartite(lineitem, partCap)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val withDeg = edges.join(deg, "src")
     var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
@@ -238,16 +257,28 @@ object Graph {
   /** Multi-source BFS: minimum hop distance from the seed parts over
     * the same bipartite part↔supplier graph as [[pagerank]], a FIXED
     * number of rounds so the whole computation is one declarative plan.
-    * Per round: propagate (frontier ⋈ edges, +1) then fold into the
-    * running distances with a min-agg — the iterative-relational
-    * shortest-path shape. min() is idempotent, so re-relaxing settled
-    * nodes is harmless (no frontier bookkeeping needed) and the
-    * per-round cost is one shuffle join + one agg, same as a PageRank
-    * round. `checkpointEvery` = k > 0 localCheckpoints the distance
-    * relation every k rounds (the pagerank knob — lineage control for
-    * deep/diameter-bound iteration at 100 TB; default off at 3 fixed
-    * rounds); a production run would also stop when a round changes
-    * nothing. */
+    * The pair list is pinned once ([[bipartite]]), so lineitem is
+    * scanned once, not once per reference.
+    *
+    * Rounds are LINEAR: the step relation is the directed edge list
+    * (weight 1) plus a zero-weight self-loop per seed, so
+    * `dist_i = min over (steps ⋈ dist_{i-1}) of (d + w)` names the
+    * previous round once — one join + one min-agg per round. The
+    * doubling form `min(dist_{i-1} ∪ edges ⋈ dist_{i-1})` names it
+    * twice, so its plan tree doubles each round. The two are equal
+    * with loops on the seeds alone: a
+    * seed keeps 0 through its loop, and any other node n with
+    * d(n) ≤ i is re-offered d(n) in round i by its predecessor on a
+    * shortest path (d = d(n) − 1, in dist_{i-1} by induction), while
+    * no step can offer less than the true distance. Loops on every
+    * node would give the same rows at the cost of a distinct over all
+    * edge sources (BfsLinearSpec pins the equality against the
+    * doubling form). min() is idempotent, so re-relaxing settled
+    * nodes is harmless (no frontier bookkeeping).
+    * `checkpointEvery` = k > 0 localCheckpoints the distance relation
+    * every k rounds (the pagerank knob — lineage control for deep
+    * iteration at 100 TB; default off at 3 fixed rounds); a production
+    * run would also stop when a round changes nothing. */
   def bfsHops(lineitem: DataFrame, partCap: Long = 2000,
       seedCap: Long = 3, iters: Int = 3,
       checkpointEvery: Int = 0, seedModulo: Long = 0): DataFrame = {
@@ -256,13 +287,7 @@ object Graph {
     // reconstructed only in the final tiny projection. At 100 TB a
     // numeric node id is the difference between hashing longs and
     // hashing strings in every round's shuffle.
-    val e0 = lineitem.filter(col("l_partkey") <= partCap)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    val edges = e0.select((col("p") * 2).as("src"),
-        (col("s") * 2 + 1).as("dst"))
-      .unionAll(e0.select((col("s") * 2 + 1).as("src"),
-        (col("p") * 2).as("dst")))
+    val (e0, edges) = bipartite(lineitem, partCap)
     // Only settled (reached) nodes flow through the rounds: unreached
     // nodes would just carry null distances through every aggregation.
     // `seedModulo` > 0 seeds `p % seedModulo <= seedCap` instead of
@@ -271,16 +296,16 @@ object Graph {
     // and certify a base-sized frontier on a 256× graph.
     val seedPred = if (seedModulo > 0) col("p") % seedModulo <= seedCap
       else col("p") <= seedCap
-    var dist = e0.filter(seedPred)
-      .select((col("p") * 2).as("nid"))
+    val seeds = e0.filter(seedPred).select((col("p") * 2).as("nid"))
       .distinct()
-      .select(col("nid"), lit(0L).as("d"))
+    val steps = edges.select(col("src"), col("dst"), lit(1L).as("w"))
+      .unionAll(seeds.select(col("nid").as("src"), col("nid").as("dst"),
+        lit(0L).as("w")))
+    var dist = seeds.select(col("nid"), lit(0L).as("d"))
     for (i <- 1 to iters) {
-      val prop = edges.join(dist, col("src") === col("nid"))
-        .select(col("dst").as("nid"), (col("d") + lit(1L)).as("d"))
-      dist = dist.unionAll(prop)
-        .groupBy(col("nid"))
-        .agg(min(col("d")).as("d"))
+      dist = steps.join(dist, col("src") === col("nid"))
+        .groupBy(col("dst").as("nid"))
+        .agg(min(col("d") + col("w")).as("d"))
       if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
         dist = dist.localCheckpoint(true)
     }

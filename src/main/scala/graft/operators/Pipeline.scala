@@ -218,6 +218,7 @@ object Pipeline {
       .withColumn("iscore",
         expr("n_distinct * 1000000 div n_tokens"))
       .withColumn("bucket", expr("iscore div 1000"))
+    // Unpartitioned window (one task): ≤ 1001 score-bucket rows.
     val wb = Window.orderBy(col("bucket").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val bcum = perDoc.groupBy(col("bucket"))
@@ -782,6 +783,8 @@ object Pipeline {
         nTokens.as("n_tokens"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("toks"))
+    // Unpartitioned window (one task): ≤ 11 rows, one per floor(ttr·10)
+    // bin with ttr in (0, 1].
     val w = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     binned
@@ -1076,6 +1079,8 @@ object Pipeline {
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("t"))
       .groupBy(col("source")).agg(sum(col("t")).as("avail_tokens"))
+    // Unpartitioned windows (one task, here and `desc` below): S rows,
+    // one per source.
     val asc = Window.orderBy(col("avail_tokens"), col("source"))
     val marked = avail
       .withColumn("granted", coalesce(sum(col("avail_tokens"))
@@ -1090,7 +1095,7 @@ object Pipeline {
         .otherwise(lit(0L))).as("s_k"),
       count(when(col("saturated"), lit(1))).as("k"),
       count(lit(1)).as("n"))
-    val desc = Window.orderBy(col("avail_tokens").desc, col("source"))
+    val desc = Window.orderBy(col("avail_tokens").desc, col("source")) // S rows
     // the saturated/unsaturated boundary always carries a STRICT avail
     // increase (equal avails share a saturation status — the telescoped
     // difference is 0), so in desc order the unsaturated sources are

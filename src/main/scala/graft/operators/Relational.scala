@@ -172,6 +172,7 @@ object Relational {
       .withColumn("_bin", when(col("_hi") === col("_lo"), lit(0L))
         .otherwise(floor((col("v") - col("_lo")) * lit(256.0) /
           (col("_hi") - col("_lo"))).cast("long")))
+    // unpartitioned window (one task): ≤ 257 rows, _bin in [0, 256]
     val bases = binned.groupBy(col("_bin")).agg(sum(col("c")).as("_bc"))
       .withColumn("_base", coalesce(sum(col("_bc")).over(
         Window.orderBy(col("_bin"))
@@ -265,6 +266,8 @@ object Relational {
     val cnt = sb.groupBy(col("_bkt")).agg(count(lit(1)).as("_m"))
     val rng = cnt.agg(min(col("_bkt")).as("_lo"), max(col("_bkt")).as("_hi"))
     val grid = rng.select(explode(sequence(col("_lo"), col("_hi"))).as("_bkt"))
+    // unpartitioned window (one task): one row per grid bucket,
+    // (max − min dim value) / bucketWidth + 1 rows
     val below = grid.join(cnt, Seq("_bkt"), "left")
       .select(col("_bkt"), coalesce(col("_m"), lit(0L)).as("_m"))
       .withColumn("_base", coalesce(sum(col("_m")).over(

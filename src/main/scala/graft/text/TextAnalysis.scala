@@ -894,6 +894,8 @@ object TextAnalysis {
       .agg(
         sum(when(col("source") === srcA, 1L).otherwise(0L)).as("na"),
         sum(when(col("source") === srcB, 1L).otherwise(0L)).as("nb"))
+    // Unpartitioned windows (one task): one row per distinct n_chars,
+    // bounded by the document-length domain, not by corpus size.
     val cum = Window.orderBy(col("n_chars"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val g = byLen
@@ -959,6 +961,7 @@ object TextAnalysis {
       .agg(min(col("doc_id")).as("first_doc"))
       .groupBy(expr(s"first_doc div $bucketSize").as("bucket"))
       .agg(count(lit(1)).as("new_types"))
+    // Unpartitioned window (one task): n_docs / bucketSize bucket rows.
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))
     documents
       .select(expr(s"doc_id div $bucketSize").as("bucket"),
