@@ -69,12 +69,12 @@ object Bench {
     val calBefore = calibrate()
     // A failed query records a NEGATIVE elapsed time (and lands in the
     // `errors` list) so a crash is never mistaken for a measurement.
-    val plan = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val plan = SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
     var calMid = -1.0
     val midpoint = plan.size / 2
     var totalCpu = 0.0
-    val results = plan.zipWithIndex.map { case ((name, fn), i) =>
+    val results = plan.zipWithIndex.map { case (Query(name, fn, _, _), i) =>
       if (i == midpoint && plan.size > 1) calMid = calibrate()
       val c0 = cpuNanos()
       val t0 = System.nanoTime()
@@ -83,7 +83,11 @@ object Bench {
       // must CRASH the bench — timings from a JVM that has already
       // OOM'd are garbage and must not masquerade as a measurement.
       val ok = try { fn(spark, sfDir).count(); true }
-      catch { case scala.util.control.NonFatal(_) => false }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       totalCpu += (cpuNanos() - c0) / 1e9
       (name, if (ok) dt else -dt, ok)

@@ -33,6 +33,13 @@ object Cols {
     s"CAST(sum(CAST($x AS DECIMAL(28,$scale))) AS DOUBLE)"
   def sqlDecAvg(x: String, scale: Int = 6): String =
     s"CAST(sum(CAST($x AS DECIMAL(28,$scale))) AS DOUBLE) / CAST(count($x) AS DOUBLE)"
+  /** Cosine of two `n`-element DOUBLE[] lists as one parenthesized
+    * DuckDB expression, dot / (|a| * |b|); callers round it themselves. */
+  def sqlCosine(a: String, b: String, n: Int = 64): String = {
+    def dot(x: String, y: String): String =
+      s"list_sum(list_transform(range(1, ${n + 1}), j -> $x[j] * $y[j]))"
+    s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
+  }
 
   /** Global top-k WITH dense 1..k ranks, window-free: TakeOrderedAndProject
     * selects the k survivors (`scoreCol` desc, `tieCol` asc), then each

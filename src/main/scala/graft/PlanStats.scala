@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Whole-catalog physical-plan statistics (generated → PLANSTATS.md).
   *
   * PLANS.md shows curated full plans with rationale; this tool sweeps
-  * EVERY query in `SparkEntry.queries` and tabulates the shuffle-
+  * EVERY query in `SparkEntry.registry` and tabulates the shuffle-
   * relevant node counts, so the "minimize shuffles / broadcast the
   * small side / stay inside codegen" claims are auditable across the
   * whole surface, not just the highlighted examples. Counting is
@@ -27,8 +27,8 @@ object PlanStats {
     def countOf(s: String, pat: String): Int =
       pat.r.findAllMatchIn(s).length
 
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+    val rows = SparkEntry.registry.sortBy(_.name).map { q =>
+      val plan = q.build(spark, sfDir).queryExecution.executedPlan.toString
       // a ReusedExchange line EMBEDS the referenced child Exchange's
       // text (no simpleString override on Spark 4.1.2), so count real
       // exchanges only on non-reuse lines to avoid double-counting
@@ -41,7 +41,7 @@ object PlanStats {
       val bhj = countOf(plan, """BroadcastHashJoin""")
       val smj = countOf(plan, """SortMergeJoin""")
       val cart = countOf(plan, """CartesianProduct""")
-      (name, shuffle, reused, bcast, bhj, smj, cart)
+      (q.name, shuffle, reused, bcast, bhj, smj, cart)
     }
 
     val sb = new StringBuilder

@@ -1,13 +1,14 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.SparkSession
+/** Correctness dump: each query of SparkEntry.registry → parquet, plus
+  * its oracle SQL in oracle_sql.json, for the DuckDB compare that
+  * tools/check_oracle.py replicates. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Session.builder.getOrCreate()
-    new java.io.File(outDir).mkdirs()
     // Fixture-drift canary: fail LOUDLY with the drifted column's name
     // before any query runs (round 5: a regenerated events.ts surfaced as
     // 62 opaque analysis errors). Non-fatal — queries on undrifted tables
@@ -21,40 +22,56 @@ object Verify {
     // dump to the named queries (driver never sets it — full run).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // a failing query is named and skipped so every other output is
-    // still written; the run then exits 1 (after oracle_sql.json)
-    val failed = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.registry.filter(q => only.forall(_.contains(q.name))))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(
         s"[verify] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
       sys.exit(1)
     }
+  }
+
+  /** Writes each query's result to `<outDir>/<name>` (one parquet file)
+    * and the oracle SQL of `qs` to `<outDir>/oracle_sql.json`. A failing
+    * query is named and skipped so every other output is still written;
+    * returns the failed names. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      qs: Seq[Query]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = qs.flatMap { q =>
+      val t0 = System.nanoTime()
+      try {
+        q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        println(f"[verify] ${q.name} sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        Some(q.name)
+      }
+    }
+    val json = qs.flatMap(q => q.oracle.map(sql =>
+      "\"" + jsonEscape(q.name) + "\": \"" + jsonEscape(sql) + "\""))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.mkString("{", ",", "}"))
+    failed
+  }
+
+  /** JSON string-body escape: backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in hand-written SQL would otherwise make the
+    * compare's json.load fail and silently zero the correctness check. */
+  def jsonEscape(s: String): String = {
+    val sb = new StringBuilder
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.toString
   }
 }

@@ -828,18 +828,6 @@ object Dedup {
        FROM dirs WHERE containment >= $threshold
        ORDER BY doc_id, container_id"""
 
-  /** MinHash signature: k independent hash functions realized as salted
-    * xxhash64 (`xxhash64(salt_i, s)`) with min over shingles — no 64-bit
-    * arithmetic, so it is safe under ANSI mode (Spark 4 default) and each
-    * salt gives an independent permutation approximation. Returns an
-    * array<long> column of length k. */
-  def minhashSignature(text: Column, k: Int = 32, n: Int = 3): Column = {
-    val sh = shingles(text, n)
-    array((0 until k).map { i =>
-      array_min(transform(sh, s => xxhash64(lit(s"mh$i"), s)))
-    }: _*)
-  }
-
   /** MinHash signatures via explode + min-aggregation: shingles are
     * materialized ONCE per document, each shingle row gets k salted
     * hashes (cheap codegen'd xxhash64), and the k mins are collected by a

@@ -19,11 +19,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * any group/time rollup by MERGING sketches — no second pass over data.
   *
   * Two aggregates share the buffer logic:
-  *  - [[KllQuantiles]] evals to the requested quantile values directly;
   *  - [[KllSketchBytes]] evals to the serialized sketch, so a rollup
   *    table can store sketches and a later query can union them
-  *    ([[QuantileSketch.kllMerge]]) — the mergeability is what makes the
-  *    pattern scale (same shape as hll_union_agg).
+  *    ([[QuantileSketch.kllUnionQuantiles]]) — the mergeability is what
+  *    makes the pattern scale (same shape as hll_union_agg);
+  *  - [[KllUnionQuantiles]] is that union, evaluating to quantiles.
   *
   * Error: KLL with k=200 guarantees ~1.65% normalized rank error
   * (single-sided, 99% confidence) REGARDLESS of input size or merge
@@ -56,27 +56,6 @@ abstract class KllAggBase[T]
 
   override def nullable: Boolean = false
   override def children: Seq[Expression] = Seq(child)
-}
-
-/** Eval to the quantile values at the given ranks (INCLUSIVE search — the
-  * same convention as exact percentile_cont's right-continuous CDF). */
-case class KllQuantiles(child: Expression, ranks: Seq[Double], k: Int = 200,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends KllAggBase[Any] {
-
-  override def eval(buf: KllDoublesSketch): Any =
-    if (buf.isEmpty) new GenericArrayData(ranks.map(_ => Double.NaN).toArray)
-    else new GenericArrayData(
-      ranks.map(r => buf.getQuantile(r, QuantileSearchCriteria.INCLUSIVE)).toArray)
-
-  override def dataType: DataType = ArrayType(DoubleType)
-  override def withNewMutableAggBufferOffset(offset: Int): KllQuantiles =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): KllQuantiles =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
 }
 
 /** Eval to the serialized sketch (for sketch-rollup tables). */
@@ -127,11 +106,6 @@ case class KllUnionQuantiles(child: Expression, ranks: Seq[Double], k: Int = 200
 }
 
 object QuantileSketch {
-  /** Per-group approximate quantiles of a double column. */
-  def kllQuantiles(c: Column, ranks: Seq[Double], k: Int = 200): Column =
-    Shim.column(KllQuantiles(Shim.expression(c), ranks, k)
-      .toAggregateExpression(isDistinct = false))
-
   /** Per-group serialized KLL sketch (store in a rollup table). */
   def kllSketch(c: Column, k: Int = 200): Column =
     Shim.column(KllSketchBytes(Shim.expression(c), k)

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import graft.Verify.jsonEscape
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -171,20 +172,6 @@ class JsonlDataWriter(schema: StructType, path: String, partitionId: Int,
       java.nio.charset.StandardCharsets.UTF_8))
   private var rows = 0L
 
-  private def esc(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
   override def write(row: InternalRow): Unit = {
     val parts = schema.fields.zipWithIndex.map { case (f, i) =>
       val v =
@@ -198,7 +185,7 @@ class JsonlDataWriter(schema: StructType, path: String, partitionId: Int,
             // the read-back parser null the ENTIRE row as corrupt
             if (java.lang.Double.isFinite(d)) d.toString else "null"
           case BooleanType => row.getBoolean(i).toString
-          case StringType => "\"" + esc(row.getUTF8String(i).toString) + "\""
+          case StringType => "\"" + jsonEscape(row.getUTF8String(i).toString) + "\""
           // ISO-8601 with full micros — Spark's DEFAULT JSON timestamp
           // parser round-trips this losslessly. A bare epoch-micros
           // integer would NOT: the JSON reader interprets a numeric
@@ -219,7 +206,7 @@ class JsonlDataWriter(schema: StructType, path: String, partitionId: Int,
             throw new UnsupportedOperationException(
               s"AuditedJsonlSink: unsupported type $other for ${f.name}")
         }
-      "\"" + esc(f.name) + "\":" + v
+      "\"" + jsonEscape(f.name) + "\":" + v
     }
     out.write(parts.mkString("{", ",", "}"))
     out.write("\n")

@@ -58,13 +58,6 @@ object StreamingPipeline {
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
 
-  /** Sliding-window variant (1 hour window every 15 minutes). */
-  def slidingCounts(stream: DataFrame): DataFrame =
-    validated(stream)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-
   /** Session-window variant (30 min gap), the streaming form of
     * EventsPipeline.sessionize. */
   def sessionCounts(stream: DataFrame): DataFrame =

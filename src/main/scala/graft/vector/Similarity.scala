@@ -822,10 +822,6 @@ object Similarity {
     * rank tail over the final round's lists and means. */
   def ivfTrainedOracleSql(rounds: Int = 2, nQueries: Int = 5,
       k: Int = 10, nprobe: Int = 1): String = {
-    def cosSql(a: String, b: String): String =
-      s"""list_sum(list_transform(range(1, 65), j -> $a[j] * $b[j]))
-            / (sqrt(list_sum(list_transform(range(1, 65), j -> $a[j] * $a[j])))
-               * sqrt(list_sum(list_transform(range(1, 65), j -> $b[j] * $b[j]))))"""
     // lloydCtes(rounds + 1): asg${rounds+1} is the serve-time
     // assignment against the FINAL means c$rounds (the same index
     // build trainQuantizer does); the extra c${rounds+1} CTE is never
@@ -839,7 +835,7 @@ object Similarity {
                ORDER BY ${d2Sql("qe", "c.c")} ASC, c.cluster) AS rn
            FROM q CROSS JOIN c$rounds c) WHERE rn <= $nprobe),
        cand AS (SELECT probe.query_id, a.vec_id,
-           round(${cosSql("qe", "a.e")}, 6) AS cos
+           round(${graft.Cols.sqlCosine("qe", "a.e")}, 6) AS cos
          FROM asg${rounds + 1} a JOIN probe
            ON a.cluster = probe.probe_cluster
           AND a.vec_id <> probe.query_id),

@@ -15,15 +15,14 @@ class OperatorSpec extends AnyFunSuite {
     val mayBeEmpty = Set("q_anti_join", "q_except", "q_minhash_lsh",
       "q_simhash_pairs", "q_cosine_neardup", "q_jaccard_pairs",
       "q_jaccard_prefix")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n >= 0 && (mayBeEmpty(name) || n > 0), s"$name returned $n rows")
+    SparkEntry.registry.foreach { q =>
+      val n = q.build(spark, sf).count()
+      assert(n >= 0 && (mayBeEmpty(q.name) || n > 0),
+        s"${q.name} returned $n rows")
     }
   }
 
   test("oracle SQL exists for every SQL-expressible query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle for unknown queries: $missing")
     // rows-only queries (no oracle) are a CLOSED, documented set — each
     // is approximate/engine-native by design with an error-bound unit
     // test, and most have a fully-oracled neutral twin. Adding a query
@@ -36,10 +35,19 @@ class OperatorSpec extends AnyFunSuite {
       "q_theta_overlap",     // theta sketch set ops (SketchSpec bound)
       "q_minhash_lsh",       // xxhash64 bands (oracled twin: q_minhash_neutral)
       "q_simhash_pairs")     // xxhash64 64-bit (twin: q_simhash_neutral)
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val noOracle = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet
     assert(noOracle == rowsOnlyByDesign,
       s"undocumented rows-only queries: ${noOracle -- rowsOnlyByDesign}; " +
         s"stale allowlist entries: ${rowsOnlyByDesign -- noOracle}")
+  }
+
+  test("the registry rejects a repeated query name, naming it") {
+    val q = Query("q_twice", (s, dir) => Tables.load(s, dir, "region"), None)
+    val e = intercept[IllegalArgumentException](
+      Query.list(q, q.copy(oracle = Some("SELECT 1"))))
+    assert(e.getMessage.contains("q_twice"))
+    assert(Query.list(q, q.copy(name = "q_once")).map(_.name) ==
+      Seq("q_twice", "q_once"))
   }
 
   test("dedup weights: every doc weighted, each cluster contributes " +

@@ -17,14 +17,13 @@ class PlanAuditSpec extends AnyFunSuite {
   private val cartesianAllowed = Set("q_cross_join")
 
   test("no query plans a CartesianProduct (except the intentional demo)") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // building the frame may run small driver-side jobs (scalar
-        // anchors, streaming drains, CC rounds) — at sf0.001 that is
-        // cheap, and it is exactly what the driver's Verify does
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct") &&
-          !cartesianAllowed.contains(name)) Some(name) else None
+    val offenders = SparkEntry.registry.sortBy(_.name).flatMap { q =>
+      // building the frame may run small driver-side jobs (scalar
+      // anchors, streaming drains, CC rounds) — at sf0.001 that is
+      // cheap, and it is exactly what Verify does
+      val plan = q.build(spark, sf).queryExecution.executedPlan.toString
+      if (plan.contains("CartesianProduct") &&
+        !cartesianAllowed.contains(q.name)) Some(q.name) else None
     }
     assert(offenders.isEmpty,
       s"CartesianProduct found in: ${offenders.mkString(", ")}")
@@ -91,13 +90,12 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("no corpus-scale unpartitioned window (bounded-grain allowlist only)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val hasGlobal = fn(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }.nonEmpty
-        if (hasGlobal && !globalWindowAllowed.contains(name)) Some(name)
-        else None
+    val offenders = SparkEntry.registry.sortBy(_.name).flatMap { q =>
+      val hasGlobal = q.build(spark, sf).queryExecution.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }.nonEmpty
+      if (hasGlobal && !globalWindowAllowed.contains(q.name)) Some(q.name)
+      else None
     }
     assert(offenders.isEmpty,
       s"unpartitioned Window found in: ${offenders.mkString(", ")}")

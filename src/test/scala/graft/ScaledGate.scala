@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** 64×-scale ORACLED correctness gate (builder tool, the ScalingProbe
@@ -324,37 +323,16 @@ object ScaledGate {
     Tables.checkContract(spark, tablesDir)
       .foreach(d => System.err.println(s"GATE SCHEMA DRIFT: $d"))
 
-    // ---- gate-only query/oracle variants ----
-    val qmap = SparkEntry.queries ++ Map[String,
-        (SparkSession, String) => DataFrame](
-      "q_label_prop_full" -> ((s, dir) => operators.Graph
-        .labelPropagation(Tables.load(s, dir, "lineitem"),
-          partCap = Long.MaxValue)))
-    val omap = SparkEntry.oracleSql ++ Map(
-      "q_label_prop_full" -> operators.Graph
-        .labelPropagationOracleSql(partCap = Long.MaxValue))
-
-    only.foreach { name =>
-      val t0 = System.nanoTime()
-      qmap(name)(spark, tablesDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      println(f"GATE ran $name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    }
-    // Verify's JSON escaping (control chars would break the compare
-    // script's json.load)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = only.filter(omap.contains)
-      .map(n => s"${q(n)}: ${q(omap(n))}").mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // ---- gate-only query/oracle variant ----
+    val labelPropFull = Query("q_label_prop_full",
+      (s, dir) => operators.Graph.labelPropagation(
+        Tables.load(s, dir, "lineitem"), partCap = Long.MaxValue),
+      Some(operators.Graph.labelPropagationOracleSql(partCap = Long.MaxValue)))
+    val byName = Query.list(SparkEntry.registry :+ labelPropFull: _*)
+      .map(q => q.name -> q).toMap
+    val failed = Verify.dump(spark, tablesDir, outDir, only.map(byName))
     println(s"GATE done: python3 tools/check_oracle.py $tablesDir $outDir")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }
