@@ -66,7 +66,7 @@ object SparkEntry {
             + round((x - list_min(e)) / (list_max(e) - list_min(e)) * 255)
               / 255.0 * (list_max(e) - list_min(e))) END AS r
          FROM v),
-       q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
+       ${V.querySetSql(5)},
        c AS (SELECT query_id, vec_id, e, qe,
           round(${Cols.sqlCosine("qe", "r")}, 6) AS coarse
          FROM rv CROSS JOIN q WHERE vec_id <> query_id),
@@ -74,67 +74,21 @@ object SparkEntry {
           row_number() OVER (PARTITION BY query_id
             ORDER BY coarse DESC, vec_id) AS crank
          FROM c),
-       ex AS (SELECT query_id, vec_id,
-          round(${Cols.sqlCosine("qe", "e")}, 6) AS cos
-         FROM cr WHERE crank <= 30),
-       r2 AS (SELECT query_id, vec_id, cos,
-          CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-         FROM ex)
-       SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-       FROM r2 WHERE rank <= 10 ORDER BY query_id, rank"""
-
-  private val knnBruteOracleSql: String =
-    """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-          FROM embeddings),
-       q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
-       c AS (SELECT query_id, vec_id,
-          round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i]))
-            / (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i] * qe[i])))
-               * sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i])))),
-            6) AS cos
-         FROM v CROSS JOIN q WHERE vec_id <> query_id),
-       r AS (SELECT query_id, vec_id, cos,
-          CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-         FROM c)
-       SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-       FROM r WHERE rank <= 10 ORDER BY query_id, rank"""
+       ${V.rankTailSql(
+         "(SELECT query_id, vec_id, qe, e FROM cr WHERE crank <= 30)", 10)}"""
 
   /** IVF oracle (exact-decimal centroids), parameterized by how many
     * nearest centroid lists each query probes. */
   private def ivfOracleSql(nprobe: Int): String =
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
-         dims AS (SELECT label, CAST(unnest(range(64)) AS INTEGER) AS pos,
-            unnest(e) AS x FROM v),
-         cent AS (SELECT label, pos,
-            CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-              / CAST(count(*) AS DOUBLE) AS m
-           FROM dims GROUP BY label, pos),
-         cvec AS (SELECT label, list(m ORDER BY pos) AS c
-           FROM cent GROUP BY label),
-         q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
-         probe AS (SELECT query_id, qe, label AS probe_label FROM (
-            SELECT q.query_id, q.qe, cvec.label,
-              row_number() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(range(1, 65), j -> qe[j] * c[j]))
-                  / (sqrt(list_sum(list_transform(range(1, 65), j -> qe[j] * qe[j])))
-                     * sqrt(list_sum(list_transform(range(1, 65), j -> c[j] * c[j]))))
-                DESC, cvec.label) AS r
-            FROM q CROSS JOIN cvec) WHERE r <= $nprobe),
-         c2 AS (SELECT query_id, v.vec_id,
-            round(list_sum(list_transform(range(1, 65), j -> qe[j] * e[j]))
-              / (sqrt(list_sum(list_transform(range(1, 65), j -> qe[j] * qe[j])))
-                 * sqrt(list_sum(list_transform(range(1, 65), j -> e[j] * e[j])))),
-              6) AS cos
+         cvec AS (${V.exactMeansSql("v", "label")}),
+         ${V.querySetSql(5)},
+         ${V.probeSql("cvec", "label", nprobe, V.cosDescSql)},
+         c2 AS (SELECT query_id, v.vec_id, qe, e
            FROM v JOIN probe
              ON v.label = probe.probe_label AND v.vec_id <> probe.query_id),
-         r2 AS (SELECT query_id, vec_id, cos,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM c2)
-         SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-         FROM r2 WHERE rank <= 10 ORDER BY query_id, rank"""
+         ${V.rankTailSql("c2", 10)}"""
 
   /** Product quantization: per-subspace exact-mean codebooks, max-sub-
     * cosine encode, ADC table-sum scan (exact decimal sums), exact
@@ -158,7 +112,7 @@ object SparkEntry {
               row_number() OVER (PARTITION BY subs.vec_id, subs.sub
                 ORDER BY ${Cols.sqlCosine("sv", "c", 8)} DESC, cb.code) AS r
             FROM subs JOIN cb ON subs.sub = cb.sub) WHERE r = 1),
-         q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
+         ${V.querySetSql(5)},
          qsubs AS (SELECT query_id, CAST(s AS INTEGER) AS sub,
             qe[s * 8 + 1 : s * 8 + 8] AS qs
            FROM q, (SELECT unnest(range(8)) AS s)),
@@ -183,15 +137,10 @@ object SparkEntry {
                   adc.vec_id) AS crank
             FROM adc JOIN qn ON adc.query_id = qn.query_id
             WHERE adc.vec_id <> adc.query_id) WHERE crank <= 100),
-         ex AS (SELECT coarse.query_id, coarse.vec_id,
-            round(${Cols.sqlCosine("qe", "e")}, 6) AS cos
+         ex AS (SELECT coarse.query_id, coarse.vec_id, qe, e
            FROM coarse JOIN v ON coarse.vec_id = v.vec_id
            JOIN q ON coarse.query_id = q.query_id),
-         r2 AS (SELECT query_id, vec_id, cos,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM ex)
-         SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-         FROM r2 WHERE rank <= 10 ORDER BY query_id, rank"""
+         ${V.rankTailSql("ex", 10)}"""
 
   /** Exact quadratic shingle-Jaccard self-join at `threshold` — the
     * shared oracle for q_jaccard_pairs and both jaccardPrefixPairs
@@ -229,72 +178,38 @@ object SparkEntry {
   private val ivfRefinedOracleSql: String =
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
-         dims AS (SELECT label, CAST(unnest(range(64)) AS INTEGER) AS pos,
-            unnest(e) AS x FROM v),
-         cent AS (SELECT label, pos,
-            CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-              / CAST(count(*) AS DOUBLE) AS m
-           FROM dims GROUP BY label, pos),
-         seed AS (SELECT label, list(m ORDER BY pos) AS c
-           FROM cent GROUP BY label),
+         seed AS (${V.exactMeansSql("v", "label")}),
          asg AS (SELECT vec_id, e, cluster FROM (
             SELECT v.vec_id, v.e, seed.label AS cluster,
               row_number() OVER (PARTITION BY v.vec_id ORDER BY
                 ${Cols.sqlCosine("e", "c")} DESC, seed.label) AS r
             FROM v CROSS JOIN seed) WHERE r = 1),
-         rdims AS (SELECT cluster, CAST(unnest(range(64)) AS INTEGER) AS pos,
-            unnest(e) AS x FROM asg),
-         rcent AS (SELECT cluster, pos,
-            CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-              / CAST(count(*) AS DOUBLE) AS m
-           FROM rdims GROUP BY cluster, pos),
-         rvec AS (SELECT cluster, list(m ORDER BY pos) AS c
-           FROM rcent GROUP BY cluster),
-         q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
-         probe AS (SELECT query_id, qe, cluster AS probe_cluster FROM (
-            SELECT q.query_id, q.qe, rvec.cluster,
-              row_number() OVER (PARTITION BY q.query_id ORDER BY
-                ${Cols.sqlCosine("qe", "c")} DESC, rvec.cluster) AS r
-            FROM q CROSS JOIN rvec) WHERE r = 1),
-         c2 AS (SELECT query_id, asg.vec_id,
-            round(${Cols.sqlCosine("qe", "e")}, 6) AS cos
+         rvec AS (${V.exactMeansSql("asg", "cluster")}),
+         ${V.querySetSql(5)},
+         ${V.probeSql("rvec", "cluster", 1, V.cosDescSql)},
+         c2 AS (SELECT query_id, asg.vec_id, qe, e
            FROM asg JOIN probe
              ON asg.cluster = probe.probe_cluster
             AND asg.vec_id <> probe.query_id),
-         r2 AS (SELECT query_id, vec_id, cos,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM c2)
-         SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-         FROM r2 WHERE rank <= 10 ORDER BY query_id, rank"""
+         ${V.rankTailSql("c2", 10)}"""
 
   /** DuckDB SQL reproducing the SRP-LSH top-k exactly: the hyperplane
     * constants come from the same generator as Similarity.srpBucket, and
     * both engines fold the dot products sequentially in double, so bucket
-    * assignments (and therefore candidates and ranking) are identical. */
-  private def lshOracleSql(bits: Int, nQueries: Int, k: Int): String = {
-    val planes = graft.vector.Similarity.srpPlanes(bits)
-    val planeDefs = planes.zipWithIndex.map { case (p, i) =>
-      s"[${p.mkString(", ")}]::DOUBLE[] AS p$i"
-    }.mkString(", ")
-    val bucketExpr = (0 until bits).map { i =>
-      s"(CASE WHEN list_sum(list_transform(range(1, 65), j -> e[j] * p$i[j])) >= 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH pl AS (SELECT $planeDefs),
-       v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       b AS (SELECT vec_id, e, $bucketExpr AS bucket FROM v, pl),
-       q AS (SELECT vec_id AS query_id, e AS qe, bucket AS qbucket
-             FROM b WHERE vec_id < $nQueries),
-       c AS (SELECT query_id, b.vec_id,
-             round(list_sum(list_transform(range(1, 65), j -> qe[j] * e[j]))
-               / (sqrt(list_sum(list_transform(range(1, 65), j -> qe[j] * qe[j])))
-                  * sqrt(list_sum(list_transform(range(1, 65), j -> e[j] * e[j])))),
-               6) AS cos
-            FROM b JOIN q ON b.bucket = q.qbucket AND b.vec_id <> q.query_id),
-       r AS (SELECT query_id, vec_id, cos,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM c)
-       SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-       FROM r WHERE rank <= $k ORDER BY query_id, rank"""
+    * assignments (and therefore candidates and ranking) are identical.
+    * `multiProbe` adds every Hamming-1 neighbor bucket (xor with each
+    * power of two) to each query's own. */
+  private def lshOracleSql(bits: Int, nQueries: Int, k: Int,
+      multiProbe: Boolean = false): String = {
+    val on =
+      if (!multiProbe) "b.bucket = q.qbucket"
+      else "b.bucket IN (" + ("q.qbucket" +: (0 until bits).map(i =>
+        s"xor(q.qbucket, ${1L << i})")).mkString(", ") + ")"
+    s"""${srpCte(bits)},
+       ${V.querySetSql(nQueries, "b", ", bucket AS qbucket")},
+       c AS (SELECT query_id, b.vec_id, qe, e
+            FROM b JOIN q ON $on AND b.vec_id <> q.query_id),
+       ${V.rankTailSql("c", k)}"""
   }
 
   /** Shared bucket CTE fragment for SRP-based oracles. */
@@ -311,44 +226,15 @@ object SparkEntry {
        b AS (SELECT vec_id, e, $bucketExpr AS bucket FROM v, pl)"""
   }
 
-  private val cosSql =
-    """round(list_sum(list_transform(range(1, 65), j -> qe[j] * e[j]))
-         / (sqrt(list_sum(list_transform(range(1, 65), j -> qe[j] * qe[j])))
-            * sqrt(list_sum(list_transform(range(1, 65), j -> e[j] * e[j])))),
-         6)"""
-
-  /** Multi-probe variant: candidates from the exact bucket plus every
-    * Hamming-1 neighbor (xor with each power of two). */
-  private def lshMultiProbeOracleSql(bits: Int, nQueries: Int, k: Int): String = {
-    val probes = ("q.qbucket" +: (0 until bits).map(i =>
-      s"xor(q.qbucket, ${1L << i})")).mkString(", ")
-    s"""${srpCte(bits)},
-       q AS (SELECT vec_id AS query_id, e AS qe, bucket AS qbucket
-             FROM b WHERE vec_id < $nQueries),
-       c AS (SELECT query_id, b.vec_id, $cosSql AS cos
-            FROM b JOIN q ON b.bucket IN ($probes) AND b.vec_id <> q.query_id),
-       r AS (SELECT query_id, vec_id, cos,
-             CAST(row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM c)
-       SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-       FROM r WHERE rank <= $k ORDER BY query_id, rank"""
-  }
-
   /** Cosine near-dup pairs within SRP buckets (unrounded threshold filter,
     * rounded output — matches Similarity.cosineNearDupPairs). */
   private def cosineNearDupOracleSql(bits: Int, threshold: Double): String =
     s"""${srpCte(bits)}
        SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
-          round(list_sum(list_transform(range(1, 65), j -> a.e[j] * b2.e[j]))
-            / (sqrt(list_sum(list_transform(range(1, 65), j -> a.e[j] * a.e[j])))
-               * sqrt(list_sum(list_transform(range(1, 65), j -> b2.e[j] * b2.e[j])))),
-            3) AS cos
+          round(${Cols.sqlCosine("a.e", "b2.e")}, 3) AS cos
        FROM b a JOIN b b2
          ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-       WHERE list_sum(list_transform(range(1, 65), j -> a.e[j] * b2.e[j]))
-            / (sqrt(list_sum(list_transform(range(1, 65), j -> a.e[j] * a.e[j])))
-               * sqrt(list_sum(list_transform(range(1, 65), j -> b2.e[j] * b2.e[j]))))
-            >= $threshold
+       WHERE ${Cols.sqlCosine("a.e", "b2.e")} >= $threshold
        ORDER BY id_a, id_b"""
 
   /** SemDeDup oracle: same per-label exact-mean centroids as the IVF
@@ -362,14 +248,7 @@ object SparkEntry {
       : String =
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
-         dims AS (SELECT label, CAST(unnest(range(64)) AS INTEGER) AS pos,
-            unnest(e) AS x FROM v),
-         cent AS (SELECT label, pos,
-            CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-              / CAST(count(*) AS DOUBLE) AS m
-           FROM dims GROUP BY label, pos),
-         cvec AS (SELECT label, list(m ORDER BY pos) AS c
-           FROM cent GROUP BY label),
+         cvec AS (${V.exactMeansSql("v", "label")}),
          assign AS (SELECT vec_id, e, label AS cluster FROM (
             SELECT v.vec_id, v.e, cvec.label,
               row_number() OVER (PARTITION BY v.vec_id ORDER BY
@@ -437,14 +316,8 @@ object SparkEntry {
   private def domainAssignOracleSql: String =
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
-         dims AS (SELECT label, CAST(unnest(range(64)) AS INTEGER) AS pos,
-            unnest(e) AS x FROM v),
-         cent AS (SELECT label, pos,
-            CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-              / CAST(count(*) AS DOUBLE) AS m
-           FROM dims GROUP BY label, pos),
-         cvec AS (SELECT label AS domain, list(m ORDER BY pos) AS c
-           FROM cent GROUP BY label)
+         cvec AS (${V.exactMeansSql("(SELECT label AS domain, e FROM v)",
+           "domain")})
        SELECT vec_id, label, domain, round(scos, 6) AS cos,
          domain = label AS is_home
        FROM (
@@ -2809,7 +2682,7 @@ object SparkEntry {
          SELECT id_a, id_b, round(d / (na * nb), 3) AS cos
          FROM c ORDER BY id_a, id_b""")),
     Query("q_knn_brute", t("embeddings")(V.bruteForceTopK(_)),
-      Some(knnBruteOracleSql),
+      Some(V.bruteForceOracleSql()),
       note = Some("query vectors broadcast against one corpus scan; " +
         "per-query top-k via window over the hash-partitioned candidates")),
     Query("q_hard_negatives", t("embeddings")(V.hardNegatives(_)),
@@ -2825,7 +2698,7 @@ object SparkEntry {
     Query("q_knn_lsh", t("embeddings")(V.lshTopK(_)),
       Some(lshOracleSql(bits = 6, nQueries = 5, k = 10))),
     Query("q_knn_lsh_mp", t("embeddings")(V.lshTopKMultiProbe(_)),
-      Some(lshMultiProbeOracleSql(bits = 6, nQueries = 5, k = 10))),
+      Some(lshOracleSql(bits = 6, nQueries = 5, k = 10, multiProbe = true))),
     Query("q_knn_ivf", t("embeddings")(V.ivfTopK(_)),
       Some(ivfOracleSql(nprobe = 1))),
     Query("q_knn_ivf_disk", (s, dir) => V.ivfDiskTopK(s, dir),
@@ -2873,19 +2746,12 @@ object SparkEntry {
         cacheKey = Some(s"lloyd:$dir/embeddings")),
       Some(V.ivfTrainedRecallOracleSql())),
     Query("q_ann_recall", t("embeddings")(V.annRecall(_)),
-      Some(s"""SELECT b.query_id,
-            CAST(count(m.vec_id) AS DOUBLE) / 10.0 AS recall
-          FROM ($knnBruteOracleSql) b
-          LEFT JOIN (${lshMultiProbeOracleSql(bits = 6, nQueries = 5, k = 10)}) m
-            ON b.query_id = m.query_id AND b.vec_id = m.vec_id
-          GROUP BY b.query_id ORDER BY b.query_id""")),
+      Some(V.recallSql(V.bruteForceOracleSql(),
+        lshOracleSql(bits = 6, nQueries = 5, k = 10, multiProbe = true), 10) +
+        " ORDER BY b.query_id")),
     Query("q_pq_recall", t("embeddings")(V.pqRecall(_)),
-      Some(s"""SELECT b.query_id,
-            CAST(count(m.vec_id) AS DOUBLE) / 10.0 AS recall
-          FROM ($knnBruteOracleSql) b
-          LEFT JOIN ($knnPqOracleSql) m
-            ON b.query_id = m.query_id AND b.vec_id = m.vec_id
-          GROUP BY b.query_id ORDER BY b.query_id""")),
+      Some(V.recallSql(V.bruteForceOracleSql(), knnPqOracleSql, 10) +
+        " ORDER BY b.query_id")),
     // fixture embeddings are near-random (max within-cluster cos ≈0.5),
     // so the near-dup demos run at threshold 0.35 to exercise nonzero
     // output; 0.9 stays the operator default for real corpora.

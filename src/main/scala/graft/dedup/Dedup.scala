@@ -235,7 +235,6 @@ object Dedup {
   def jaccardPairsSliced(documents: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxDf: Int = 1000, slices: Int = 8,
       cacheKey: Option[String] = None,
-      interleave: Boolean = true,
       mergeBucketBytes: Long = 256L << 20): DataFrame = {
     require(slices >= 0, s"slices must be >= 0 (0 = auto), got $slices")
     if (slices == 1) return jaccardPairs(documents, n, threshold, maxDf)
@@ -246,7 +245,7 @@ object Dedup {
       StructField("n_common", LongType),
       StructField("jaccard", DoubleType)))
     val key = cacheKey
-      .map(k => s"jps:$k:n$n:df$maxDf:s$slices:t$threshold:il$interleave")
+      .map(k => s"jps:$k:n$n:df$maxDf:s$slices:t$threshold")
       .getOrElse(s"jps:anon:${java.util.UUID.randomUUID()}")
     val dir = graft.SessionDirs.getOrBuild(spark, key,
       "graft_pair_slices") { root =>
@@ -267,11 +266,9 @@ object Dedup {
         // artifact contract (and repeated consumers) stay uniform
         jaccardPairs(documents, n, threshold, maxDf)
           .write.mode("overwrite").parquet(pairsDir)
-      else if (interleave)
+      else
         buildSlicedInterleaved(documents, n, threshold, maxDf, k, root,
           idT, mergeBucketBytes)
-      else
-        buildSlicedTwoPhase(documents, n, threshold, maxDf, k, root, idT)
       pairsDir
     }
     // explicit schema (ADVICE r15): a degenerate corpus can leave the
@@ -376,68 +373,6 @@ object Dedup {
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** The r15 two-phase assembly (kept as the A/B twin of the
-    * interleaved default): all K slices' partials land first, then K
-    * partition-pruned bucket passes sum + threshold them. Peak disk
-    * carries the WHOLE partial stream (~0.7 × Σ C(df,2) rows) across
-    * the phase boundary — the measured 16384× wall the interleaved
-    * form removes. */
-  private def buildSlicedTwoPhase(documents: DataFrame, n: Int,
-      threshold: Double, maxDf: Int, slices: Int,
-      root: java.nio.file.Path, idT: DataType): Unit = {
-    val spark = documents.sparkSession
-    val partialsDir = root.toString + "/partials"
-    val sizesDir = root.toString + "/sizes"
-    val pairsDir = root.toString + "/pairs"
-    var i = 0
-    while (i < slices) {
-      jaccardSlicePartial(documents, n, maxDf, slices, i, slices)
-        // NO repartition: partitionBy splits each AQE-coalesced agg
-        // output task by bucket value (~16 MB targets ⇒ files per
-        // bucket stay bounded), and repartitioning BY the 12-value
-        // bucket key would funnel the whole slice through 12 write
-        // tasks — measured 3× slower than the join itself at 4096×.
-        // Sorted runs compress several-fold under zstd (scaladoc).
-        .sortWithinPartitions(col("pb"), col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("pb")
-        .parquet(s"$partialsDir/slice=$i")
-      gcIfBig(s"$partialsDir/slice=$i")
-      i += 1
-    }
-    // |doc| sizes once, as a small parquet the bucket passes reuse
-    writeSizes(documents, n, slices, sizesDir)
-    val sizesDf = spark.read.schema(sizesSchema(idT, slices))
-      .parquet(sizesDir)
-    // sliced final assembly: per pair-hash bucket, sum the partial
-    // intersections (exact: buckets partition the PAIR space, slices
-    // partitioned the SHINGLE space), join sizes, threshold, append
-    var j = 0
-    while (j < slices) {
-      spark.read.parquet(partialsDir)
-        .filter(col("pb") === j) // partition-pruned directory read
-        .select(col("doc_a"), col("doc_b"), col("n_common"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(sum(col("n_common")).as("n_common"))
-        .join(sizesDf.as("sa"), col("doc_a") === col("sa.doc_id"))
-        .join(sizesDf.as("sb"), col("doc_b") === col("sb.doc_id"))
-        .withColumn("jaccard",
-          col("n_common").cast("double") /
-            (col("sa.n_sh") + col("sb.n_sh") - col("n_common"))
-              .cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("n_common"),
-          col("jaccard"))
-        .write.mode(if (j == 0) "overwrite" else "append")
-        .parquet(pairsDir)
-      gcIfBig(s"$partialsDir/slice=0/pb=$j")
-      j += 1
-    }
-    // the partial stream (≈ the full candidate-pair set) must not
-    // share the disk with downstream fixpoint transients
-    deleteDir(partialsDir)
-  }
-
   /** Interleaved sliced assembly (the r15-priced 16384× refactor): the
     * bucket re-aggregation folds INTO the slice loop, so slice i's
     * partials are merged into a running per-bucket accumulator and
@@ -463,7 +398,8 @@ object Dedup {
     * Disk shape: live = accumulator (≈ the still-viable pair set —
     * peaks near slice K·(1−(1+t)/2t…), measured as the acc_bytes curve
     * this loop logs) + ONE slice's partials + one bucket's merge
-    * transient, instead of the two-phase form's full partial stream.
+    * transient, instead of the full partial stream a two-phase form
+    * (every slice first, then the assembly) carries.
     * The merge runs per pair-hash bucket — K sequential partition-
     * pruned jobs per slice whose superseded shuffles (and the replaced
     * accumulator bucket) are freed before the next, exactly like the
@@ -612,25 +548,6 @@ object Dedup {
       java.nio.file.Paths.get(pairsDir))
   }
 
-  /** Exact set-similarity join via PREFIX FILTERING (the PPJoin family):
-    * rank each document's shingles by global rarity (df, then hash) and
-    * index only the first |d| − ⌈t·|d|⌉ + 1 of them. Soundness: J(A,B) ≥ t
-    * forces |A∩B| ≥ ⌈t·|A|⌉, and any pair overlapping that much must
-    * collide inside both prefixes (pigeonhole on the globally-ordered
-    * suffix) — so unlike [[jaccardPairs]]' maxDf posting cap this
-    * candidate generator is provably LOSSLESS while indexing only the
-    * rare tail of each document. Candidates are then verified with an
-    * exact intersection count restricted to the candidate set.
-    *
-    * Scale: the posting lists that explode into pairs hold only prefix
-    * tokens — the frequent shingles that dominate Σdf² never enter the
-    * index; verification joins each candidate pair against the two
-    * docs' hash ARRAYS (one row per doc) and intersects them inside
-    * codegen (`array_intersect` — hash-set, O(|A|+|B|) per pair), so
-    * the verify stage shuffles |cand| rows carrying small arrays
-    * instead of materializing candidate × per-doc-shingle rows (the
-    * row-form join measured ~20M intermediate rows on a 260k-shingle
-    * corpus — Σ|A| per candidate, for nothing). */
   /** The narrow (doc_id, shingle-hash) relation every prefix-join stage
     * reads — callers persist it (it is referenced three times: df count,
     * prefix ranking, doc-array build). */
@@ -696,6 +613,25 @@ object Dedup {
     c
   }
 
+  /** Exact set-similarity join via PREFIX FILTERING (the PPJoin family):
+    * rank each document's shingles by global rarity (df, then hash) and
+    * index only the first |d| − ⌈t·|d|⌉ + 1 of them. Soundness: J(A,B) ≥ t
+    * forces |A∩B| ≥ ⌈t·|A|⌉, and any pair overlapping that much must
+    * collide inside both prefixes (pigeonhole on the globally-ordered
+    * suffix) — so unlike [[jaccardPairs]]' maxDf posting cap this
+    * candidate generator is provably LOSSLESS while indexing only the
+    * rare tail of each document. Candidates are then verified with an
+    * exact intersection count restricted to the candidate set.
+    *
+    * Scale: the posting lists that explode into pairs hold only prefix
+    * tokens — the frequent shingles that dominate Σdf² never enter the
+    * index; verification joins each candidate pair against the two
+    * docs' hash ARRAYS (one row per doc) and intersects them inside
+    * codegen (`array_intersect` — hash-set, O(|A|+|B|) per pair), so
+    * the verify stage shuffles |cand| rows carrying small arrays
+    * instead of materializing candidate × per-doc-shingle rows (the
+    * row-form join measured ~20M intermediate rows on a 260k-shingle
+    * corpus — Σ|A| per candidate, for nothing). */
   def jaccardPrefixPairs(documents: DataFrame, n: Int = 3,
       threshold: Double = 0.4): DataFrame = {
     // sh is a narrow (long, long) relation post-hash, so one
@@ -1532,20 +1468,6 @@ object Dedup {
        WHERE w.doc_id > f.first_id
        GROUP BY w.doc_id ORDER BY w.doc_id"""
 
-  /** Sorted-neighborhood near-dup candidates (the classic record-linkage
-    * alternative to LSH): block on a normalized text prefix, sort within
-    * each block, and compare each doc only to its `k−1` successors in
-    * the sort order — candidate count is ≤ (k−1)·N regardless of corpus
-    * size. Pairs are scored with the same word-3-gram Jaccard as
-    * [[jaccardPairs]] and kept at `threshold`.
-    *
-    * Scale: the window is PARTITIONED by the blocking key (never a
-    * global-sort single-partition window) — each block sorts
-    * independently, which is exactly how sorted-neighborhood shards on a
-    * cluster; cross-block near-dups are traded away by design (the
-    * standard blocking trade-off; run multiple passes with different
-    * keys to recover them). Jaccard scoring touches only candidate
-    * pairs, never all pairs. */
   /** Blocked k-successor candidate pairs shared by the
     * sorted-neighborhood and fuzzy-join operators: block on an
     * 8-char normalized prefix, sort within each block (window
@@ -1566,6 +1488,20 @@ object Dedup {
       .filter(col("doc_b").isNotNull)
   }
 
+  /** Sorted-neighborhood near-dup candidates (the classic record-linkage
+    * alternative to LSH): block on a normalized text prefix, sort within
+    * each block, and compare each doc only to its `k−1` successors in
+    * the sort order — candidate count is ≤ (k−1)·N regardless of corpus
+    * size. Pairs are scored with the same word-3-gram Jaccard as
+    * [[jaccardPairs]] and kept at `threshold`.
+    *
+    * Scale: the window is PARTITIONED by the blocking key (never a
+    * global-sort single-partition window) — each block sorts
+    * independently, which is exactly how sorted-neighborhood shards on a
+    * cluster; cross-block near-dups are traded away by design (the
+    * standard blocking trade-off; run multiple passes with different
+    * keys to recover them). Jaccard scoring touches only candidate
+    * pairs, never all pairs. */
   def sortedNeighborhoodPairs(documents: DataFrame, k: Int = 4,
       threshold: Double = 0.3): DataFrame = {
     val pairs = neighborCandidates(documents, k)

@@ -459,10 +459,6 @@ object EventsPipeline {
         col("r.value").as("value"))
       .orderBy(col("user_id"))
 
-  /** Trailing one-hour running sum per user — a RANGE-framed window
-    * (peers by value, not row position): for each event, the exact
-    * decimal sum of the user's values in [ts − 1h, ts]. Range frames
-    * over integer micros keep both engines' peer semantics identical. */
   /** SCD2 (slowly-changing-dimension type 2) history build: each event
     * becomes a versioned row valid from its own timestamp until the
     * user's next event — the standard "turn a change log into
@@ -524,6 +520,10 @@ object EventsPipeline {
       .orderBy(col("event_type"))
   }
 
+  /** Trailing one-hour running sum per user — a RANGE-framed window
+    * (peers by value, not row position): for each event, the exact
+    * decimal sum of the user's values in [ts − 1h, ts]. Range frames
+    * over integer micros keep both engines' peer semantics identical. */
   def trailingHourSum(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id"))

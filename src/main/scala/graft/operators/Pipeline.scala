@@ -504,8 +504,7 @@ object Pipeline {
     val counts = documents.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     val tot = counts.agg(
       sum(col("n_lang")).as("n"),
-      sum(pow(col("n_lang"), tau).cast("decimal(28,12)")).cast("double")
-        .as("s"))
+      graft.Cols.decSum(pow(col("n_lang"), tau), 12).as("s"))
     val targets = counts.crossJoin(broadcast(tot))
       .select(col("lang"), col("n_lang"),
         floor(col("n") * pow(col("n_lang"), tau) / col("s")).cast("long")
@@ -583,11 +582,7 @@ object Pipeline {
         qv AS (SELECT CAST(embedding AS DOUBLE[]) AS qe
                FROM embeddings WHERE vec_id = 0),
         cosr AS (SELECT vec_id AS doc_id,
-            round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i]))
-              / (sqrt(list_sum(list_transform(range(1, 65),
-                   i -> qe[i] * qe[i])))
-                 * sqrt(list_sum(list_transform(range(1, 65),
-                     i -> e[i] * e[i])))), 6) AS cos
+            round(${graft.Cols.sqlCosine("qe", "e")}, 6) AS cos
           FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
                 FROM embeddings WHERE vec_id <> 0), qv),
         vr AS (SELECT doc_id,

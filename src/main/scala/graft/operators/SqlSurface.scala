@@ -112,7 +112,7 @@ object SqlSurface {
        ORDER BY d.doc_id"""
 
   val customFnsOracleSql: String =
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
+    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
            FROM documents),
        sh AS (SELECT doc_id,
            CASE WHEN len(w) < 3 THEN 1
@@ -122,10 +122,7 @@ object SqlSurface {
        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          FROM embeddings)
        SELECT d.doc_id, CAST(sh.n_sh AS INTEGER) AS n_shingles,
-         round(list_sum(list_transform(range(1, 65), j -> a.v[j] * b.v[j]))
-           / (sqrt(list_sum(list_transform(range(1, 65), j -> a.v[j] * a.v[j])))
-              * sqrt(list_sum(list_transform(range(1, 65), j -> b.v[j] * b.v[j])))),
-           6) AS cos_next
+         round(${graft.Cols.sqlCosine("a.v", "b.v")}, 6) AS cos_next
        FROM (SELECT doc_id FROM documents WHERE doc_id < 100) d
        JOIN sh ON sh.doc_id = d.doc_id
        JOIN e a ON a.vec_id = d.doc_id

@@ -72,10 +72,6 @@ object QualityModel {
   private def fastSigmoid(zc: Column): Column =
     lit(0.5) * (lit(1.0) + zc / (lit(1.0) + abs(zc)))
 
-  /** decSum at scale 12 — mirrored literally in the oracle SQL. */
-  private def gradSum(c: Column): Column =
-    sum(c.cast("decimal(28,12)")).cast("double")
-
   /** The training loop itself — the learned weight vector after `iters`
     * full-batch rounds from w = 0 (exposed for tests to pin the
     * trajectory against analytic values). */
@@ -177,16 +173,16 @@ object QualityModel {
         val errL = fastSigmoid(z(wl)) - col("yl")
         val errN = fastSigmoid(z(wn)) - col("yn")
         val row = f.agg(
-          gradSum(errL).as("l0"),
-          gradSum(errL * col("x1")).as("l1"),
-          gradSum(errL * col("x2")).as("l2"),
-          gradSum(errL * col("x3")).as("l3"),
-          gradSum(errL * col("x4")).as("l4"),
-          gradSum(errN).as("n0"),
-          gradSum(errN * col("x1")).as("n1"),
-          gradSum(errN * col("x2")).as("n2"),
-          gradSum(errN * col("x3")).as("n3"),
-          gradSum(errN * col("x4")).as("n4"),
+          graft.Cols.decSum(errL, 12).as("l0"),
+          graft.Cols.decSum(errL * col("x1"), 12).as("l1"),
+          graft.Cols.decSum(errL * col("x2"), 12).as("l2"),
+          graft.Cols.decSum(errL * col("x3"), 12).as("l3"),
+          graft.Cols.decSum(errL * col("x4"), 12).as("l4"),
+          graft.Cols.decSum(errN, 12).as("n0"),
+          graft.Cols.decSum(errN * col("x1"), 12).as("n1"),
+          graft.Cols.decSum(errN * col("x2"), 12).as("n2"),
+          graft.Cols.decSum(errN * col("x3"), 12).as("n3"),
+          graft.Cols.decSum(errN * col("x4"), 12).as("n4"),
           count(lit(1)).cast("double").as("n")).head()
         val n = row.getDouble(10)
         wl = Array.tabulate(5)(j => wl(j) - lr * (row.getDouble(j) / n))
@@ -205,11 +201,11 @@ object QualityModel {
       for (_ <- 1 to iters) {
         val err = fastSigmoid(z(ws)) - col("y")
         val row = f.agg(
-          gradSum(err).as("g0"),
-          gradSum(err * col("x1")).as("g1"),
-          gradSum(err * col("x2")).as("g2"),
-          gradSum(err * col("x3")).as("g3"),
-          gradSum(err * col("x4")).as("g4"),
+          graft.Cols.decSum(err, 12).as("g0"),
+          graft.Cols.decSum(err * col("x1"), 12).as("g1"),
+          graft.Cols.decSum(err * col("x2"), 12).as("g2"),
+          graft.Cols.decSum(err * col("x3"), 12).as("g3"),
+          graft.Cols.decSum(err * col("x4"), 12).as("g4"),
           count(lit(1)).cast("double").as("n")).head()
         val n = row.getDouble(5)
         ws = Array.tabulate(5)(j => ws(j) - lr * (row.getDouble(j) / n))

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Cols
 
 /** Embedding similarity search over the `embeddings` fixture table
   * (`vec_id, embedding: array<float> dim=64, label`).
@@ -10,6 +11,16 @@ import org.apache.spark.sql.expressions.Window
   * All vector math uses higher-order functions (`zip_with`/`aggregate`) on
   * arrays cast to double — native Catalyst expressions, sequential
   * per-row folds (deterministic), no UDFs.
+  *
+  * One kNN result rule: every top-k search here ranks a query's
+  * candidates on the cosine rounded to 6 digits, breaks ties by
+  * ascending `vec_id`, keeps ranks ≤ k and outputs the cosine rounded
+  * to 3. The rule has one Spark home (`ranked` + `topKRows`, fed by
+  * `querySet`; IVF candidates come from `centroidProbe`, recall checks
+  * from `recallJoin`) and one SQL twin per helper (`rankedSql`,
+  * `topKRowsSql`, `probeSql`, `recallSql`, `exactMeansSql`) that the
+  * DuckDB oracles call. The two sides are written independently, like
+  * [[dist2]] and `d2Sql`: no SQL is generated from Spark code.
   *
   * Scale design:
   *  - Brute-force top-k is the correctness baseline: broadcast the query
@@ -19,9 +30,10 @@ import org.apache.spark.sql.expressions.Window
   *    (SRP) assigns each vector to a bucket; queries probe only their own
   *    bucket → cost drops from O(N) to O(N/2^bits) per query. The bucket
   *    id doubles as a partitioning/bucketing key on disk at 100 TB.
-  *  - IVF-style variant: coarse centroids = per-label means (stand-in for
-  *    k-means, which would be an offline job); queries probe the nearest
-  *    centroid's inverted list only.
+  *  - IVF: each query probes the inverted lists of its nearest coarse
+  *    centroids only. The centroids are per-label exact means
+  *    ([[ivfTopK]]), one Lloyd refinement of them ([[ivfRefinedTopK]]),
+  *    or the multi-round [[kmeansTrain]] model ([[ivfTrainedTopK]]).
   */
 object Similarity {
 
@@ -40,14 +52,6 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Exact-decimal sum of a double column, returned as double — the
-    * order-independent reduction every oracle-matched float aggregate
-    * here uses. The (28,12) quantization scale is LOAD-BEARING for
-    * cross-engine bit-identity (every oracle mirrors it); keep this the
-    * single definition. */
-  private def decSum(c: Column): Column =
-    sum(c.cast("decimal(28,12)")).cast("double")
-
   /** Pairwise cosine between a small set of vectors (vec_id < bound) —
     * deterministic per-row fold, oracle-checkable with rounding. */
   def pairwiseCosine(embeddings: DataFrame, bound: Int = 10): DataFrame = {
@@ -61,25 +65,47 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** Brute-force exact top-k neighbors for each of `nQueries` query
-    * vectors: broadcast queries × corpus scan, per-query top-k. */
-  def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 5,
-      k: Int = 10): DataFrame = {
-    val corpus = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
+  /** The query set: the first `nQueries` vectors of `corpus` (`vec_id`,
+    * `v`, ...) as (`query_id`, `q`, `extra`...). */
+  private def querySet(corpus: DataFrame, nQueries: Int,
+      extra: Column*): DataFrame =
+    corpus.filter(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("query_id"), col("v").as("q")) ++ extra: _*)
+
+  /** The ranked step of the kNN rule over (query, candidate) rows that
+    * carry `q` and `v`: `cos` is their cosine rounded to 6 digits,
+    * `rank` the per-query row number by (cos desc, vec_id asc), and
+    * ranks above `k` are dropped. */
+  private def ranked(cands: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
-    corpus
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    cands
       .withColumn("cos", round(cosine(col("q"), col("v")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
   }
+
+  /** The public kNN output of a [[ranked]] frame: (query_id, rank,
+    * vec_id, `extra`..., cos rounded to 3), ordered by query and rank. */
+  private def topKRows(r: DataFrame, extra: Column*): DataFrame =
+    r.select(Seq(col("query_id"), col("rank"), col("vec_id")) ++ extra :+
+        round(col("cos"), 3).as("cos"): _*)
+      .orderBy(col("query_id"), col("rank"))
+
+  /** Exact top-k of every query in `corpus` (`vec_id`, `v`, ...) against
+    * the rest of it, as a [[ranked]] frame: queries broadcast against
+    * one corpus scan. */
+  private def bruteRanked(corpus: DataFrame, nQueries: Int, k: Int)
+      : DataFrame =
+    ranked(corpus.join(broadcast(querySet(corpus, nQueries)),
+      col("vec_id") =!= col("query_id")), k)
+
+  /** Brute-force exact top-k neighbors for each of `nQueries` query
+    * vectors: broadcast queries × corpus scan, per-query top-k. */
+  def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 5,
+      k: Int = 10): DataFrame =
+    topKRows(bruteRanked(embeddings
+      .select(col("vec_id"), asDouble(col("embedding")).as("v")), nQueries, k))
 
   /** HARD-NEGATIVE mining for contrastive training — for each query
     * vector, the top-k most-cosine-similar corpus vectors with a
@@ -98,40 +124,61 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val corpus = embeddings
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("v").as("q"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    corpus
-      .join(broadcast(queries), col("label") =!= col("q_label"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        col("label").as("neg_label"), round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val queries = querySet(corpus, nQueries, col("label").as("q_label"))
+    topKRows(ranked(corpus.join(broadcast(queries),
+      col("label") =!= col("q_label")), k), col("label").as("neg_label"))
   }
+
+  /** SQL twin of `querySet`: the `q` CTE (query_id, qe, `extra`...) over
+    * the first `nQueries` rows of relation `from` (vec_id, e, ...). */
+  private[graft] def querySetSql(nQueries: Int, from: String = "v",
+      extra: String = ""): String =
+    s"q AS (SELECT vec_id AS query_id, e AS qe$extra FROM $from " +
+      s"WHERE vec_id < $nQueries)"
+
+  /** SQL twin of [[ranked]]: the `ranked` CTE over the candidate
+    * relation `cands` (query_id, vec_id, qe, e, ...) — cosine rounded
+    * to 6 digits, per-query row number by (cos DESC, vec_id), ranks
+    * above `k` dropped. */
+  private[graft] def rankedSql(cands: String, k: Int): String =
+    s"""ranked AS (SELECT * FROM (
+           SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+             ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+           FROM (SELECT *, round(${Cols.sqlCosine("qe", "e")}, 6)
+               AS cos FROM $cands))
+         WHERE rank <= $k)"""
+
+  /** SQL twin of [[topKRows]], over the [[rankedSql]] CTE. */
+  private[graft] def topKRowsSql(extra: String = ""): String =
+    s"""SELECT query_id, rank, vec_id, ${extra}round(cos, 3) AS cos
+       FROM ranked ORDER BY query_id, rank"""
+
+  /** The whole SQL rank tail: [[rankedSql]] then [[topKRowsSql]]. */
+  private[graft] def rankTailSql(cands: String, k: Int,
+      extra: String = ""): String =
+    s"""${rankedSql(cands, k)}
+       ${topKRowsSql(extra)}"""
+
+  /** SQL twin of `bruteRanked`: every query joined to the corpus rows
+    * that pass `on` (`vec_id <> query_id`, or [[hardNegatives]]'
+    * `label <> q_label`), the CTEs up to `ranked`. */
+  private def bruteCtes(nQueries: Int, k: Int, on: String): String =
+    s"""v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
+          FROM embeddings),
+       ${querySetSql(nQueries, extra = ", label AS q_label")},
+       c AS (SELECT query_id, vec_id, label, qe, e FROM v CROSS JOIN q
+         WHERE $on),
+       ${rankedSql("c", k)}"""
+
+  /** DuckDB oracle for [[bruteForceTopK]]. */
+  def bruteForceOracleSql(nQueries: Int = 5, k: Int = 10): String =
+    s"WITH ${bruteCtes(nQueries, k, "vec_id <> query_id")} ${topKRowsSql()}"
 
   /** DuckDB oracle for [[hardNegatives]] — the [[bruteForceTopK]]
     * oracle with the label inequality in the join. */
   def hardNegativesOracleSql(nQueries: Int = 5, k: Int = 10): String =
-    s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-          FROM embeddings),
-       q AS (SELECT vec_id AS query_id, label AS q_label, e AS qe
-         FROM v WHERE vec_id < $nQueries),
-       c AS (SELECT query_id, vec_id, label,
-          round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i]))
-            / (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i] * qe[i])))
-               * sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i])))),
-            6) AS cos
-         FROM v CROSS JOIN q WHERE label <> q_label),
-       r AS (SELECT query_id, vec_id, label, cos,
-          CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-         FROM c)
-       SELECT query_id, rank, vec_id, label AS neg_label, round(cos, 3) AS cos
-       FROM r WHERE rank <= $k ORDER BY query_id, rank"""
+    s"WITH ${bruteCtes(nQueries, k, "label <> q_label")} " +
+      topKRowsSql("label AS neg_label, ")
 
   /** Quantized-scan kNN — the production memory-bound ANN pattern:
     * the corpus is scanned in its int8-reconstructed form (4 bytes→1
@@ -155,23 +202,14 @@ object Similarity {
     val recon = when(hi === lo, col("v")).otherwise(transform(col("v"), x =>
       lo + round((x - lo) / (hi - lo) * 255) / 255.0 * (hi - lo)))
     val coded = corpus.select(col("vec_id"), col("v"), recon.as("r"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
     val wCoarse = Window.partitionBy(col("query_id"))
       .orderBy(col("coarse").desc, col("vec_id"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    coded
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    topKRows(ranked(coded
+      .join(broadcast(querySet(corpus, nQueries)),
+        col("vec_id") =!= col("query_id"))
       .withColumn("coarse", round(cosine(col("q"), col("r")), 6))
       .withColumn("crank", row_number().over(wCoarse))
-      .filter(col("crank") <= rerank)
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+      .filter(col("crank") <= rerank), k))
   }
 
   /** Product-quantization ANN (ADC scan + exact rerank) — the
@@ -223,7 +261,8 @@ object Similarity {
       .filter(col("label").isNotNull)
       .select(col("sub"), col("label"), posexplode(col("sv")))
       .groupBy(col("sub"), col("label"), col("pos"))
-      .agg((decSum(col("col")) / count(lit(1)).cast("double")).as("mc"))
+      .agg((Cols.decSum(col("col"), 12) / count(lit(1)).cast("double"))
+        .as("mc"))
       .groupBy(col("sub"), col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("mc"))))
         .getField("mc").as("centroid"))
@@ -238,8 +277,7 @@ object Similarity {
       .filter(col("r") === 1)
       .select(col("vec_id"), col("sub"), col("code"))
     // per-query ADC lookup tables (tiny: nQueries × m × #codes)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
+    val queries = querySet(corpus, nQueries)
     val qsubs = queries
       .select(col("query_id"), posexplode(subSlices(col("q"))))
       .select(col("query_id"), col("pos").as("sub"), col("col").as("qs"))
@@ -255,7 +293,8 @@ object Similarity {
     val coarse = codes
       .join(broadcast(parts), Seq("sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
-      .agg(decSum(col("dpart")).as("adot"), decSum(col("n2part")).as("an2"))
+      .agg(Cols.decSum(col("dpart"), 12).as("adot"),
+        Cols.decSum(col("n2part"), 12).as("an2"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qnorm), Seq("query_id"))
       .withColumn("acos",
@@ -264,17 +303,9 @@ object Similarity {
       .filter(col("crank") <= rerank)
       .select(col("query_id"), col("vec_id"))
     // exact rerank on the survivors only
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    coarse
+    topKRows(ranked(coarse
       .join(corpus.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+      .join(broadcast(queries), Seq("query_id")), k))
   }
 
   /** Deterministic pseudo-random hyperplanes (splitmix64 of (plane, dim))
@@ -310,20 +341,9 @@ object Similarity {
     val corpus = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", srpBucket(col("v"), bits))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"),
-        col("bucket").as("qbucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    corpus
-      .join(broadcast(queries),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val queries = querySet(corpus, nQueries, col("bucket").as("qbucket"))
+    topKRows(ranked(corpus.join(broadcast(queries),
+      col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id")), k))
   }
 
   /** Multi-probe LSH ANN: each query probes its own SRP bucket PLUS every
@@ -339,28 +359,11 @@ object Similarity {
     val probes = array((0 to bits).map(i =>
       if (i == 0) col("bucket")
       else col("bucket").bitwiseXOR(lit(1L << (i - 1)))): _*)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"),
-        explode(probes).as("probe"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    corpus
-      .join(broadcast(queries),
-        col("bucket") === col("probe") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val queries = querySet(corpus, nQueries, explode(probes).as("probe"))
+    topKRows(ranked(corpus.join(broadcast(queries),
+      col("bucket") === col("probe") && col("vec_id") =!= col("query_id")), k))
   }
 
-  /** IVF-style ANN: coarse centroids (per-label mean vectors — a
-    * deterministic stand-in for offline k-means), each query probes its
-    * `nprobe` nearest centroids' inverted lists (nprobe is the standard
-    * IVF recall/cost dial; lists are disjoint so no dedup is needed).
-    * Centroid assignment and probe are broadcast joins; the corpus is
-    * scanned once. */
   /** Exact per-dimension mean vectors per cluster key (posexplode →
     * exact decimal sum / count → reassemble); exact so the centroids
     * (and every cosine to them) are oracle-reproducible, unlike
@@ -369,38 +372,70 @@ object Similarity {
     members
       .select(col(keyCol), posexplode(col("v")))
       .groupBy(col(keyCol), col("pos"))
-      .agg((sum(col("col").cast("decimal(28,12)")).cast("double") /
+      .agg((Cols.decSum(col("col"), 12) /
         count(lit(1)).cast("double")).as("m"))
       .groupBy(col(keyCol))
       .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
         .getField("m").as("centroid"))
 
+  /** SQL twin of [[exactMeans]]: one row per `key` of relation `from`
+    * (`key`, e) with `c` its exact per-dimension mean 64-dim list. */
+  private[graft] def exactMeansSql(from: String, key: String): String =
+    s"""SELECT $key, list(m ORDER BY pos) AS c FROM (
+           SELECT $key, pos, ${Cols.sqlDecSum("x", 12)}
+             / CAST(count(*) AS DOUBLE) AS m
+           FROM (SELECT $key, CAST(unnest(range(64)) AS INTEGER) AS pos,
+               unnest(e) AS x FROM $from)
+           GROUP BY $key, pos)
+         GROUP BY $key"""
+
+  /** Each query's `nprobe` best centroids: `queries` (query_id, q)
+    * crossed with the broadcast `centroids` (`key`, centroid), scored by
+    * the named column `score`, ranked per query by `order` then `key`;
+    * output (query_id, q, probe_`key`). */
+  private def centroidProbe(queries: DataFrame, centroids: DataFrame,
+      key: String, nprobe: Int, score: Column, order: Column): DataFrame = {
+    val wq = Window.partitionBy(col("query_id")).orderBy(order, col(key))
+    queries.crossJoin(broadcast(centroids))
+      .select(col("*"), score)
+      .withColumn("r", row_number().over(wq))
+      .filter(col("r") <= nprobe)
+      .select(col("query_id"), col("q"), col(key).as(s"probe_$key"))
+  }
+
+  /** SQL twin of `centroidProbe`: the `probe` CTE (query_id, qe,
+    * probe_`key`) keeping, per row of CTE `q`, the `nprobe` best rows of
+    * centroid relation `cents` (`key`, c) by `order` (an expression
+    * over qe and c.c, with its direction), then `key`. */
+  private[graft] def probeSql(cents: String, key: String, nprobe: Int,
+      order: String): String =
+    s"""probe AS (SELECT query_id, qe, $key AS probe_$key FROM (
+           SELECT q.query_id, q.qe, c.$key,
+             row_number() OVER (PARTITION BY q.query_id
+               ORDER BY $order, c.$key) AS r
+           FROM q CROSS JOIN $cents c) WHERE r <= $nprobe)"""
+
+  /** `probeSql`'s cosine order: nearest centroid first. */
+  private[graft] val cosDescSql: String =
+    s"${Cols.sqlCosine("qe", "c.c")} DESC"
+
+  /** IVF-style ANN: coarse centroids (per-label mean vectors — a
+    * deterministic stand-in for offline k-means), each query probes its
+    * `nprobe` nearest centroids' inverted lists (nprobe is the standard
+    * IVF recall/cost dial; lists are disjoint so no dedup is needed).
+    * Centroid assignment and probe are broadcast joins; the corpus is
+    * scanned once. */
   def ivfTopK(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
       nprobe: Int = 1): DataFrame = {
     val corpus = embeddings
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val centroids = exactMeans(corpus.select(col("label"), col("v")), "label")
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
     // nearest centroid per query (tiny × tiny cross join)
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("label"))
-    val probe = queries.crossJoin(broadcast(centroids))
-      .withColumn("ccos", cosine(col("q"), col("centroid")))
-      .withColumn("r", row_number().over(wq))
-      .filter(col("r") <= nprobe)
-      .select(col("query_id"), col("q"), col("label").as("probe_label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    corpus
-      .join(broadcast(probe),
-        col("label") === col("probe_label") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val probe = centroidProbe(querySet(corpus, nQueries), centroids, "label",
+      nprobe, cosine(col("q"), col("centroid")).as("ccos"), col("ccos").desc)
+    topKRows(ranked(corpus.join(broadcast(probe),
+      col("label") === col("probe_label") && col("vec_id") =!= col("query_id")),
+      k))
   }
 
   /** IVF with ONE k-means (Lloyd) refinement round: the per-label seed
@@ -440,27 +475,11 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("label").as("cluster"))
     val refined = exactMeans(assigned.select(col("cluster"), col("v")),
       "cluster")
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cluster"))
-    val probe = queries.crossJoin(broadcast(refined))
-      .withColumn("ccos", cosine(col("q"), col("centroid")))
-      .withColumn("r", row_number().over(wq))
-      .filter(col("r") === 1)
-      .select(col("query_id"), col("q"), col("cluster").as("probe_cluster"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned
-      .join(broadcast(probe),
-        col("cluster") === col("probe_cluster") &&
-          col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val probe = centroidProbe(querySet(corpus, nQueries), refined, "cluster",
+      1, cosine(col("q"), col("centroid")).as("ccos"), col("ccos").desc)
+    topKRows(ranked(assigned.join(broadcast(probe),
+      col("cluster") === col("probe_cluster") &&
+        col("vec_id") =!= col("query_id")), k))
   }
 
   /** Squared Euclidean distance — sequential double fold (zip_with +
@@ -470,34 +489,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Multi-round Lloyd k-means trainer — the full iterative-ML job shape
-    * that [[ivfRefinedTopK]]'s single refinement round is one step of
-    * (generalized the way pcaTopK generalized pcaTop2): R rounds of
-    * assign → exact-decimal re-mean, with a per-(round, cluster) inertia
-    * report. Seeds are the per-label exact means (the deterministic
-    * stand-in every index here uses). Classic Euclidean Lloyd, so TOTAL
-    * inertia is non-increasing round over round (each assignment step
-    * can only lower Σd² against the old centroids, each re-mean step
-    * minimizes Σd² for the new assignment) — pinned in SimilaritySpec.
-    *
-    * Scale: per round, assignment is ONE corpus scan against the
-    * broadcast centroid block (k·d doubles) with a per-vector window
-    * (partitioned by vec_id — fully shuffle-parallel, the ivfRefined
-    * precedent), and re-meaning is one map-side-combining aggregation of
-    * (cluster, pos) partial sums. The corpus is persisted once and
-    * scanned R times — the canonical iterative-ML plan; centroids cross
-    * the driver between rounds as model values (k·d ≤ 640 doubles, the
-    * pcaTopK / k-means-seeds precedent). No all-pairs join, nothing
-    * corpus-sized ever collects.
-    *
-    * Determinism (oracle bit-parity): means are exact decimal(28,12)
-    * sums / counts; d² is a sequential double fold over identical
-    * centroid doubles; assignment ties break by cluster id; inertia is
-    * an exact decimal sum of d² against the ROUND'S OWN re-mean (so the
-    * reported sequence is E(a_r, m_r), the classically monotone one),
-    * rounded to 6 on output. Clusters that lose every member simply
-    * drop out of later rounds (both engines derive that from the same
-    * assignment). Output: (round, cluster, n_members, inertia). */
   /** Assignment step shared by the Lloyd trainer and the trained-IVF
     * probe: every corpus vector to its d²-nearest centroid (ties break
     * by cluster id). The centroids are driver-held model values, so the
@@ -573,6 +564,34 @@ object Similarity {
     seq
   }
 
+  /** Multi-round Lloyd k-means trainer — the full iterative-ML job shape
+    * that [[ivfRefinedTopK]]'s single refinement round is one step of
+    * (generalized the way pcaTopK generalized pcaTop2): R rounds of
+    * assign → exact-decimal re-mean, with a per-(round, cluster) inertia
+    * report. Seeds are the per-label exact means (the deterministic
+    * stand-in every index here uses). Classic Euclidean Lloyd, so TOTAL
+    * inertia is non-increasing round over round (each assignment step
+    * can only lower Σd² against the old centroids, each re-mean step
+    * minimizes Σd² for the new assignment) — pinned in SimilaritySpec.
+    *
+    * Scale: per round, assignment is ONE corpus scan against the
+    * broadcast centroid block (k·d doubles) with a per-vector window
+    * (partitioned by vec_id — fully shuffle-parallel, the ivfRefined
+    * precedent), and re-meaning is one map-side-combining aggregation of
+    * (cluster, pos) partial sums. The corpus is persisted once and
+    * scanned R times — the canonical iterative-ML plan; centroids cross
+    * the driver between rounds as model values (k·d ≤ 640 doubles, the
+    * pcaTopK / k-means-seeds precedent). No all-pairs join, nothing
+    * corpus-sized ever collects.
+    *
+    * Determinism (oracle bit-parity): means are exact decimal(28,12)
+    * sums / counts; d² is a sequential double fold over identical
+    * centroid doubles; assignment ties break by cluster id; inertia is
+    * an exact decimal sum of d² against the ROUND'S OWN re-mean (so the
+    * reported sequence is E(a_r, m_r), the classically monotone one),
+    * rounded to 6 on output. Clusters that lose every member simply
+    * drop out of later rounds (both engines derive that from the same
+    * assignment). Output: (round, cluster, n_members, inertia). */
   def kmeansTrain(embeddings: DataFrame, rounds: Int = 3,
       cacheKey: Option[String] = None): DataFrame = {
     val spark = embeddings.sparkSession
@@ -599,7 +618,8 @@ object Similarity {
       assigned.join(broadcast(mDf), "cluster")
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_members"),
-          round(decSum(dist2(col("v"), col("centroid"))), 6).as("inertia"))
+          round(Cols.decSum(dist2(col("v"), col("centroid")), 12), 6)
+            .as("inertia"))
         .select(lit(r).as("round"), col("cluster"),
           col("n_members"), col("inertia"))
     }
@@ -630,18 +650,11 @@ object Similarity {
   private def lloydCtes(rounds: Int): String = {
     val d2 = d2Sql("a.e", "c.c")
     val sb = new StringBuilder
-    sb.append("""v AS (
+    sb.append(s"""v AS (
          SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
          FROM embeddings),
-       dims0 AS (SELECT label AS cluster,
-           CAST(unnest(range(64)) AS INTEGER) AS pos, unnest(e) AS x
-         FROM v),
-       cent0 AS (SELECT cluster, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE) AS m
-         FROM dims0 GROUP BY cluster, pos),
-       c0 AS MATERIALIZED (SELECT cluster, list(m ORDER BY pos) AS c
-         FROM cent0 GROUP BY cluster)""")
+       c0 AS MATERIALIZED (${exactMeansSql(
+         "(SELECT label AS cluster, e FROM v)", "cluster")})""")
     for (r <- 1 to rounds) {
       sb.append(s""",
        asg$r AS MATERIALIZED (
@@ -650,15 +663,7 @@ object Similarity {
              row_number() OVER (PARTITION BY a.vec_id
                ORDER BY $d2 ASC, c.cluster) AS rn
            FROM v a CROSS JOIN c${r - 1} c) WHERE rn = 1),
-       dims$r AS (SELECT cluster,
-           CAST(unnest(range(64)) AS INTEGER) AS pos, unnest(e) AS x
-         FROM asg$r),
-       cent$r AS (SELECT cluster, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE) AS m
-         FROM dims$r GROUP BY cluster, pos),
-       c$r AS MATERIALIZED (SELECT cluster, list(m ORDER BY pos) AS c
-         FROM cent$r GROUP BY cluster)""")
+       c$r AS MATERIALIZED (${exactMeansSql(s"asg$r", "cluster")})""")
     }
     sb.toString
   }
@@ -682,15 +687,6 @@ object Similarity {
        ORDER BY round, cluster"""
   }
 
-  /** IVF over the TRAINED coarse quantizer — [[kmeansTrain]]'s R-round
-    * Lloyd centroids as the serving index (the trainer feeding the
-    * index, closing the train→serve loop): inverted lists are the
-    * assignment against the FINAL trained means (the textbook IVF
-    * build: train, then index every vector under the centroid the
-    * probe step will see), each query probes its d²-nearest trained
-    * centroid and ranks that list by exact cosine. Same scale shape as
-    * every IVF variant: R broadcast assignment scans to train, one
-    * list scan per query to serve. */
   /** R Lloyd rounds over `corpus` (`vec_id`, `label`, `v`); returns the
     * inverted-list assignment against the final trained centroids and
     * those centroids. Lists MUST be keyed by the same means the probe
@@ -713,29 +709,22 @@ object Similarity {
     * construction) by exact cosine. One list scan per (query, probe). */
   private[graft] def serveTrained(corpus: DataFrame, assigned: DataFrame,
       mDf: DataFrame, nQueries: Int, k: Int, nprobe: Int): DataFrame = {
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("qd2").asc, col("cluster").asc)
-    val probe = queries.crossJoin(broadcast(mDf))
-      .withColumn("qd2", dist2(col("q"), col("centroid")))
-      .withColumn("r", row_number().over(wq))
-      .filter(col("r") <= nprobe)
-      .select(col("query_id"), col("q"), col("cluster").as("probe_cluster"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned
-      .join(broadcast(probe),
-        col("cluster") === col("probe_cluster") &&
-          col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val probe = centroidProbe(querySet(corpus, nQueries), mDf, "cluster",
+      nprobe, dist2(col("q"), col("centroid")).as("qd2"), col("qd2").asc)
+    topKRows(ranked(assigned.join(broadcast(probe),
+      col("cluster") === col("probe_cluster") &&
+        col("vec_id") =!= col("query_id")), k))
   }
 
+  /** IVF over the TRAINED coarse quantizer — [[kmeansTrain]]'s R-round
+    * Lloyd centroids as the serving index (the trainer feeding the
+    * index, closing the train→serve loop): inverted lists are the
+    * assignment against the FINAL trained means (the textbook IVF
+    * build: train, then index every vector under the centroid the
+    * probe step will see), each query probes its d²-nearest trained
+    * centroid and ranks that list by exact cosine. Same scale shape as
+    * every IVF variant: R broadcast assignment scans to train, one
+    * list scan per query to serve. */
   def ivfTrainedTopK(embeddings: DataFrame, rounds: Int = 2,
       nQueries: Int = 5, k: Int = 10, nprobe: Int = 1,
       cacheKey: Option[String] = None): DataFrame = {
@@ -782,15 +771,7 @@ object Similarity {
     // collected ONCE: ≤ nQueries·k id pairs serve both probe budgets
     // as a local relation instead of re-running the quadratic scan per
     // action (r10 review finding)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
-    val brute = corpus
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val brute = bruteRanked(corpus, nQueries, k)
       .select(col("query_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSeq.toDF("query_id", "vec_id")
@@ -801,14 +782,7 @@ object Similarity {
     // bit-identical to the per-budget collects this replaces) instead
     // of paying two job schedules + two driver round trips.
     val legs = Seq(1, 2).map { np =>
-      val approx = serveTrained(corpus, assigned, mDf, nQueries, k, np)
-        .select(col("query_id").as("aq"), col("vec_id").as("av"))
-      brute
-        .join(approx,
-          col("query_id") === col("aq") && col("vec_id") === col("av"),
-          "left_outer")
-        .groupBy(col("query_id"))
-        .agg((count(col("av")).cast("double") / lit(k.toDouble)).as("recall"))
+      recallJoin(brute, serveTrained(corpus, assigned, mDf, nQueries, k, np), k)
         .select(lit(np).as("nprobe"), col("query_id"), col("recall"))
     }
     val rows = legs.reduce(_.unionAll(_)).collect()
@@ -827,23 +801,13 @@ object Similarity {
     // build trainQuantizer does); the extra c${rounds+1} CTE is never
     // referenced, so DuckDB prunes it
     s"""WITH ${lloydCtes(rounds + 1)},
-       q AS (SELECT vec_id AS query_id, e AS qe FROM v
-         WHERE vec_id < $nQueries),
-       probe AS (SELECT query_id, qe, cluster AS probe_cluster FROM (
-           SELECT q.query_id, q.qe, c.cluster,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ${d2Sql("qe", "c.c")} ASC, c.cluster) AS rn
-           FROM q CROSS JOIN c$rounds c) WHERE rn <= $nprobe),
-       cand AS (SELECT probe.query_id, a.vec_id,
-           round(${graft.Cols.sqlCosine("qe", "a.e")}, 6) AS cos
+       ${querySetSql(nQueries)},
+       ${probeSql(s"c$rounds", "cluster", nprobe, s"${d2Sql("qe", "c.c")} ASC")},
+       cand AS (SELECT probe.query_id, a.vec_id, qe, a.e
          FROM asg${rounds + 1} a JOIN probe
            ON a.cluster = probe.probe_cluster
           AND a.vec_id <> probe.query_id),
-       r2 AS (SELECT query_id, vec_id, cos,
-           CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, vec_id) AS INTEGER) AS rank FROM cand)
-       SELECT query_id, rank, vec_id, round(cos, 3) AS cos
-       FROM r2 WHERE rank <= $k ORDER BY query_id, rank"""
+       ${rankTailSql("cand", k)}"""
   }
 
   /** DuckDB oracle for [[ivfTrainedRecall]]: the brute-force top-k
@@ -851,29 +815,10 @@ object Similarity {
     * unioned. */
   def ivfTrainedRecallOracleSql(rounds: Int = 2, nQueries: Int = 5,
       k: Int = 10): String = {
-    val brute =
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-            FROM embeddings),
-         q AS (SELECT vec_id AS query_id, e AS qe FROM v
-           WHERE vec_id < $nQueries),
-         c AS (SELECT query_id, vec_id,
-            round(list_sum(list_transform(range(1, 65), i -> qe[i] * e[i]))
-              / (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i] * qe[i])))
-                 * sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i])))),
-              6) AS cos
-           FROM v CROSS JOIN q WHERE vec_id <> query_id),
-         r AS (SELECT query_id, vec_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, vec_id) AS rank
-           FROM c)
-         SELECT query_id, vec_id FROM r WHERE rank <= $k"""
-    def one(np: Int): String =
-      s"""SELECT $np AS nprobe, b.query_id,
-            CAST(count(m.vec_id) AS DOUBLE) / $k.0 AS recall
-          FROM ($brute) b
-          LEFT JOIN (${ivfTrainedOracleSql(rounds, nQueries, k, np)}) m
-            ON b.query_id = m.query_id AND b.vec_id = m.vec_id
-          GROUP BY b.query_id"""
+    val brute = s"WITH ${bruteCtes(nQueries, k, "vec_id <> query_id")} " +
+      "SELECT query_id, vec_id FROM ranked"
+    def one(np: Int): String = s"SELECT $np AS nprobe, * FROM (" +
+      recallSql(brute, ivfTrainedOracleSql(rounds, nQueries, k, np), k) + ")"
     s"SELECT * FROM (${one(1)} UNION ALL ${one(2)}) ORDER BY nprobe, query_id"
   }
 
@@ -882,37 +827,41 @@ object Similarity {
     * justifies (or rejects) an index's recall/cost trade-off. Composes
     * two oracled queries, so the recall itself is oracle-checked. */
   def annRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-      bits: Int = 6): DataFrame = {
-    val brute = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = lshTopKMultiProbe(embeddings, nQueries, k, bits)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    brute
-      .join(approx,
-        col("query_id") === col("aq") && col("vec_id") === col("av"),
-        "left_outer")
-      .groupBy(col("query_id"))
-      .agg((count(col("av")).cast("double") / lit(k.toDouble)).as("recall"))
+      bits: Int = 6): DataFrame =
+    recallJoin(bruteForceTopK(embeddings, nQueries, k),
+      lshTopKMultiProbe(embeddings, nQueries, k, bits), k)
       .orderBy(col("query_id"))
-  }
 
   /** PQ index evaluation: per-query recall of the ADC scan + rerank
     * against the exact brute-force top-k — the acceptance metric for a
     * compression level (codebook size / m / rerank budget). */
   def pqRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10)
-      : DataFrame = {
-    val brute = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = pqTopK(embeddings, nQueries, k)
-      .select(col("query_id").as("aq"), col("vec_id").as("av"))
-    brute
-      .join(approx,
+      : DataFrame =
+    recallJoin(bruteForceTopK(embeddings, nQueries, k),
+      pqTopK(embeddings, nQueries, k), k)
+      .orderBy(col("query_id"))
+
+  /** Per-query recall@k: the share of the exact `truth` list's
+    * (query_id, vec_id) rows that the `approx` list also returned. */
+  private def recallJoin(truth: DataFrame, approx: DataFrame, k: Int)
+      : DataFrame =
+    truth.select(col("query_id"), col("vec_id"))
+      .join(approx.select(col("query_id").as("aq"), col("vec_id").as("av")),
         col("query_id") === col("aq") && col("vec_id") === col("av"),
         "left_outer")
       .groupBy(col("query_id"))
       .agg((count(col("av")).cast("double") / lit(k.toDouble)).as("recall"))
-      .orderBy(col("query_id"))
-  }
+
+  /** SQL twin of `recallJoin`: per-query recall@k of the rows of query
+    * `approx` against those of query `truth` (both yield query_id,
+    * vec_id); unordered. */
+  private[graft] def recallSql(truth: String, approx: String, k: Int)
+      : String =
+    s"""SELECT b.query_id, CAST(count(m.vec_id) AS DOUBLE) / $k.0 AS recall
+          FROM ($truth) b
+          LEFT JOIN ($approx) m
+            ON b.query_id = m.query_id AND b.vec_id = m.vec_id
+          GROUP BY b.query_id"""
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): assign every vector to its nearest coarse
@@ -1036,9 +985,9 @@ object Similarity {
         col("a.vec_id") === col("b.vec_id") && col("a.i") <= col("b.i"))
       .groupBy(col("a.i").as("i"), col("b.i").as("j"))
       .agg(count(lit(1)).as("n"),
-        decSum(col("a.x") * col("b.x")).as("sxy"),
-        decSum(col("a.x")).as("sa"),
-        decSum(col("b.x")).as("sb"))
+        Cols.decSum(col("a.x") * col("b.x"), 12).as("sxy"),
+        Cols.decSum(col("a.x"), 12).as("sa"),
+        Cols.decSum(col("b.x"), 12).as("sb"))
       .select(col("i"), col("j"),
         // rounded to 9 decimals: the decimal(38,12) sums carry more
         // significant digits than a double, so each engine's
@@ -1537,7 +1486,7 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("dim"), col("col").as("x"))
       .join(broadcast(comp), "dim")
       .groupBy(col("vec_id"))
-      .agg(round(decSum(col("x") * col("component")), 6).as("proj"))
+      .agg(round(Cols.decSum(col("x") * col("component"), 12), 6).as("proj"))
       .orderBy(col("vec_id"))
   }
 
@@ -1607,27 +1556,12 @@ object Similarity {
     val centroids = spark.read.parquet(dir + "/centroids")
     val postings = spark.read.parquet(dir + "/postings")
       .select(col("vec_id"), col("label"), col("v"))
-    val queries = postings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("q"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("label"))
-    val probe = queries.crossJoin(broadcast(centroids))
-      .withColumn("ccos", cosine(col("q"), col("centroid")))
-      .withColumn("r", row_number().over(wq))
-      .filter(col("r") <= 1)
-      .select(col("query_id"), col("q"), col("label").as("probe_label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    postings
-      .join(broadcast(probe),
-        col("label") === col("probe_label") &&
-          col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("q"), col("v")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 3).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    val probe = centroidProbe(querySet(postings, nQueries), centroids,
+      "label", 1, cosine(col("q"), col("centroid")).as("ccos"),
+      col("ccos").desc)
+    topKRows(ranked(postings.join(broadcast(probe),
+      col("label") === col("probe_label") &&
+        col("vec_id") =!= col("query_id")), k))
   }
 
   /** EXACT mean pairwise dot product over ALL N·(N−1) ordered pairs —
@@ -1643,15 +1577,14 @@ object Similarity {
     val v = asDouble(col("embedding"))
     val dimSums = embeddings
       .select(posexplode(v).as(Seq("dim", "x")))
-      .groupBy(col("dim")).agg(decSum(col("x")).as("sx"))
+      .groupBy(col("dim")).agg(Cols.decSum(col("x"), 12).as("sx"))
     val nss = dimSums.agg(
-      sum((col("sx") * col("sx")).cast("decimal(28,12)")).cast("double")
-        .as("norm_sum_sq"))
+      Cols.decSum(col("sx") * col("sx"), 12).as("norm_sum_sq"))
     val selfd = embeddings
       .select(aggregate(transform(v, x => x * x), lit(0.0),
         (acc, x) => acc + x).as("self"))
-      .agg(sum(col("self").cast("decimal(28,12)")).cast("double")
-        .as("sum_self"), count(lit(1)).as("n"))
+      .agg(Cols.decSum(col("self"), 12).as("sum_self"),
+        count(lit(1)).as("n"))
     selfd.crossJoin(broadcast(nss))
       .select(col("n").as("n_vecs"),
         round(col("norm_sum_sq"), 6).as("norm_sum_sq"),

@@ -157,4 +157,35 @@ class PlanAuditSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("no scaladoc is stacked on another (scaladoc drops the upper one)") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+      .toSeq.sortBy(_.toString)
+    val stacked = files.flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      def blank(i: Int) = i < lines.length && lines(i).trim.isEmpty
+      var found = Seq.empty[String]
+      var i = 0
+      while (i < lines.length) {
+        if (lines(i).trim.startsWith("/**")) {
+          var end = i
+          while (end < lines.length && !lines(end).contains("*/")) end += 1
+          var next = end + 1
+          while (blank(next)) next += 1
+          if (next < lines.length && lines(next).trim.startsWith("/**"))
+            found :+= s"$p:${i + 1} (next doc at line ${next + 1})"
+          i = end + 1
+        } else i += 1
+      }
+      found
+    }
+    assert(stacked.isEmpty, "a /** */ block followed by another one, with " +
+      "only blank lines between, is dropped by scaladoc:\n" +
+      stacked.mkString("\n"))
+  }
 }

@@ -439,4 +439,75 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows(vector.Similarity
       .ivfTrainedTopK(emb, rounds = 2, cacheKey = key)) == topkCold)
   }
+
+  test("shared kNN tail: rounded-cosine ties rank by vec_id, ranks have " +
+      "no gaps, and no query lists itself (brute force, LSH, IVF)") {
+    // 64 dims (the SRP planes are 64-dim). Label "a" sits near one
+    // direction, label "b" near its opposite. Vectors 1 and 2 are the
+    // near tie: to query 0 their cosines differ only below 1e-6, and the
+    // LARGER unrounded cosine belongs to the larger vec_id 2, so a tail
+    // that ranked on the unrounded cosine would list 2 before 1.
+    // Vectors 3 and 4 are exact duplicates.
+    val base = (0 until 64).map(i => 1f + ((i * 5) % 11) / 16f)
+    def bump(i: Int, by: Float): Seq[Float] = base.updated(i, base(i) + by)
+    val vecs: Seq[(Long, String, Seq[Float])] = Seq(
+      (0L, "a", base),
+      (1L, "a", bump(3, 0.041015625f)),
+      (2L, "a", bump(7, 0.0400390625f)),
+      (3L, "a", bump(10, 0.5f)),
+      (4L, "a", bump(10, 0.5f)),
+      (5L, "a", bump(20, 0.25f)),
+      (6L, "b", base.map(-_)),
+      (7L, "b", bump(30, 0.5f).map(-_)))
+    val byId = vecs.map(v => v._1 -> v).toMap
+    // the native cosine's sequential double fold, and Spark's round(x, 6)
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      for (i <- a.indices) {
+        val x = a(i).toDouble; val y = b(i).toDouble
+        d += x * y; na += x * x; nb += y * y
+      }
+      d / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def r6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val (c1, c2) = (cos(base, byId(1L)._3), cos(base, byId(2L)._3))
+    assert(c2 > c1 && c2 - c1 < 1e-6 && r6(c1) == r6(c2),
+      s"fixture lost its near tie: $c1 vs $c2")
+    val planes = vector.Similarity.srpPlanes(6)
+    def bucket(v: Seq[Float]): Long = planes.zipWithIndex.map { case (p, i) =>
+      if (p.indices.foldLeft(0.0)((acc, j) => acc + v(j) * p(j)) >= 0)
+        1L << i else 0L
+    }.sum
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType), StructField("label", StringType),
+      StructField("embedding", ArrayType(FloatType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vecs.map { case (id, l, e) => Row(id, l, e) }), schema)
+    val S = vector.Similarity
+    // (operator, its candidates for a query: the rest of the corpus,
+    // the query's SRP bucket, the query's IVF list = its own label)
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame,
+        (Long, Long) => Boolean)] = Seq(
+      ("bruteForceTopK", k => S.bruteForceTopK(df, nQueries = 2, k = k),
+        (_, _) => true),
+      ("lshTopK", k => S.lshTopK(df, nQueries = 2, k = k),
+        (q, v) => bucket(byId(q)._3) == bucket(byId(v)._3)),
+      ("ivfTopK", k => S.ivfTopK(df, nQueries = 2, k = k),
+        (q, v) => byId(q)._2 == byId(v)._2))
+    for ((name, run, cand) <- ops; k <- Seq(3, 10)) {
+      val rows = run(k).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      for (q <- Seq(0L, 1L)) {
+        val mine = rows.filter(_._1 == q)
+        val want = vecs.map(_._1).filter(v => v != q && cand(q, v))
+          .sortBy(v => (-r6(cos(byId(q)._3, byId(v)._3)), v)).take(k)
+        assert(!mine.exists(_._3 == q), s"$name k=$k: query $q lists itself")
+        assert(mine.map(_._2) == (1 to want.size),
+          s"$name k=$k q=$q: ranks ${mine.map(_._2)}")
+        assert(mine.map(_._3) == want,
+          s"$name k=$k q=$q: got ${mine.map(_._3)}, want $want")
+      }
+    }
+  }
 }
