@@ -148,29 +148,10 @@ object SparkEntry {
     * plans must match this all-pairs form bit-for-bit). */
   private def jaccardAllPairsOracleSql(threshold: Double,
       where: String = ""): String =
-    s"""WITH tok AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           $where),
-         sh AS (
-           SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-               ELSE list_transform(range(len(w) - 2),
-                 i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b, n_common,
-            CAST(n_common AS DOUBLE)
-              / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON doc_a = sa.doc_id
-         JOIN sizes sb ON doc_b = sb.doc_id
-         WHERE CAST(n_common AS DOUBLE)
-              / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= $threshold
+    s"""WITH ${D.shinglesSql(where = where)},
+         ${D.jaccardSql()}
+         SELECT doc_a, doc_b, n_common, jaccard FROM jac
+         WHERE jaccard >= $threshold
          ORDER BY doc_a, doc_b"""
 
   /** IVF + one Lloyd refinement: re-assign to nearest seed, exact-mean
@@ -179,11 +160,8 @@ object SparkEntry {
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
          seed AS (${V.exactMeansSql("v", "label")}),
-         asg AS (SELECT vec_id, e, cluster FROM (
-            SELECT v.vec_id, v.e, seed.label AS cluster,
-              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                ${Cols.sqlCosine("e", "c")} DESC, seed.label) AS r
-            FROM v CROSS JOIN seed) WHERE r = 1),
+         asg AS (SELECT vec_id, e, domain AS cluster
+           FROM (${V.nearestCentroidSql("seed", "label")})),
          rvec AS (${V.exactMeansSql("asg", "cluster")}),
          ${V.querySetSql(5)},
          ${V.probeSql("rvec", "cluster", 1, V.cosDescSql)},
@@ -249,11 +227,8 @@ object SparkEntry {
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings),
          cvec AS (${V.exactMeansSql("v", "label")}),
-         assign AS (SELECT vec_id, e, label AS cluster FROM (
-            SELECT v.vec_id, v.e, cvec.label,
-              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                ${Cols.sqlCosine("e", "c")} DESC, cvec.label) AS r
-            FROM v CROSS JOIN cvec) WHERE r = 1),
+         assign AS (SELECT vec_id, e, domain AS cluster
+           FROM (${V.nearestCentroidSql("cvec", "label")})),
          sizes AS (SELECT cluster, count(*) AS csz
            FROM assign GROUP BY cluster),
          blocked AS (SELECT assign.*,
@@ -273,33 +248,22 @@ object SparkEntry {
        SELECT dup_id, kept_id, cluster, round(cos, 3) AS cos
        FROM k WHERE rn = 1 ORDER BY dup_id"""
 
+  /** The near-dup pair list `jp(doc_a, doc_b)`: word-3-gram shingles,
+    * Jaccard >= 0.5 (the q_dedup_decisions oracle and the prefix of
+    * [[nearDupClusterCtes]]). */
+  private val nearDupPairCtes: String =
+    s"""${D.shinglesSql()},
+         ${D.jaccardSql()},
+         jp AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.5)"""
+
   /** The near-dup pair graph -> connected-components closure shared by
     * the q_dedup_clusters / q_split_leakage / q_cluster_canonical /
-    * q_dedup_weights oracles: word-3-gram shingles, Jaccard >= 0.5
-    * pairs, both edge directions, recursive transitive closure,
-    * min-reachable-id label. Ends in lab(doc_id, cluster_id) — member
-    * (edge-connected) docs only; each oracle handles singletons its
-    * own way. */
+    * q_dedup_weights oracles: [[nearDupPairCtes]], both edge
+    * directions, recursive transitive closure, min-reachable-id label.
+    * Ends in lab(doc_id, cluster_id) — member (edge-connected) docs
+    * only; each oracle handles singletons its own way. */
   private val nearDupClusterCtes: String =
-    """tok AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-               ELSE list_transform(range(len(w) - 2),
-                 i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         cnt AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         jp AS (
-           SELECT doc_a, doc_b FROM cnt
-           JOIN sizes sa ON doc_a = sa.doc_id
-           JOIN sizes sb ON doc_b = sb.doc_id
-           WHERE CAST(n_common AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+    s"""$nearDupPairCtes,
          edges AS (
            SELECT doc_a AS src, doc_b AS dst FROM jp
            UNION SELECT doc_b, doc_a FROM jp),
@@ -320,13 +284,7 @@ object SparkEntry {
            "domain")})
        SELECT vec_id, label, domain, round(scos, 6) AS cos,
          domain = label AS is_home
-       FROM (
-         SELECT v.vec_id, v.label, cvec.domain,
-           ${Cols.sqlCosine("e", "c")} AS scos,
-           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             ${Cols.sqlCosine("e", "c")} DESC, cvec.domain) AS r
-         FROM v CROSS JOIN cvec)
-       WHERE r = 1 ORDER BY vec_id"""
+       FROM (${V.nearestCentroidSql("cvec", "domain")}) ORDER BY vec_id"""
 
   private val decSumQty = Cols.sqlDecSum("l_quantity", 2)
   private val revenueExpr =
@@ -1279,15 +1237,8 @@ object SparkEntry {
         "key-grain count aggregations meet in a key-grain join; the wide " +
         "fact-fact shuffle never appears in the plan")),
     Query("q_top_ngrams", t("documents")(T.topNgrams(_)),
-      Some("""WITH tok AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-               ELSE list_transform(range(len(w) - 2),
-                 i -> array_to_string(w[i+1:i+3], ' ')) END) AS ngram
-           FROM tok)
-         SELECT ngram, count(*) AS n_docs FROM sh GROUP BY ngram
+      Some(s"""WITH ${D.shinglesSql()}
+         SELECT shingle AS ngram, count(*) AS n_docs FROM sh GROUP BY shingle
          ORDER BY n_docs DESC, ngram LIMIT 20"""),
       note = Some("corpus frequency table shuffles (xxhash64, count) " +
         "pairs, never ngram strings; winners recovered via broadcast " +
@@ -1297,26 +1248,7 @@ object SparkEntry {
             min(n_chars) AS min_chars, max(n_chars) AS max_chars
          FROM documents GROUP BY n_chars // 50 ORDER BY bucket_start""")),
     Query("q_dedup_decisions", t("documents")(operators.Pipeline.dedupDecisions(_)),
-      Some("""WITH tok AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-               ELSE list_transform(range(len(w) - 2),
-                 i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         jp AS (
-           SELECT doc_a, doc_b FROM pairs
-           JOIN sizes sa ON doc_a = sa.doc_id
-           JOIN sizes sb ON doc_b = sb.doc_id
-           WHERE CAST(n_common AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+      Some(s"""WITH $nearDupPairCtes,
          dropped AS (
            SELECT doc_b AS doc_id, min(doc_a) AS dup_of FROM jp GROUP BY doc_b)
          SELECT d.doc_id, dropped.dup_of IS NULL AS keep, dropped.dup_of

@@ -19,7 +19,23 @@ import graft.text.TextAnalysis.tokens
   *    classic MinHash-LSH plan: shuffle is bounded by signature size
   *    (k×8 bytes/doc), not document size, and hot buckets are handled by
   *    AQE skew-join splitting.
-  *  - All hashing uses xxhash64 (codegen'd Catalyst expression); no UDFs.
+  *  - Two hash families, both codegen'd or native expressions (no UDFs):
+  *    - xxhash64: the shingle-hash index of the exact Jaccard family
+  *      (a join key only, so results are exact modulo 64-bit
+  *      collisions and oracled) and the fast twins [[minhashLshPairs]]
+  *      and [[simhashPairs]], whose rows depend on the hash values and
+  *      are rows-only in the catalog;
+  *    - md5 prefixes, which DuckDB computes bit-identically: the
+  *      engine-neutral twins [[NeutralMinHash]], [[simhashPairsNeutral]],
+  *      [[substringDedup]] and [[exactDedupByDigest]], all oracled.
+  *
+  * Each set-similarity rule has one definition per side of the oracle,
+  * written independently: [[shingleHashes]] / [[shinglesSql]] (the
+  * shingle relation), [[docSizes]] + [[prunedPairCounts]] +
+  * [[jaccard]] / [[jaccardSql]] (sizes, intersection counts, the Jaccard
+  * expression), [[bucketPairs]] / `NeutralMinHash.candsSql` (the banded
+  * candidate self-join) and [[agreement]] / [[agreementSql]] (the MinHash
+  * estimate).
   */
 object Dedup {
 
@@ -48,6 +64,132 @@ object Dedup {
   // string with slice+concat_ws and hashing once after the explode — ANSI
   // element_at bounds checks + per-argument hash dispatch dominate. The
   // string form below is the fast path; hash AFTER explode.
+
+  /** The narrow (doc_id, h) relation every hashed-shingle operator
+    * reads: each document's distinct shingles, hashed to 64 bits after
+    * the explode. */
+  private def shingleHashes(documents: DataFrame, n: Int): DataFrame =
+    documents
+      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
+      .select(col("doc_id"), xxhash64(col("s")).as("h"))
+
+  /** SQL twin of [[shingles]] + explode: CTEs `tok` and `sh(<cols>,
+    * shingle)`, the distinct word n-grams of each `documents` row at the
+    * grain `cols` (`doc_id`, `source`, or both), rows filtered by
+    * `where`. */
+  def shinglesSql(n: Int = 3, cols: String = "doc_id",
+      where: String = ""): String =
+    s"""tok AS (
+         SELECT $cols, string_split(text, ' ') AS w FROM documents
+         $where),
+       sh AS (
+         SELECT DISTINCT $cols,
+           unnest(CASE WHEN len(w) < $n THEN [array_to_string(w, ' ')]
+             ELSE list_transform(range(len(w) - ${n - 1}),
+               i -> array_to_string(w[i+1:i+$n], ' ')) END) AS shingle
+         FROM tok)"""
+
+  /** |A| per document, (doc_id, n_sh): size(shingles) computed
+    * row-locally, NOT a groupBy over the exploded rows, which would
+    * shuffle the whole posting set a second time just to count it. */
+  private def docSizes(documents: DataFrame, n: Int): DataFrame =
+    documents.select(col("doc_id"), size(shingles(col("text"), n)).as("n_sh"))
+
+  /** Shingle hashes with document frequency in [2, maxDf]: a plain
+    * codegen'd count aggregate (no object state), so hot shingles never
+    * reach a pair join. */
+  private def docFreqs(sh: DataFrame, maxDf: Int): DataFrame =
+    sh.groupBy(col("h"))
+      .agg(count(lit(1)).as("df"))
+      .filter(col("df").between(2, maxDf))
+
+  /** The df-pruned pair count over a (doc_id, h) relation: (doc_a,
+    * doc_b, n_common), doc_a < doc_b, counted over the shingles with
+    * 2 <= df <= maxDf. The df groupBy and the prune join share the
+    * hash-partitioning on h.
+    *
+    * `indexed` appears on BOTH sides of the self-join. In the at-scale
+    * shuffle-join form both consumers request the same hash-partitioning
+    * on h and Spark dedups the identical exchange into one Exchange + a
+    * ReusedExchange — DedupSpec pins this ("reads the shingle index once
+    * via ReusedExchange", forced no-broadcast). At sf0.01 AQE instead
+    * broadcasts one side and the cheap explode subtree runs per side
+    * (PLANSTATS reused=0 there is expected, not a regression). If a plan
+    * change upstream of `indexed` breaks the at-scale reuse, the
+    * dominant stage silently doubles — the spec fails first. */
+  private def prunedPairCounts(sh: DataFrame, maxDf: Int): DataFrame = {
+    val indexed = sh.join(docFreqs(sh, maxDf).select(col("h")), Seq("h"))
+    indexed.as("a").join(indexed.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_common"))
+  }
+
+  /** Jaccard from the intersection and the two set sizes, with
+    * |A∪B| = |A| + |B| − |A∩B|: the one double expression every Jaccard
+    * operator thresholds on, so boundary rows agree bit for bit. */
+  private def jaccard(nCommon: Column, na: Column, nb: Column): Column =
+    nCommon.cast("double") / (na + nb - nCommon).cast("double")
+
+  /** SQL twin of [[docSizes]], the pair count and [[jaccard]] over the
+    * `sh` CTE: CTEs `sizes(doc_id, n_sh)`, `common(doc_a, doc_b,
+    * n_common)` and `jac(doc_a, doc_b, n_common, jaccard)`. Without
+    * `cands` every pair sharing a shingle is counted (doc_a < doc_b, no
+    * df cap: the exact all-pairs truth); with it only the pairs of that
+    * (doc_a, doc_b, ...) relation are. */
+  def jaccardSql(cands: Option[String] = None): String = {
+    val common = cands match {
+      case None =>
+        """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+           FROM sh a JOIN sh b
+             ON a.shingle = b.shingle AND a.doc_id < b.doc_id"""
+      case Some(c) =>
+        s"""SELECT c.doc_a, c.doc_b, count(*) AS n_common
+           FROM $c c
+           JOIN sh a ON a.doc_id = c.doc_a
+           JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle"""
+    }
+    s"""sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+       common AS (
+         $common
+         GROUP BY 1, 2),
+       jac AS (
+         SELECT doc_a, doc_b, n_common,
+           CAST(n_common AS DOUBLE)
+             / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
+         FROM common
+         JOIN sizes sa ON doc_a = sa.doc_id
+         JOIN sizes sb ON doc_b = sb.doc_id)"""
+  }
+
+  /** The candidate self-join every banded index shares (MinHash bands,
+    * SimHash chunks): rows of `index` (doc_id, `bucket`, `key`, ...)
+    * equal on both bucket columns pair up as doc_a < doc_b, each pair
+    * once. `carried` are extra output columns spelled over the `a` and
+    * `b` sides. */
+  private def bucketPairs(index: DataFrame, bucket: String, key: String,
+      carried: Column*): DataFrame =
+    index.as("a")
+      .join(index.as("b"),
+        col(s"a.$bucket") === col(s"b.$bucket") &&
+          col(s"a.$key") === col(s"b.$key") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
+        carried: _*)
+      .dropDuplicates("doc_a", "doc_b")
+
+  /** MinHash estimated Jaccard: the share of the k signature positions
+    * on which two signatures agree (k a power of two keeps the division
+    * exact in both engines). */
+  private def agreement(sa: Column, sb: Column, k: Int): Column =
+    size(filter(zip_with(sa, sb, (p, q) => p === q), v => v))
+      .cast("double") / lit(k.toDouble)
+
+  /** SQL twin of [[agreement]]. */
+  private def agreementSql(k: Int, sa: String = "sa", sb: String = "sb")
+      : String =
+    s"len(list_filter(range(1, $k + 1), i -> $sa[i] = $sb[i])) / ${k}.0"
 
   /** Exact dedup: group identical texts, keep the smallest doc_id
     * (deterministic keeper), count members. */
@@ -103,43 +245,12 @@ object Dedup {
     * semantics). */
   def jaccardPairs(documents: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxDf: Int = 1000): DataFrame = {
-    val sh = documents
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-    // |A| per doc is size(shingles) computed row-locally — NOT a groupBy
-    // over the exploded rows, which would shuffle the whole posting set a
-    // second time just to count it.
-    val sizes = documents
-      .select(col("doc_id"), size(shingles(col("text"), n)).as("n_sh"))
-    // df-prune FIRST with a plain codegen'd count aggregate (no object
-    // state), so hot shingles never reach the pair join; the groupBy
-    // and the prune join share the hash-partitioning on h.
-    val dfOk = sh.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val indexed = sh.join(dfOk, Seq("h"))
-    // `indexed` appears on BOTH sides of the self-join. In the
-    // at-scale shuffle-join form both consumers request the same
-    // hash-partitioning on h and Spark dedups the identical exchange
-    // into one Exchange + a ReusedExchange — DedupSpec pins this
-    // ("reads the shingle index once via ReusedExchange", forced
-    // no-broadcast). At sf0.01 AQE instead broadcasts one side and the
-    // cheap explode subtree runs per side (PLANSTATS reused=0 there is
-    // expected, not a regression). If a plan change upstream of
-    // `indexed` breaks the at-scale reuse, the dominant stage silently
-    // doubles — the spec fails first. (r13 ADVICE, low.)
-    val pairs = indexed.as("a").join(indexed.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs
+    val sizes = docSizes(documents, n)
+    prunedPairCounts(shingleHashes(documents, n), maxDf)
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("sa.n_sh") + col("sb.n_sh") - col("n_common")).cast("double"))
+        jaccard(col("n_common"), col("sa.n_sh"), col("sb.n_sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -154,25 +265,14 @@ object Dedup {
     * candidate set is exactly the h-restriction of the unsliced one. */
   private def jaccardSlicePartial(documents: DataFrame, n: Int,
       maxDf: Int, slices: Int, i: Int, pairBuckets: Int): DataFrame = {
-    val sh = documents
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-      // the slice predicate sits on the MAP side of every shuffle in
-      // this job: the exploded shingle stream is filtered to 1/slices
-      // of the key space before the df groupBy / prune join / pair
-      // join shuffle anything, so the job's transient shuffle+spill
-      // bytes are ~1/slices of the unsliced join's
+    // the slice predicate sits on the MAP side of every shuffle in this
+    // job: the exploded shingle stream is filtered to 1/slices of the
+    // key space before the df groupBy / prune join / pair join shuffle
+    // anything, so the job's transient shuffle+spill bytes are
+    // ~1/slices of the unsliced join's
+    val sh = shingleHashes(documents, n)
       .filter(pmod(col("h"), lit(slices.toLong)) === lit(i.toLong))
-    val dfOk = sh.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val indexed = sh.join(dfOk, Seq("h"))
-    indexed.as("a").join(indexed.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
+    prunedPairCounts(sh, maxDf)
       // pair-hash bucket for the SLICED final assembly: the global
       // sum+threshold pass partitions cleanly on the pair key, so it
       // too runs as sequential partition-pruned jobs (see below)
@@ -285,11 +385,7 @@ object Dedup {
     * the operator so auto-K can price a run before committing disk). */
   def pairCandidateCount(documents: DataFrame, n: Int = 3,
       maxDf: Int = 1000): Long =
-    documents
-      .select(explode(shingles(col("text"), n)).as("s"))
-      .select(xxhash64(col("s")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
+    docFreqs(shingleHashes(documents, n), maxDf)
       .agg(coalesce(sum(expr("df * (df - 1) div 2")), lit(0L)))
       .head().getLong(0)
 
@@ -390,8 +486,8 @@ object Dedup {
     *                                       min(|A|, |B|))
     * misses the threshold is dead no matter what later slices add, and
     * is dropped. At the LAST step rem = 0 and cap = cur exactly, so
-    * the prune IS the final threshold — evaluated with the identical
-    * double expression [[jaccardPairs]] uses, keeping the boundary
+    * the prune IS the final threshold — evaluated with the shared
+    * [[jaccard]] expression [[jaccardPairs]] uses, keeping the boundary
     * bit-exact (DedupSpec pins row-identity; the catalog entry shares
     * the exact quadratic DuckDB oracle).
     *
@@ -448,17 +544,14 @@ object Dedup {
               least(col("rem_a"), col("rem_b")).cast("long"),
             least(col("n_a"), col("n_b")).cast("long"))
         val pruned = joined
-          .filter(cap.cast("double") /
-            (col("n_a") + col("n_b") - cap).cast("double") >= threshold)
+          .filter(jaccard(cap, col("n_a"), col("n_b")) >= threshold)
         if (last)
           // at the LAST step the prune IS the threshold (cap =
-          // n_common exactly), so the merge emits FINAL rows —
-          // jaccard computed with the identical jaccardPairs
-          // expression — straight into the pairs artifact: no
-          // separate assembly pass over the survivor set
+          // n_common exactly), so the merge emits FINAL rows
+          // straight into the pairs artifact: no separate assembly
+          // pass over the survivor set
           pruned.withColumn("jaccard",
-            col("n_common").cast("double") /
-              (col("n_a") + col("n_b") - col("n_common")).cast("double"))
+            jaccard(col("n_common"), col("n_a"), col("n_b")))
             .select(col("doc_a"), col("doc_b"), col("n_common"),
               col("jaccard"))
         else pruned.select(col("doc_a"), col("doc_b"), col("n_common"))
@@ -547,14 +640,6 @@ object Dedup {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(pairsDir))
   }
-
-  /** The narrow (doc_id, shingle-hash) relation every prefix-join stage
-    * reads — callers persist it (it is referenced three times: df count,
-    * prefix ranking, doc-array build). */
-  private def shingleHashes(documents: DataFrame, n: Int): DataFrame =
-    documents
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
 
   /** Length-filtered candidate pairs from the prefix index over a
     * (persisted) shingle-hash relation — the verify join's input:
@@ -656,9 +741,7 @@ object Dedup {
         graft.functions.VectorFunctions
           .sortedIntersectCount(col("ha"), col("hb")).as("n_common"),
         col("na"), col("nb"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
+      .withColumn("jaccard", jaccard(col("n_common"), col("na"), col("nb")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -694,24 +777,8 @@ object Dedup {
     * |A|, |B|) row, so asymmetry costs zero extra joins. */
   def containmentPairs(documents: DataFrame, n: Int = 3,
       threshold: Double = 0.9, maxDf: Int = 1000): DataFrame = {
-    val sh = documents
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-    val sizes = documents
-      .select(col("doc_id"), size(shingles(col("text"), n)).as("n_sh"))
-    val dfOk = sh.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val indexed = sh.join(dfOk, Seq("h"))
-    // Both self-join sides read `indexed` once via ReusedExchange on h
-    // — same dependency (and same re-check rule) as jaccardPairs above.
-    val pairs = indexed.as("a").join(indexed.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs
+    val sizes = docSizes(documents, n)
+    prunedPairCounts(shingleHashes(documents, n), maxDf)
       .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")),
         Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")),
@@ -733,14 +800,7 @@ object Dedup {
   /** DuckDB oracle for [[containmentPairs]]. */
   def containmentOracleSql(threshold: Double = 0.9,
       maxDf: Int = 1000): String =
-    s"""WITH tok AS (
-         SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id,
-           unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-             ELSE list_transform(range(len(w) - 2),
-               i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-         FROM tok),
+    s"""WITH ${shinglesSql()},
        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
        df AS (SELECT shingle FROM sh GROUP BY shingle
          HAVING count(*) BETWEEN 2 AND $maxDf),
@@ -817,59 +877,62 @@ object Dedup {
     def signature(text: Column, k: Int = 16, n: Int = 3): Column =
       NeutralMinHashSignature.signature(text, k, n)
 
-    /** Shared CTE prefix (tok → … → bands) — the SQL twin of
-      * [[neutralBands]], used by every neutral-minhash oracle. */
-    def bandsCteSql(k: Int = 16, bands: Int = 4): String = {
-      val r = k / bands
+    /** SQL twin of [[signaturesBy]]: CTEs tok → sh → hx → consts →
+      * sig1 → `sigs(<grain>, sig)`, one k-lane signature per `grain`
+      * value over its word `n`-gram shingles. */
+    def sigsCteSql(k: Int, n: Int, grain: String): String = {
       val consts = (0 until k)
         .map(i => s"($i, ${a(i)}, ${b(i)})").mkString(", ")
-      val bandRows = (0 until bands).map(i => s"($i)").mkString(", ")
-      s"""tok AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-               ELSE list_transform(range(len(w) - 2),
-                 i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-           FROM tok),
+      s"""${shinglesSql(n, grain)},
          hx AS (
-           SELECT doc_id,
+           SELECT $grain,
              ('0x' || substr(md5(shingle), 1, 8))::BIGINT % $P AS x
            FROM sh),
          consts(i, a, b) AS (VALUES $consts),
          sig1 AS (
-           SELECT doc_id, i, min((a * x + b) % $P) AS m
-           FROM hx CROSS JOIN consts GROUP BY doc_id, i),
+           SELECT $grain, i, min((a * x + b) % $P) AS m
+           FROM hx CROSS JOIN consts GROUP BY $grain, i),
          sigs AS (
-           SELECT doc_id, list(m ORDER BY i) AS sig FROM sig1 GROUP BY doc_id),
+           SELECT $grain, list(m ORDER BY i) AS sig FROM sig1
+           GROUP BY $grain)"""
+    }
+
+    /** Shared CTE prefix (tok → … → bands) — the SQL twin of
+      * [[neutralBands]], used by every neutral-minhash oracle. */
+    def bandsCteSql(k: Int = 16, bands: Int = 4, n: Int = 3): String = {
+      val r = k / bands
+      val bandRows = (0 until bands).map(i => s"($i)").mkString(", ")
+      s"""${sigsCteSql(k, n, "doc_id")},
          bands AS (
            SELECT doc_id, sig, band,
              sig[band * $r + 1 : band * $r + $r] AS key
            FROM sigs CROSS JOIN (VALUES $bandRows) b(band))"""
     }
 
-    /** DuckDB oracle SQL for [[minhashLshPairsNeutral]] with the same
-      * constants, shingling, banding, and threshold. */
-    def oracleSql(k: Int = 16, bands: Int = 4, threshold: Double = 0.5)
-        : String =
-      s"""WITH ${bandsCteSql(k, bands)},
-         cands AS (
+    /** SQL twin of [[bucketPairs]] over the band index:
+      * `cands(doc_a, doc_b, sa, sb)`. */
+    val candsSql: String =
+      """cands AS (
            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
              x.sig AS sa, y.sig AS sb
            FROM bands x JOIN bands y
-             ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)
-         SELECT doc_a, doc_b,
-           len(list_filter(range(1, $k + 1), i -> sa[i] = sb[i]))
-             / ${k}.0 AS est_jaccard
+             ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)"""
+
+    /** DuckDB oracle SQL for [[minhashLshPairsNeutral]] with the same
+      * constants, shingling, banding, and threshold. */
+    def oracleSql(k: Int = 16, bands: Int = 4, threshold: Double = 0.5,
+        n: Int = 3): String =
+      s"""WITH ${bandsCteSql(k, bands, n)},
+         $candsSql
+         SELECT doc_a, doc_b, ${agreementSql(k)} AS est_jaccard
          FROM cands
-         WHERE len(list_filter(range(1, $k + 1), i -> sa[i] = sb[i]))
-             / ${k}.0 >= $threshold
+         WHERE ${agreementSql(k)} >= $threshold
          ORDER BY doc_a, doc_b"""
 
     /** DuckDB oracle SQL for [[incrementalDedup]]. */
     def incrementalOracleSql(incomingSource: String = "src0", k: Int = 16,
-        bands: Int = 4): String =
-      s"""WITH ${bandsCteSql(k, bands)},
+        bands: Int = 4, n: Int = 3): String =
+      s"""WITH ${bandsCteSql(k, bands, n)},
          inc AS (
            SELECT doc_id FROM documents WHERE source = '$incomingSource'),
          hits AS (
@@ -965,22 +1028,10 @@ object Dedup {
     * are invertible mod P — equal minima imply a shared shingle. */
   def minhashEstimate(documents: DataFrame, k: Int = 16, bands: Int = 4,
       n: Int = 3): DataFrame = {
-    val banded = neutralBands(documents, k, bands, n)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val sh = documents
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-    val sizes = documents
-      .select(col("doc_id"), size(shingles(col("text"), n)).as("n_sh"))
-    val nMatch = size(filter(zip_with(col("sig_a"), col("sig_b"),
-      (p, q) => p === q), v => v))
+    val cand = bucketPairs(neutralBands(documents, k, bands, n),
+      "band", "band_key", col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
+    val sh = shingleHashes(documents, n)
+    val sizes = docSizes(documents, n)
     // The signatures RIDE THROUGH the n_common aggregation (min() is
     // exact here: sig_a/sig_b are functionally determined by the group
     // key; unlike first(), min() stays deterministic should that
@@ -1002,9 +1053,9 @@ object Dedup {
     common
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("est_jaccard", nMatch.cast("double") / lit(k.toDouble))
-      .withColumn("exact_jaccard", col("n_common").cast("double") /
-        (col("sa.n_sh") + col("sb.n_sh") - col("n_common")).cast("double"))
+      .withColumn("est_jaccard", agreement(col("sig_a"), col("sig_b"), k))
+      .withColumn("exact_jaccard",
+        jaccard(col("n_common"), col("sa.n_sh"), col("sb.n_sh")))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
         col("exact_jaccard"),
         (col("est_jaccard") - col("exact_jaccard")).as("err"))
@@ -1013,32 +1064,18 @@ object Dedup {
 
   /** DuckDB oracle for [[minhashEstimate]] — same constants, banding,
     * and exact-Jaccard arithmetic. */
-  def minhashEstimateOracleSql(k: Int = 16, bands: Int = 4): String = {
-    val est = s"len(list_filter(range(1, $k + 1), i -> sa[i] = sb[i]))" +
-      s" / ${k}.0"
-    val exact = "CAST(n_common AS DOUBLE)" +
-      " / CAST(sa2.n_sh + sb2.n_sh - n_common AS DOUBLE)"
-    s"""WITH ${NeutralMinHash.bandsCteSql(k, bands)},
-       cands AS (
-         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-           x.sig AS sa, y.sig AS sb
-         FROM bands x JOIN bands y
-           ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       common AS (
-         SELECT c.doc_a, c.doc_b, count(*) AS n_common
-         FROM cands c
-         JOIN sh p ON p.doc_id = c.doc_a
-         JOIN sh q ON q.doc_id = c.doc_b AND q.shingle = p.shingle
-         GROUP BY 1, 2)
+  def minhashEstimateOracleSql(k: Int = 16, bands: Int = 4,
+      n: Int = 3): String = {
+    val est = agreementSql(k)
+    s"""WITH ${NeutralMinHash.bandsCteSql(k, bands, n)},
+       ${NeutralMinHash.candsSql},
+       ${jaccardSql(Some("cands"))}
        SELECT c.doc_a, c.doc_b,
          $est AS est_jaccard,
-         $exact AS exact_jaccard,
-         $est - $exact AS err
+         j.jaccard AS exact_jaccard,
+         $est - j.jaccard AS err
        FROM cands c
-       JOIN common USING (doc_a, doc_b)
-       JOIN sizes sa2 ON c.doc_a = sa2.doc_id
-       JOIN sizes sb2 ON c.doc_b = sb2.doc_id
+       JOIN jac j USING (doc_a, doc_b)
        ORDER BY doc_a, doc_b"""
   }
 
@@ -1065,14 +1102,8 @@ object Dedup {
     // released below once the decile rows — a ≤10-row model read —
     // are collected, so nothing stays cached after evaluation
     val truth = jaccardPrefixPairs(documents, n, threshold)
-    val banded = neutralBands(documents, k, bands, n)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
+    val cand = bucketPairs(neutralBands(documents, k, bands, n),
+        "band", "band_key")
       .withColumn("found", lit(1L))
     val rows = truth
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -1092,37 +1123,21 @@ object Dedup {
     * only; the engine side never forms it) outer-joined against the
     * neutral band index's candidate pairs, bucketed identically. */
   def lshRecallOracleSql(k: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): String = {
-    val j = "CAST(n_common AS DOUBLE)" +
-      " / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)"
-    s"""WITH ${NeutralMinHash.bandsCteSql(k, bands)},
-       cands AS (
-         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y
-           ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       p AS (
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-         FROM sh a JOIN sh b
-           ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         GROUP BY 1, 2),
-       truth AS (
-         SELECT doc_a, doc_b, $j AS jac
-         FROM p
-         JOIN sizes sa ON doc_a = sa.doc_id
-         JOIN sizes sb ON doc_b = sb.doc_id
-         WHERE $j >= $threshold),
+      threshold: Double = 0.5, n: Int = 3): String =
+    s"""WITH ${NeutralMinHash.bandsCteSql(k, bands, n)},
+       ${NeutralMinHash.candsSql},
+       ${jaccardSql()},
        m AS (
-         SELECT t.jac, c.doc_a IS NOT NULL AS found
-         FROM truth t LEFT JOIN cands c
-           ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b)
-       SELECT CAST(floor(jac * 10) AS BIGINT) AS bucket,
+         SELECT t.jaccard, c.doc_a IS NOT NULL AS found
+         FROM jac t LEFT JOIN cands c
+           ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b
+         WHERE t.jaccard >= $threshold)
+       SELECT CAST(floor(jaccard * 10) AS BIGINT) AS bucket,
          count(*) AS n_true,
          CAST(sum(CASE WHEN found THEN 1 ELSE 0 END) AS BIGINT) AS n_found,
          CAST(sum(CASE WHEN found THEN 1 ELSE 0 END) AS DOUBLE)
            / CAST(count(*) AS DOUBLE) AS recall
        FROM m GROUP BY 1 ORDER BY 1"""
-  }
 
   /** LSH operating-point planner — the driver-side model math that picks
     * (bands, r) BEFORE committing a 100 TB dedup run: for each banding
@@ -1174,8 +1189,7 @@ object Dedup {
     val right = sigs.select(col("source").as("src_b"), col("sig").as("sb"))
     left.join(broadcast(right), col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"),
-        (size(filter(zip_with(col("sa"), col("sb"), (p, q) => p === q),
-          v => v)).cast("double") / k).as("est_jaccard"))
+        agreement(col("sa"), col("sb"), k).as("est_jaccard"))
       .orderBy(col("src_a"), col("src_b"))
   }
 
@@ -1188,55 +1202,30 @@ object Dedup {
   /** DuckDB oracle for [[sourceOverlap]] — the [[NeutralMinHash]] CTE
     * chain regrouped at source grain (both k and the shingle width n
     * threaded through, matching the Spark side's parameters). */
-  def sourceOverlapOracleSql(k: Int = 16, n: Int = 3): String = {
-    import NeutralMinHash.{P, a, b}
-    val consts = (0 until k).map(i => s"($i, ${a(i)}, ${b(i)})")
-      .mkString(", ")
-    s"""WITH tok AS (
-         SELECT source, string_split(text, ' ') AS w FROM documents),
-       sh AS (
-         SELECT DISTINCT source,
-           unnest(CASE WHEN len(w) < $n THEN [array_to_string(w, ' ')]
-             ELSE list_transform(range(len(w) - ${n - 1}),
-               i -> array_to_string(w[i+1:i+$n], ' ')) END) AS shingle
-         FROM tok),
-       hx AS (
-         SELECT source,
-           ('0x' || substr(md5(shingle), 1, 8))::BIGINT % $P AS x
-         FROM sh),
-       consts(i, a, b) AS (VALUES $consts),
-       sig1 AS (
-         SELECT source, i, min((a * x + b) % $P) AS m
-         FROM hx CROSS JOIN consts GROUP BY 1, 2),
-       sigs AS (
-         SELECT source, list(m ORDER BY i) AS sig FROM sig1 GROUP BY source)
+  def sourceOverlapOracleSql(k: Int = 16, n: Int = 3): String =
+    s"""WITH ${NeutralMinHash.sigsCteSql(k, n, "source")}
        SELECT x.source AS src_a, y.source AS src_b,
-         len(list_filter(range(1, $k + 1), i -> x.sig[i] = y.sig[i]))
-           / ${k}.0 AS est_jaccard
+         ${agreementSql(k, "x.sig", "y.sig")} AS est_jaccard
        FROM sigs x JOIN sigs y ON x.source < y.source
        ORDER BY src_a, src_b"""
-  }
 
   /** [[minhashLshPairs]] with engine-neutral hashing (see
     * [[NeutralMinHash]]) — fully DuckDB-oracled. */
   def minhashLshPairsNeutral(documents: DataFrame, k: Int = 16,
-      bands: Int = 4, threshold: Double = 0.5, n: Int = 3): DataFrame = {
-    val banded = neutralBands(documents, k, bands, n)
-    val matches = size(filter(zip_with(col("sig_a"), col("sig_b"),
-      (p, q) => p === q), v => v))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+      bands: Int = 4, threshold: Double = 0.5, n: Int = 3): DataFrame =
+    lshPairs(neutralBands(documents, k, bands, n), "band_key", k, threshold)
+
+  /** The banded candidate pairs of a (doc_id, sig, band, `key`) index,
+    * scored by [[agreement]] and kept at `threshold` — the tail both
+    * MinHash+LSH twins share. */
+  private def lshPairs(banded: DataFrame, key: String, k: Int,
+      threshold: Double): DataFrame =
+    bucketPairs(banded, "band", key,
         col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("est_jaccard", matches.cast("double") / lit(k.toDouble))
+      .withColumn("est_jaccard", agreement(col("sig_a"), col("sig_b"), k))
       .filter(col("est_jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** MinHash+LSH near-dup pairs: signatures → b bands of r rows → band
     * hash → inverted index on (band, hash) → candidate pairs → verified
@@ -1254,23 +1243,7 @@ object Dedup {
           transform(slice(col("sig"), bnd * r + 1, lit(r)), _.cast("string")))))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cands
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b))
-          .cast("double") / lit(k.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    lshPairs(banded, "band_hash", k, threshold)
   }
 
   /** Column-arg bit shifts (functions.shiftright/left only take Int). */
@@ -1319,23 +1292,24 @@ object Dedup {
   }
 
   /** SimHash near-dup candidate pairs with exact Hamming verification. */
-  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val fp = simhashFingerprints(documents)
+  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame =
+    chunkPairs(simhashFingerprints(documents), 4,
+      bit_count(col("a.fp").bitwiseXOR(col("b.fp"))), maxHamming)
+
+  /** The SimHash candidate gate both fingerprint families share: each
+    * (doc_id, fp) row's `chunks` 16-bit chunks are the bucket index (a
+    * Hamming distance below `chunks` leaves one chunk equal, by
+    * pigeonhole), and candidate pairs keep `hamming` (spelled over the
+    * `a.fp` and `b.fp` sides) <= `maxHamming`. */
+  private def chunkPairs(fp: DataFrame, chunks: Int, hamming: Column,
+      maxHamming: Int): DataFrame = {
     val chunked = fp.select(
       col("doc_id"), col("fp"),
-      posexplode(transform(sequence(lit(0), lit(3)),
+      posexplode(transform(sequence(lit(0), lit(chunks - 1)),
         i => shr(col("fp"), i * 16).bitwiseAND(lit(0xFFFFL)))))
       .withColumnRenamed("pos", "chunk_idx")
       .withColumnRenamed("col", "chunk")
-    val hamming = bit_count(col("a.fp").bitwiseXOR(col("b.fp")))
-    chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.chunk_idx") === col("b.chunk_idx") &&
-          col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hamming.as("hamming"))
-      .dropDuplicates("doc_a", "doc_b")
+    bucketPairs(chunked, "chunk_idx", "chunk", hamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1363,23 +1337,8 @@ object Dedup {
       (0 until 32).map(b =>
         when(col(s"o$b") * 2 > col("n_tok"), lit(1L << b)).otherwise(lit(0L)))
         .reduce((a, c) => a.bitwiseOR(c)).as("fp"))
-    val chunked = fp.select(
-      col("doc_id"), col("fp"),
-      posexplode(transform(sequence(lit(0), lit(1)),
-        i => shr(col("fp"), i * 16).bitwiseAND(lit(0xFFFFL)))))
-      .withColumnRenamed("pos", "chunk_idx")
-      .withColumnRenamed("col", "chunk")
-    val hamming = bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).cast("long")
-    chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.chunk_idx") === col("b.chunk_idx") &&
-          col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hamming.as("hamming"))
-      .dropDuplicates("doc_a", "doc_b")
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("doc_a"), col("doc_b"))
+    chunkPairs(fp, 2,
+      bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).cast("long"), maxHamming)
   }
 
   /** DuckDB oracle for [[simhashPairsNeutral]]. */
@@ -1504,12 +1463,10 @@ object Dedup {
     * pairs, never all pairs. */
   def sortedNeighborhoodPairs(documents: DataFrame, k: Int = 4,
       threshold: Double = 0.3): DataFrame = {
-    val pairs = neighborCandidates(documents, k)
     val sh = documents
       .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-    val sizes = documents
-      .select(col("doc_id"), size(shingles(col("text"))).as("n_sh"))
-    pairs
+    val sizes = docSizes(documents, 3)
+    neighborCandidates(documents, k)
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"),
         col("doc_b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
@@ -1518,19 +1475,18 @@ object Dedup {
       .join(sizes.as("za"), col("doc_a") === col("za.doc_id"))
       .join(sizes.as("zb"), col("doc_b") === col("zb.doc_id"))
       .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("za.n_sh") + col("zb.n_sh") - col("n_common")).cast("double"))
+        jaccard(col("n_common"), col("za.n_sh"), col("zb.n_sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** DuckDB oracle for [[sortedNeighborhoodPairs]]. */
-  def sortedNeighborhoodOracleSql(k: Int = 4,
-      threshold: Double = 0.3): String = {
+  /** SQL twin of [[neighborCandidates]]: CTEs keyed → blocked → pairs
+    * → `cand(doc_a, doc_b)`. */
+  private def neighborCandidatesSql(k: Int): String = {
     val leads = (1 until k)
       .map(i => s"lead(doc_id, $i) OVER win").mkString(", ")
-    s"""WITH keyed AS (
+    s"""keyed AS (
          SELECT doc_id,
            lower(regexp_replace(substr(text, 1, 24), '[^A-Za-z0-9]', '',
              'g')) AS bkey
@@ -1541,31 +1497,18 @@ object Dedup {
          SELECT doc_id AS doc_a, unnest([$leads]) AS doc_b
          FROM blocked
          WINDOW win AS (PARTITION BY blk ORDER BY bkey, doc_id)),
-       cand AS (SELECT doc_a, doc_b FROM pairs WHERE doc_b IS NOT NULL),
-       tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id,
-           unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-             ELSE list_transform(range(len(w) - 2),
-               i -> array_to_string(w[i+1:i+3], ' ')) END) AS shingle
-         FROM tok),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       common AS (
-         SELECT c.doc_a, c.doc_b, count(*) AS n_common
-         FROM cand c
-         JOIN sh a ON a.doc_id = c.doc_a
-         JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-         GROUP BY c.doc_a, c.doc_b)
-       SELECT doc_a, doc_b, n_common,
-         CAST(n_common AS DOUBLE) /
-           CAST(za.n_sh + zb.n_sh - n_common AS DOUBLE) AS jaccard
-       FROM common
-       JOIN sizes za ON za.doc_id = doc_a
-       JOIN sizes zb ON zb.doc_id = doc_b
-       WHERE CAST(n_common AS DOUBLE) /
-         CAST(za.n_sh + zb.n_sh - n_common AS DOUBLE) >= $threshold
-       ORDER BY doc_a, doc_b"""
+       cand AS (SELECT doc_a, doc_b FROM pairs WHERE doc_b IS NOT NULL)"""
   }
+
+  /** DuckDB oracle for [[sortedNeighborhoodPairs]]. */
+  def sortedNeighborhoodOracleSql(k: Int = 4,
+      threshold: Double = 0.3): String =
+    s"""WITH ${neighborCandidatesSql(k)},
+       ${shinglesSql()},
+       ${jaccardSql(Some("cand"))}
+       SELECT doc_a, doc_b, n_common, jaccard FROM jac
+       WHERE jaccard >= $threshold
+       ORDER BY doc_a, doc_b"""
 
   /** Fuzzy join (edit-distance record linkage): the same blocked
     * k-successor candidates as [[sortedNeighborhoodPairs]], scored by
@@ -1615,21 +1558,8 @@ object Dedup {
 
   /** DuckDB oracle for [[fuzzyJoinJaroWinkler]]. */
   def fuzzyJoinJaroWinklerOracleSql(k: Int = 3,
-      minSim: Double = 0.5): String = {
-    val leads = (1 until k)
-      .map(i => s"lead(doc_id, $i) OVER win").mkString(", ")
-    s"""WITH keyed AS (
-         SELECT doc_id,
-           lower(regexp_replace(substr(text, 1, 24), '[^A-Za-z0-9]', '',
-             'g')) AS bkey
-         FROM documents),
-       blocked AS (SELECT doc_id, bkey, substr(bkey, 1, 8) AS blk
-         FROM keyed),
-       pairs AS (
-         SELECT doc_id AS doc_a, unnest([$leads]) AS doc_b
-         FROM blocked
-         WINDOW win AS (PARTITION BY blk ORDER BY bkey, doc_id)),
-       cand AS (SELECT doc_a, doc_b FROM pairs WHERE doc_b IS NOT NULL),
+      minSim: Double = 0.5): String =
+    s"""WITH ${neighborCandidatesSql(k)},
        pre AS (SELECT doc_id, substr(text, 1, 64) AS p FROM documents)
        SELECT doc_a, doc_b,
          round(jaro_winkler_similarity(pa.p, pb.p), 6) AS jw
@@ -1638,24 +1568,10 @@ object Dedup {
        JOIN pre pb ON pb.doc_id = doc_b
        WHERE round(jaro_winkler_similarity(pa.p, pb.p), 6) >= $minSim
        ORDER BY doc_a, doc_b"""
-  }
 
   /** DuckDB oracle for [[fuzzyJoinPairs]]. */
-  def fuzzyJoinOracleSql(k: Int = 3, maxDist: Int = 20): String = {
-    val leads = (1 until k)
-      .map(i => s"lead(doc_id, $i) OVER win").mkString(", ")
-    s"""WITH keyed AS (
-         SELECT doc_id,
-           lower(regexp_replace(substr(text, 1, 24), '[^A-Za-z0-9]', '',
-             'g')) AS bkey
-         FROM documents),
-       blocked AS (SELECT doc_id, bkey, substr(bkey, 1, 8) AS blk
-         FROM keyed),
-       pairs AS (
-         SELECT doc_id AS doc_a, unnest([$leads]) AS doc_b
-         FROM blocked
-         WINDOW win AS (PARTITION BY blk ORDER BY bkey, doc_id)),
-       cand AS (SELECT doc_a, doc_b FROM pairs WHERE doc_b IS NOT NULL),
+  def fuzzyJoinOracleSql(k: Int = 3, maxDist: Int = 20): String =
+    s"""WITH ${neighborCandidatesSql(k)},
        pre AS (SELECT doc_id, substr(text, 1, 64) AS p FROM documents)
        SELECT doc_a, doc_b,
          CAST(levenshtein(pa.p, pb.p) AS INTEGER) AS edit_dist
@@ -1664,5 +1580,4 @@ object Dedup {
        JOIN pre pb ON pb.doc_id = doc_b
        WHERE levenshtein(pa.p, pb.p) <= $maxDist
        ORDER BY doc_a, doc_b"""
-  }
 }

@@ -337,20 +337,12 @@ object Pipeline {
   /** DuckDB oracle for [[decontamination]]. */
   def decontaminationOracleSql(benchSource: String = "src4", n: Int = 5,
       threshold: Double = 0.2): String =
-    s"""WITH tok AS (
-         SELECT doc_id, source, string_split(text, ' ') AS w
-         FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id, source,
-           unnest(CASE WHEN len(w) < $n THEN [array_to_string(w, ' ')]
-             ELSE list_transform(range(len(w) - ${n - 1}),
-               i -> array_to_string(w[i+1:i+$n], ' ')) END) AS g
-         FROM tok),
+    s"""WITH ${graft.dedup.Dedup.shinglesSql(n, "doc_id, source")},
        bench AS (
-         SELECT DISTINCT g FROM sh WHERE source = '$benchSource'),
+         SELECT DISTINCT shingle FROM sh WHERE source = '$benchSource'),
        cand AS (
-         SELECT doc_id, sh.g, bench.g IS NOT NULL AS hit
-         FROM sh LEFT JOIN bench ON sh.g = bench.g
+         SELECT doc_id, sh.shingle, bench.shingle IS NOT NULL AS hit
+         FROM sh LEFT JOIN bench ON sh.shingle = bench.shingle
          WHERE source <> '$benchSource')
        SELECT doc_id, count(*) AS n_grams,
          CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,

@@ -855,20 +855,13 @@ object TextAnalysis {
 
   /** DuckDB oracle for [[boilerplateScan]]. */
   def boilerplateOracleSql(n: Int = 8, minDf: Int = 2): String =
-    s"""WITH tok AS (
-         SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id,
-           unnest(CASE WHEN len(w) < $n THEN [array_to_string(w, ' ')]
-             ELSE list_transform(range(len(w) - ${n - 1}),
-               i -> array_to_string(w[i+1:i+$n], ' ')) END) AS g
-         FROM tok),
+    s"""WITH ${graft.dedup.Dedup.shinglesSql(n)},
        boiler AS (
-         SELECT g, count(*) AS df FROM sh GROUP BY g
+         SELECT shingle, count(*) AS df FROM sh GROUP BY shingle
          HAVING count(*) >= $minDf),
        hits AS (
-         SELECT doc_id, count(*) AS n_boiler FROM sh JOIN boiler USING (g)
-         GROUP BY doc_id),
+         SELECT doc_id, count(*) AS n_boiler
+         FROM sh JOIN boiler USING (shingle) GROUP BY doc_id),
        totals AS (
          SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id)
        SELECT t.doc_id, t.n_grams,

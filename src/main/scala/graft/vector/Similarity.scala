@@ -415,6 +415,20 @@ object Similarity {
                ORDER BY $order, c.$key) AS r
            FROM q CROSS JOIN $cents c) WHERE r <= $nprobe)"""
 
+  /** SQL twin of [[nearestCentroid]]: each row of the CTE `v` (vec_id,
+    * e, ...) at its nearest centroid of `cents` (`key`, c) — cosine
+    * DESC, ties by ascending `key`, row 1 kept; output v's columns plus
+    * `domain` (the winning `key`) and `scos`. */
+  private[graft] def nearestCentroidSql(cents: String, key: String)
+      : String = {
+    val cos = Cols.sqlCosine("e", "c.c")
+    s"""SELECT * EXCLUDE (r) FROM (
+           SELECT v.*, c.$key AS domain, $cos AS scos,
+             row_number() OVER (PARTITION BY v.vec_id
+               ORDER BY $cos DESC, c.$key) AS r
+           FROM v CROSS JOIN $cents c) WHERE r = 1"""
+  }
+
   /** `probeSql`'s cosine order: nearest centroid first. */
   private[graft] val cosDescSql: String =
     s"${Cols.sqlCosine("qe", "c.c")} DESC"

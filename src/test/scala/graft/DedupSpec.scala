@@ -388,4 +388,82 @@ class DedupSpec extends AnyFunSuite {
       x.zip(y).map(p => math.min(p._1, p._2))) == uSig,
       "union signature must equal the min-merge of per-source signatures")
   }
+
+  test("shared Jaccard boundary: every exact-Jaccard operator keeps " +
+      "J = 0.5 at threshold 0.5 and drops the pair just below, with " +
+      "identical rows") {
+    // docs 0/1: 3 + 3 word 3-grams, 2 shared -> J = 2/4 = 0.5 exactly;
+    // docs 2/3: 3 + 4, 2 shared -> J = 2/5. Each pair shares one 8-char
+    // block, so the sorted-neighborhood gate sees both pairs too.
+    val df = docs(Seq(
+      "aaaa bbbb cccc dddd eeee", "aaaa bbbb cccc dddd ffff",
+      "gggg hhhh iiii jjjj kkkk", "gggg hhhh iiii jjjj llll mmmm"))
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        r.getAs[Number](2).longValue, r.getDouble(3))).toSeq
+    val d = dedup.Dedup
+    val want = Seq((0L, 1L, 2L, 0.5))
+    Seq(
+      "jaccardPairs" -> d.jaccardPairs(df, threshold = 0.5),
+      "jaccardPairsSliced(3, mergeBucketBytes = 0)" ->
+        d.jaccardPairsSliced(df, threshold = 0.5, slices = 3,
+          mergeBucketBytes = 0L),
+      "jaccardPairsSliced(3)" ->
+        d.jaccardPairsSliced(df, threshold = 0.5, slices = 3),
+      "jaccardPrefixPairs" -> d.jaccardPrefixPairs(df, threshold = 0.5),
+      "sortedNeighborhoodPairs" ->
+        d.sortedNeighborhoodPairs(df, threshold = 0.5)
+    ).foreach { case (op, out) =>
+      assert(rows(out) == want, s"$op: got ${rows(out)}, want $want")
+    }
+    // one band per lane (r = 1) makes both pairs LSH candidates
+    val exact = d.minhashEstimate(df, bands = 16).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+    assert(exact.get((0L, 1L)).contains(0.5), s"exact_jaccard: $exact")
+    assert(exact.get((2L, 3L)).contains(2.0 / 5.0), s"exact_jaccard: $exact")
+  }
+
+  test("rows-only LSH twins equal a brute-force cross join over their " +
+      "signatures and fingerprints (1 and 7 shuffle partitions)") {
+    val docsDf = Tables.load(spark, TestSpark.sf, "documents")
+    val d = dedup.Dedup
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      // MinHash, k = 32 in 8 bands of 4: a candidate shares at least one
+      // band exactly; kept at agreement/k >= 0.5
+      val sigs = d.minhashSignatures(docsDf, k = 32).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1).toIndexedSeq)
+      val wantLsh = for {
+        (a, sa) <- sigs.toSeq; (b, sb) <- sigs.toSeq if a < b
+        if (0 until 8).exists(i => sa.slice(i * 4, i * 4 + 4) ==
+          sb.slice(i * 4, i * 4 + 4))
+        est = sa.indices.count(i => sa(i) == sb(i)) / 32.0
+        if est >= 0.5
+      } yield (a, b, est)
+      val gotLsh = d.minhashLshPairs(docsDf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(wantLsh.nonEmpty, "degenerate fixture: no MinHash pairs")
+      assert(gotLsh.sorted == wantLsh.sorted,
+        s"minhashLshPairs at $parts partitions: got ${gotLsh.length} " +
+          s"rows, want ${wantLsh.length}")
+      // SimHash: a candidate shares one of the four 16-bit chunks; kept
+      // at Hamming distance <= 3
+      val fps = d.simhashFingerprints(docsDf).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      val wantSim = for {
+        (a, fa) <- fps.toSeq; (b, fb) <- fps.toSeq if a < b
+        if (0 until 4).exists(i =>
+          ((fa >>> (i * 16)) & 0xFFFFL) == ((fb >>> (i * 16)) & 0xFFFFL))
+        ham = java.lang.Long.bitCount(fa ^ fb)
+        if ham <= 3
+      } yield (a, b, ham)
+      val gotSim = d.simhashPairs(docsDf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      assert(wantSim.nonEmpty, "degenerate fixture: no SimHash pairs")
+      assert(gotSim.sorted == wantSim.sorted,
+        s"simhashPairs at $parts partitions: got ${gotSim.length} rows, " +
+          s"want ${wantSim.length}")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }
