@@ -9,8 +9,14 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.ExplainDump <outDir> <suffix> q_a,q_b,...
   * Writes <outDir>/<query>_<suffix>.txt for each named query. Plans are
   * the initially-planned physical plan (AQE final plans depend on
-  * runtime stats; the initial plan is the stable, judge-checkable
-  * shape — same convention as PLANSTATS.md).
+  * runtime stats; the initial plan is the stable shape to compare —
+  * same convention as PLANSTATS.md). Not for every query: a build that
+  * persists and counts a subplan embeds that subplan's EXECUTED AQE
+  * plan. q_jaccard_prefix and q_jaccard_prefix_hi do so
+  * (`Dedup.jaccardPrefixPairs`), and two dumps of the same commit differ
+  * there in codegen and stage ids, for q_jaccard_prefix_hi also in join
+  * strategy; compare them against two reference dumps, as
+  * .claude/skills/verify/SKILL.md's plan-identity recipe says.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

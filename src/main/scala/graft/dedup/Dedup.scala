@@ -48,17 +48,6 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.WordShingles.wordShingles(text, n)
 
-  /** The pre-optimization composable form of [[shingles]] (kept as the
-    * reference semantics the native expression must match). */
-  def shinglesComposed(text: Column, n: Int = 3): Column = {
-    val toks = tokens(text)
-    array_distinct(
-      when(size(toks) < n, array(concat_ws(" ", toks)))
-        .otherwise(transform(
-          sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-  }
-
   // NOTE (measured): hashing the token triple per shingle via element_at
   // inside the transform lambda is ~2× SLOWER than building the n-gram
   // string with slice+concat_ws and hashing once after the explode — ANSI
@@ -68,7 +57,7 @@ object Dedup {
   /** The narrow (doc_id, h) relation every hashed-shingle operator
     * reads: each document's distinct shingles, hashed to 64 bits after
     * the explode. */
-  private def shingleHashes(documents: DataFrame, n: Int): DataFrame =
+  private[graft] def shingleHashes(documents: DataFrame, n: Int): DataFrame =
     documents
       .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
@@ -646,7 +635,7 @@ object Dedup {
     * (doc_a, doc_b, na, nb). Factored out so the candidate VOLUME at a
     * threshold is measurable on its own (SCALING.md's selectivity
     * curve) without running the verify join. */
-  private def prefixCandidates(sh: DataFrame, threshold: Double): DataFrame = {
+  private[graft] def prefixCandidates(sh: DataFrame, threshold: Double): DataFrame = {
     // df via a grouped count joined back (a list-free shuffle of (h,
     // count) pairs — building collect_list postings only to re-explode
     // them allocates every list twice for nothing); one shuffle by doc
@@ -684,18 +673,6 @@ object Dedup {
         Seq("doc_b"))
       .filter(least(col("na"), col("nb")).cast("double") >=
         greatest(col("na"), col("nb")).cast("double") * threshold)
-  }
-
-  /** Diagnostic (ScalingProbe / SCALING.md): how many candidate pairs
-    * survive prefix + length filtering at `threshold` — the verify
-    * join's input volume, the quantity PPJoin's selectivity argument is
-    * about. Bounded driver read (one count). */
-  def jaccardPrefixCandidateCount(documents: DataFrame, n: Int = 3,
-      threshold: Double = 0.4): Long = {
-    val sh = shingleHashes(documents, n).persist()
-    val c = prefixCandidates(sh, threshold).count()
-    sh.unpersist()
-    c
   }
 
   /** Exact set-similarity join via PREFIX FILTERING (the PPJoin family):
@@ -1086,7 +1063,8 @@ object Dedup {
     * deployment reads before committing to a (k, bands) operating
     * point — cost curves (SCALING.md) say what the index spends,
     * this says what it misses (1 - (1 - J^r)^b in expectation; the
-    * curve is the measured version).
+    * curve is the measured version, and DedupSpec checks it against
+    * that prediction at a planned banding).
     *
     * Scale: the truth side is the PPJoin prefix-filter pair set
     * (exact by construction, oracled, linear in candidates — never
@@ -1138,32 +1116,6 @@ object Dedup {
          CAST(sum(CASE WHEN found THEN 1 ELSE 0 END) AS DOUBLE)
            / CAST(count(*) AS DOUBLE) AS recall
        FROM m GROUP BY 1 ORDER BY 1"""
-
-  /** LSH operating-point planner — the driver-side model math that picks
-    * (bands, r) BEFORE committing a 100 TB dedup run: for each banding
-    * of the k signature rows, the textbook collision probability
-    * P(candidate | J) = 1 − (1 − J^r)^bands at the decision threshold,
-    * chosen as the CHEAPEST banding (fewest bands ⇒ fewest index rows
-    * and smallest candidate volume) whose predicted recall at
-    * `threshold` still meets `targetRecall`. Returns
-    * (bands, r, predictedRecall). The prediction is validated
-    * empirically by [[lshRecall]] (DedupSpec pins measured ≥ predicted
-    * at the planned point — the banding bound is conservative for a
-    * bucket whose true pairs sit above its left edge).
-    *
-    * Pure Seq-over-divisors driver math (k ≤ a few hundred in any real
-    * config) — no data touched; the expensive validation is the
-    * separate, corpus-scale [[lshRecall]]. */
-  def lshPlan(k: Int = 16, threshold: Double = 0.8,
-      targetRecall: Double = 0.95): (Int, Int, Double) = {
-    val options = (1 to k).filter(k % _ == 0).map { bands =>
-      val r = k / bands
-      val p = 1.0 - math.pow(1.0 - math.pow(threshold, r), bands)
-      (bands, r, p)
-    }
-    options.filter(_._3 >= targetRecall).minByOption(_._1)
-      .getOrElse(options.maxBy(_._3))
-  }
 
   /** Cross-source content-overlap dashboard from MERGEABLE corpus-level
     * minhash signatures: each source's signature is the elementwise min
@@ -1246,36 +1198,15 @@ object Dedup {
     lshPairs(banded, "band_hash", k, threshold)
   }
 
-  /** Column-arg bit shifts (functions.shiftright/left only take Int). */
+  /** Column-arg right shift (functions.shiftright only takes an Int). */
   private def shr(a: Column, b: Column): Column =
     call_function("shiftright", a, b)
-  private def shl(a: Column, b: Column): Column =
-    call_function("shiftleft", a, b)
 
-  /** SimHash (64-bit): per-token hash votes ±1 on each bit; sign of the
-    * vote sum forms the fingerprint bit. Near-dups = small Hamming
-    * distance, found by exact match on 4 16-bit chunks (any chunk equal →
-    * candidate; Hamming ≤ 3 guarantees one equal chunk by pigeonhole). */
-  def simhash(text: Column): Column = {
-    val toks = tokens(text)
-    val votes = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) => zip_with(acc,
-        transform(sequence(lit(0), lit(63)),
-          b => when(shr(xxhash64(t), b).bitwiseAND(lit(1L)) === 1L,
-            lit(1L)).otherwise(lit(-1L))),
-        (x, y) => x + y))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, b) => when(v > 0, shl(lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** SimHash fingerprints via explode + wide aggregation (one token pass,
-    * 64 map-side-combining vote sums per doc) — same values as
-    * `simhash(col)` but ~10× faster on large corpora because the token
-    * array is materialized once instead of per-bit. */
+  /** SimHash (64-bit) fingerprints: each token's hash votes ±1 on every
+    * bit, and the sign of a bit's vote sum is the fingerprint bit. One
+    * token pass via explode + wide aggregation (64 map-side-combining
+    * vote sums per doc), so the token array is materialized once, not
+    * once per bit. */
   def simhashFingerprints(documents: DataFrame): DataFrame = {
     val tok = documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("t"))

@@ -115,13 +115,4 @@ object QuantileSketch {
   def kllUnionQuantiles(c: Column, ranks: Seq[Double], k: Int = 200): Column =
     Shim.column(KllUnionQuantiles(Shim.expression(c), ranks, k)
       .toAggregateExpression(isDistinct = false))
-
-  /** Driver-side union + quantile read of stored sketches (the "query the
-    * rollup table" half of the pattern; executor-side union would be
-    * another TypedImperativeAggregate over BinaryType — same buffer ops). */
-  def mergeQuantile(sketches: Seq[Array[Byte]], rank: Double): Double = {
-    val u = KllDoublesSketch.newHeapInstance(200)
-    sketches.foreach(b => u.merge(KllDoublesSketch.heapify(Memory.wrap(b))))
-    u.getQuantile(rank, QuantileSearchCriteria.INCLUSIVE)
-  }
 }

@@ -4,28 +4,11 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed `Aggregator` surface (SURVEY.md §2.9 planned extension): the
-  * user-facing custom-aggregate API, demonstrated with a numerically
-  * stable weighted mean. For hot paths a `DeclarativeAggregate` or the
+  * user-facing custom-aggregate API, here the exact integer-cents price
+  * statistics. For hot paths a `DeclarativeAggregate` or the
   * exact-decimal-sum formulation (Cols.decAvg) is preferred — this is the
   * ergonomic form for Dataset users. */
 object TypedAggregators {
-
-  case class WeightedValue(value: Double, weight: Double)
-  case class WMeanBuf(wSum: Double, wvSum: Double)
-
-  /** Weighted mean over (value, weight) pairs. */
-  val weightedMean: Aggregator[WeightedValue, WMeanBuf, Double] =
-    new Aggregator[WeightedValue, WMeanBuf, Double] {
-      override def zero: WMeanBuf = WMeanBuf(0.0, 0.0)
-      override def reduce(b: WMeanBuf, a: WeightedValue): WMeanBuf =
-        WMeanBuf(b.wSum + a.weight, b.wvSum + a.weight * a.value)
-      override def merge(x: WMeanBuf, y: WMeanBuf): WMeanBuf =
-        WMeanBuf(x.wSum + y.wSum, x.wvSum + y.wvSum)
-      override def finish(b: WMeanBuf): Double =
-        if (b.wSum == 0.0) Double.NaN else b.wvSum / b.wSum
-      override def bufferEncoder: Encoder[WMeanBuf] = Encoders.product
-      override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-    }
 
   case class CentsBuf(n: Long, cents: Long)
 

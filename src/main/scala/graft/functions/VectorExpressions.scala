@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -179,84 +179,28 @@ object VectorFunctions {
     Shim.column(SortedIntersectCount(Shim.expression(a),
       Shim.expression(b)))
 
-  /** Register cosine_sim for SQL use on an existing session. */
+  /** Register the six custom expressions for SQL use on an existing
+    * session: `cosine_sim`, `zvalue`, `hilbert`, `word_shingles`,
+    * `bpe_tokens` and `sorted_intersect_count`. This is the one SQL
+    * function path (q_sql_custom_fns reaches it through
+    * `SqlSurface.runWithCustomFns`); a repeated call replaces each
+    * function with the same builder. `word_shingles(text, n)` takes a
+    * foldable int `n`: the shingle width is a plan-time constant. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zvalue", exprs => ZValueExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert", exprs => HilbertExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"word_shingles width must be an int literal, got $other")
-        }), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_tokens", exprs => BpeTokensExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-  }
-}
-
-/** Optimizer rule (the `Rule[LogicalPlan]` rung of the custom-operator
-  * ladder): folds self-similarity `cosine_sim(a, a)` to a constant,
-  * sparing the 64-element loop per row. Null-preserving; assumes non-zero
-  * vectors (a zero vector's self-cosine is defined as 0 by the expression
-  * but 1 after the rewrite) — hence opt-in via [[GraftExtensions]], not
-  * baked into default sessions. */
-object FoldSelfCosine
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case CosineSimilarity(a, b) if a.deterministic && a.semanticEquals(b) =>
-        If(IsNull(a), Literal.create(null, DoubleType), Literal(1.0))
-    }
-}
-
-/** SparkSessionExtensions entry point:
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    // SQL surface for the other native expressions: zvalue(x, y) and
-    // word_shingles(text, n) — n must be a foldable int literal (the
-    // shingle width is a plan-time constant, like any generator arity).
-    ext.injectFunction((
-      new FunctionIdentifier("zvalue"),
-      new ExpressionInfo(classOf[ZValueExpr].getName, "zvalue"),
-      (exprs: Seq[Expression]) => ZValueExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0),
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"word_shingles width must be an int literal, got $other")
-        })))
-    ext.injectFunction((
-      new FunctionIdentifier("bpe_tokens"),
-      new ExpressionInfo(classOf[BpeTokensExpr].getName, "bpe_tokens"),
-      (exprs: Seq[Expression]) => BpeTokensExpr(exprs(0))))
-    ext.injectOptimizerRule(_ => FoldSelfCosine)
-    // Banded time-range joins → binned equi-joins (no BNLJ at scale).
-    ext.injectOptimizerRule(_ => graft.plans.BinTimeRangeJoin)
+    val registry = spark.sessionState.functionRegistry
+    def fn(name: String)(build: Seq[Expression] => Expression): Unit =
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    fn("cosine_sim")(e => CosineSimilarity(e(0), e(1)))
+    fn("zvalue")(e => ZValueExpr(e(0), e(1)))
+    fn("hilbert")(e => HilbertExpr(e(0), e(1)))
+    fn("word_shingles")(e => WordShingles(e(0),
+      (if (e(1).foldable) e(1).eval() else null) match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case _ => throw new IllegalArgumentException(
+          s"word_shingles width must be an int literal, got ${e(1).sql}")
+      }))
+    fn("bpe_tokens")(e => BpeTokensExpr(e(0)))
+    fn("sorted_intersect_count")(e => SortedIntersectCount(e(0), e(1)))
   }
 }

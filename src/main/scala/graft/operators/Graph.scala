@@ -209,8 +209,7 @@ object Graph {
     // two persisted relations are hot), then RELEASE the caches — left
     // pinned, they'd accumulate for the life of a multi-query session and
     // at real scale evict working memory. A 1-row collect is a stats
-    // read, not a driver-side loop (same rationale as LayoutWriter's
-    // min/max bounds read).
+    // read, not a driver-side loop.
     val row = out.collect()
     edges.unpersist()
     oriented.unpersist()

@@ -1142,27 +1142,4 @@ object Pipeline {
            AS BIGINT) AS alloc_tokens,
          saturated
        FROM lv ORDER BY source"""
-
-  /** IN-FLIGHT data-quality gate (`Dataset.observe` →
-    * CollectMetricsExec): row count, empty-text count, and the n_chars
-    * extremes ride the SAME job as whatever action consumes the frame —
-    * an accumulator-style side channel, NOT a second scan. This is how
-    * a 100 TB ingest validates while it writes: the alternative
-    * (count() + filter().count() + agg() before the real write) is
-    * three extra full passes. Read the values from
-    * `df.queryExecution.observedMetrics(name)` after an action on this
-    * frame's own execution — or, production-style, from a
-    * `QueryExecutionListener`, which sees every execution; gate
-    * the downstream step on them (e.g. abort publish when
-    * n_empty / n_rows exceeds tolerance — the AuditedJsonlSink manifest
-    * is the natural pair). Works unchanged under streaming, where the
-    * metrics surface per micro-batch via StreamingQueryListener. */
-  def withQualityGate(documents: DataFrame,
-      name: String = "quality_gate"): DataFrame =
-    documents.observe(name,
-      count(lit(1)).as("n_rows"),
-      sum(when(col("text").isNull || length(col("text")) === 0, 1L)
-        .otherwise(0L)).as("n_empty"),
-      min(col("n_chars")).as("min_chars"),
-      max(col("n_chars")).as("max_chars"))
 }

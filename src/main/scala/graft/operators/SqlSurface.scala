@@ -94,8 +94,7 @@ object SqlSurface {
 
   /** The custom NATIVE expressions exercised through the full SQL
     * path — parser → FunctionRegistry → codegen (the route a SQL-only
-    * user takes after `VectorFunctions.register` /
-    * `spark.sql.extensions=graft.functions.GraftExtensions`). Unlike
+    * user takes after `VectorFunctions.register`). Unlike
     * the rest of this file the oracle is not the same string (DuckDB
     * has no cosine_sim/word_shingles); the DuckDB side replays the
     * expressions' exact arithmetic (the q_knn_* recipe). */

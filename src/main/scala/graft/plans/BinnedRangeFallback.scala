@@ -26,10 +26,9 @@ import org.apache.spark.sql.types._
   * ≤ 2 buckets they can touch, the probe intervals into the buckets
   * they span (one for a point), bucket (and key) equality
   * hash-partitions the pair space, and the original range predicate
-  * stays as the residual filter — the [[BinTimeRangeJoin]] rewrite
-  * generalized from the fixed-width time band to data-derived W. No
-  * driver index, no broadcast: the plan is shuffle-bound and scales
-  * with executors.
+  * stays as the residual filter, with W derived from the data rather
+  * than fixed. No driver index, no broadcast: the plan is shuffle-bound
+  * and scales with executors.
   *
   * Exactness: a point probe lives in exactly one bucket, so each
   * qualifying pair meets once. An interval probe can share several
@@ -98,9 +97,8 @@ private[graft] object BinnedRangeFallback {
 
   /** Bucket start: v rounded down to a multiple of w (pmod handles
     * negatives) — equality of bucket starts is equality of buckets, no
-    * division needed. The one definition behind both binned plans: this
-    * fallback and the [[BinTimeRangeJoin]] rule. */
-  def bucketStart(v: Expression, w: Long): Expression =
+    * division needed. */
+  private def bucketStart(v: Expression, w: Long): Expression =
     Subtract(v, Pmod(v, Literal(w)))
 
   private val BinP = "__graft_bin_p"

@@ -4,46 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Source/sink formats beyond the fixture Parquet (SURVEY.md §2.1:
-  * reference speaks JSON-over-Kafka + BSON; we add Parquet, JSON lines,
-  * CSV — all Spark built-ins — plus the Kafka message encode/decode pair).
+/** Source-side layouts and messages beyond the fixture Parquet
+  * (SURVEY.md §2.1: the reference speaks JSON-over-Kafka + BSON): the
+  * date-partitioned and bucketed fixture layouts, plus the Kafka message
+  * encode/decode pair.
   *
-  * Scale notes: all writers partition by the DataFrame's partitioning (no
-  * coalesce(1) in library code — single-file output is a test-only
-  * convenience); `writeParquetPartitioned` demonstrates the
+  * Scale notes: writers partition by the DataFrame's partitioning (no
+  * coalesce(1) in library code); `writeParquetPartitioned` is the
   * partition-pruning layout (`partitionBy` → directory-level pruning of
   * untouched partitions at 100 TB).
   */
 object Sources {
-
-  // ---- file formats ----
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
 
   /** Hive-style partitioned parquet layout: queries filtering on the
     * partition column scan only matching directories. */
   def writeParquetPartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** ORC (the other columnar warehouse format Spark ships natively):
-    * same pushdown/pruning machinery as parquet — predicate pushdown,
-    * column pruning, vectorized read. */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   // ---- dynamic partition pruning (the 100 TB staple: a date-partitioned
   //      fact joined to a filtered dim scans only the dim's surviving
@@ -72,112 +49,6 @@ object Sources {
       dir
     }
 
-  /** Schema-evolution read: a table directory accumulates batches whose
-    * schemas WIDENED over time (columns added); `mergeSchema` unions
-    * the per-file footers into one schema, older files surfacing the
-    * missing columns as nulls — the read-side contract a long-lived
-    * 100 TB table needs (Spark defaults it OFF because footer-merging
-    * lists every file's schema; turning it on per-read is the
-    * documented trade). */
-  def readMergedSchema(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** Small-file compaction — the table-maintenance pass every
-    * streaming/append-heavy 100 TB table needs (micro-batches and
-    * dynamic-partition writes accrete KB-scale files whose per-file
-    * open/footer cost eventually dominates scans): rewrite a directory
-    * into ceil(totalBytes / targetBytes) files. The byte total comes
-    * from the driver's file listing (metadata, not data), the rewrite
-    * is one repartition — a round-robin exchange sized so output files
-    * land near the target size. Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, inDir: String, outDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    def parts(dir: String): Seq[java.io.File] =
-      Option(new java.io.File(dir).listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-    val before = parts(inDir)
-    val total = before.map(_.length()).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).repartition(n)
-      .write.mode("overwrite").parquet(outDir)
-    (before.size, parts(outDir).size)
-  }
-
-  /** Parquet BLOOM-FILTER layout — the point-lookup complement to the
-    * min/max-stat layouts (Z-order/Hilbert cluster VALUE RANGES; a
-    * bloom filter skips row groups for high-cardinality EQUALITY
-    * probes that ranges can't help, e.g. doc_id/user_id lookups on an
-    * unsorted append table). Write-side only: the reader needs no
-    * opt-in — Spark's parquet scan consults footers automatically when
-    * an `=` predicate is pushed down. `ndv` sizes the filter (bits ∝
-    * ndv); at 100 TB the filters ride in the footers (KBs per row
-    * group per column), the classic space-for-IO trade. */
-  def writeWithBloom(df: DataFrame, path: String, column: String,
-      ndv: Long = 100000L): Unit =
-    df.write.mode("overwrite")
-      .option(s"parquet.bloom.filter.enabled#$column", "true")
-      .option(s"parquet.bloom.filter.expected.ndv#$column", ndv.toString)
-      .parquet(path)
-
-  /** Footer audit for [[writeWithBloom]]: true iff EVERY row group of
-    * every data file carries a bloom filter for `column` (metadata-only
-    * read — the same driver-side listing cost as [[compact]]). */
-  def bloomFilterPresent(spark: SparkSession, path: String,
-      column: String): Boolean = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val files = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-    files.nonEmpty && files.forall { f =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-      try rd.getRowGroups.asScala.forall { bg =>
-        bg.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .exists(_.getBloomFilterOffset >= 0)
-      } finally rd.close()
-    }
-  }
-
-  /** Corrupt-file containment on read — the operational contract an
-    * append-heavy 100 TB table needs (a half-written file from a dead
-    * writer, a truncated upload): with `ignoreCorruptFiles` the scan
-    * logs and SKIPS unreadable files instead of failing the job; the
-    * default strict mode fails fast. Spark applies the flag at the
-    * file-reader level, so healthy files in the same directory are
-    * unaffected — the read-side twin of AuditedJsonlSink's write-side
-    * manifest (which prevents the torn file from being listed at all). */
-  def readIgnoreCorrupt(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("ignoreCorruptFiles", "true").parquet(path)
-
-  /** Catalog-registered fixture table with COMPUTED STATISTICS — the
-    * cost-based-optimizer feed (`spark.sql.cbo.enabled`): ANALYZE
-    * writes rowCount + per-column NDV/min/max/null counts into the
-    * catalog, Catalyst's `Statistics` then carries row-count estimates
-    * through filters and joins (selectivity from column bounds) instead
-    * of the file-size-only fallback. At 100 TB this is what turns "is
-    * the dimension side broadcastable?" and "which join first?" from
-    * guesses into arithmetic — stats collection is one scan per table,
-    * amortized across every query planned after it. Idempotent per
-    * session. */
-  def analyzedTable(spark: SparkSession, sfDir: String,
-      name: String): String = {
-    // keyed on the DATA DIRECTORY too (the Tables.load cache
-    // convention): a same-session caller with a different SF must not
-    // get the first directory's rows and statistics back
-    val dirKey = java.lang.Integer.toHexString(sfDir.hashCode)
-    val tbl = s"graft_stats_${name}_$dirKey"
-    if (!spark.catalog.tableExists(tbl)) {
-      graft.Tables.load(spark, sfDir, name)
-        .write.mode("overwrite").saveAsTable(tbl)
-      spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR ALL COLUMNS")
-    }
-    tbl
-  }
-
   /** Bucketed table pair for the co-located join demo: lineitem and
     * orders written ONCE per session bucketed (and sorted) by the join
     * key into 8 buckets each, registered as external tables so the
@@ -186,11 +57,16 @@ object Sources {
     * each task holds exactly one bucket and every bucket is ONE sorted
     * file — the layout under which Spark's scan reports bucket
     * partitioning AND sort order, and a join on the bucket key needs
-    * neither Exchange nor Sort. */
+    * neither Exchange nor Sort.
+    *
+    * The tables live in the SparkContext's shared catalog, so their
+    * names must be injective in `sfDir`: they take the `Tables.load`
+    * view name (the directory hex-encoded, never hashed) plus a `_bkt`
+    * suffix, which ends no fixture table's name and so never equals a
+    * `Tables.load` view. */
   def bucketedTables(spark: SparkSession, sfDir: String): (String, String) = {
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
-    val liName = s"graft_li_bkt_$tag"
-    val ordName = s"graft_ord_bkt_$tag"
+    val liName = graft.Tables.viewName(sfDir, "lineitem") + "_bkt"
+    val ordName = graft.Tables.viewName(sfDir, "orders") + "_bkt"
     graft.SessionDirs.getOrBuild(spark, s"bucketed:$sfDir",
       "graft_bucketed") { root =>
       graft.Tables.load(spark, sfDir, "lineitem")

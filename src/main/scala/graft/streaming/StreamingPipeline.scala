@@ -93,36 +93,6 @@ object StreamingPipeline {
       }
       .start()
 
-  /** Stream-static AS-OF enrichment — the production streaming shape of
-    * the reference's "latest matching state" lookup (app.py:165-190
-    * point-lookup, S8/T5): each event picks up the most recent dimension
-    * snapshot row (per key) at or before its own ord value. Runs the
-    * custom sort-merge AsOfJoinExec (plans/AsOfJoin.scala) per micro-batch
-    * via foreachBatch — a micro-batch is a static DataFrame, so the whole
-    * batch operator ladder (custom strategy included) applies unchanged,
-    * which is exactly why this beats a stream-stream join here: the dim
-    * side is a bounded, slowly-changing snapshot, not a stream, so no
-    * watermark/state machinery is needed and the stream holds ZERO state.
-    *
-    * Delivery matches startDualWrite: each batch writes its own
-    * deterministic `batch_id=<id>` directory with overwrite, so a
-    * replayed batch clobbers its own partial output (exactly-once with
-    * the checkpoint). At 100 TB the snapshot side is dimension-sized and
-    * co-partition-shuffled per batch (or pre-bucketed on the keys); the
-    * fact stream shuffles each batch once on its keys. */
-  def startAsOfEnrich(stream: DataFrame, dim: DataFrame, sinkDir: String,
-      checkpointDir: String, keys: Seq[String], ordCols: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.plans.AsOfJoin.asofJoin(batch, dim, keys, ordCols)
-          .write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-
   /** Streaming exact dedup (the streaming face of the dedup north star):
     * drops re-deliveries of the same event_id — both within a micro-batch
     * and across batches. State is one entry per id, bounded by the
@@ -134,93 +104,15 @@ object StreamingPipeline {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Per-user running state for the custom-state surface
-    * (`flatMapGroupsWithState`, SURVEY.md §2.9 planned extension): emits a
-    * record per input event carrying the user's cumulative count and
-    * running mean value — the streaming form of a running aggregate that
-    * windowed aggs can't express (state spans all windows). State is one
-    * small struct per user, dropped via timeout in production use. */
-  case class UserState(n: Long, sum: Double)
-  case class UserUpdate(user_id: Long, event_id: Long, n_so_far: Long,
-      mean_so_far: Double)
-
-  def runningUserState(spark: SparkSession, stream: DataFrame)
-      : org.apache.spark.sql.Dataset[UserUpdate] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    validated(stream)
-      .select(col("user_id"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, rows: Iterator[(Long, Long, Double)],
-            state: GroupState[UserState]) => {
-          var st = state.getOption.getOrElse(UserState(0L, 0.0))
-          val out = rows.toSeq.sortBy(_._2).map { case (_, eventId, v) =>
-            st = UserState(st.n + 1, st.sum + v)
-            UserUpdate(user, eventId, st.n, st.sum / st.n)
-          }
-          state.update(st)
-          out.iterator
-        })
-  }
-
-  /** Rate-limited producer loop (producer.py:169-210, SURVEY.md §2.1 S4):
-    * the `rate` source emits `rowsPerSecond` ticks; each tick becomes a
-    * synthetic event record (the producer's generate step, producer.py:
-    * 67-113) and is serialized to a Kafka-shaped (key, value) JSON message
-    * (producer.py:115-126). Attach any sink via writeStream. */
-  def rateProducer(spark: SparkSession, rowsPerSecond: Int = 1): DataFrame = {
-    val ticks = spark.readStream
-      .format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .load() // (timestamp, value)
-    val records = ticks.select(
-      col("value").as("event_id"),
-      col("timestamp").as("ts"),
-      pmod(col("value"), lit(15)).as("user_id"),
-      element_at(
-        array(lit("click"), lit("purchase"), lit("error"), lit("signup"),
-          lit("view")),
-        (pmod(col("value"), lit(5)) + 1).cast("int")).as("event_type"),
-      (pmod(xxhash64(col("value")), lit(10000)).cast("double") / 100.0)
-        .as("value"))
-    graft.sources.Sources.kafkaEncode(records, keyCol = "user_id")
-  }
-
-  /** Stream-stream interval join (SURVEY.md §2.3 as-of/interval row, in
-    * streaming form): each view event joins the same user's purchases
-    * within the preceding hour. Both sides carry watermarks so the join
-    * state is bounded — Spark drops buffered rows older than the
-    * watermark minus the interval. */
-  def viewsJoinRecentPurchases(stream: DataFrame): DataFrame = {
-    val views = validated(stream)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "10 minutes")
-    val purchases = validated(stream)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    views.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") <= col("view_ts") &&
-        col("purchase_ts") >= col("view_ts") - expr("INTERVAL 1 HOUR"))
-      .select(col("view_id"), col("user_id"), col("view_ts"),
-        col("purchase_id"), col("purchase_ts"))
-  }
-
   /** LEFT OUTER stream-stream join: every view emits, with purchase
     * columns null when no purchase landed in the preceding hour. Outer
     * results can only emit once the watermark passes the join window (the
     * engine must prove no matching purchase can still arrive), so nulls
     * surface watermark-delayed — the canonical conversion-attribution
-    * shape ("views that did NOT convert" drives retargeting). Same
-    * bounded state as the inner form; the time-bound condition is
-    * REQUIRED by Spark for outer stream-stream joins. */
+    * shape ("views that did NOT convert" drives retargeting). Both sides
+    * carry watermarks, so Spark drops buffered rows older than the
+    * watermark minus the interval; the time-bound condition is REQUIRED
+    * by Spark for outer stream-stream joins. */
   def viewsLeftJoinPurchases(stream: DataFrame): DataFrame = {
     val views = validated(stream)
       .filter(col("event_type") === "view")

@@ -39,9 +39,4 @@ object Shim {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
-
-  /** Block until every event posted so far has reached every listener
-    * (private[spark] listener bus), so listener counts are complete. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -5,6 +5,39 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Reference forms and planner math that only DedupSpec and
+  * PropertySpec compare the dedup operators against. */
+object DedupSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+
+  /** The composable transform/slice/concat_ws form of `Dedup.shingles`:
+    * the reference semantics the native WordShingles must match. */
+  def shinglesComposed(text: Column, n: Int = 3): Column = {
+    val toks = graft.text.TextAnalysis.tokens(text)
+    array_distinct(
+      when(size(toks) < n, array(concat_ws(" ", toks)))
+        .otherwise(transform(
+          sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+  }
+
+  /** LSH operating-point planner: the cheapest banding of the k
+    * signature rows (fewest bands) whose textbook collision probability
+    * 1 − (1 − J^r)^bands at `threshold` meets `targetRecall`, else the
+    * banding with the highest one. Returns (bands, r, predictedRecall). */
+  def lshPlan(k: Int = 16, threshold: Double = 0.8,
+      targetRecall: Double = 0.95): (Int, Int, Double) = {
+    val options = (1 to k).filter(k % _ == 0).map { bands =>
+      val r = k / bands
+      val p = 1.0 - math.pow(1.0 - math.pow(threshold, r), bands)
+      (bands, r, p)
+    }
+    options.filter(_._3 >= targetRecall).minByOption(_._1)
+      .getOrElse(options.maxBy(_._3))
+  }
+}
+
 /** Dedup operators on crafted near/exact duplicate corpora. */
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -227,7 +260,7 @@ class DedupSpec extends AnyFunSuite {
       val both = Tables.load(spark, TestSpark.sf, "documents")
         .select(
           dedup.Dedup.shingles(col("text"), n).as("fast"),
-          dedup.Dedup.shinglesComposed(col("text"), n).as("ref"))
+          DedupSpec.shinglesComposed(col("text"), n).as("ref"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n")
@@ -238,7 +271,7 @@ class DedupSpec extends AnyFunSuite {
     val edge = docs(Seq("", "a  b c", "one two"))
     val rows = edge.select(
       dedup.Dedup.shingles(col("text"), 3).as("fast"),
-      dedup.Dedup.shinglesComposed(col("text"), 3).as("ref")).collect()
+      DedupSpec.shinglesComposed(col("text"), 3).as("ref")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
 
@@ -305,13 +338,13 @@ class DedupSpec extends AnyFunSuite {
       "and the measured recall beats its prediction") {
     // textbook check: k=16, J=0.8, target 0.95 -> bands=8 (r=2):
     // 1-(1-0.8^2)^8 = 0.99972; bands=4 (r=4) predicts only 0.8785
-    val (bands, r, predicted) = dedup.Dedup.lshPlan()
+    val (bands, r, predicted) = DedupSpec.lshPlan()
     assert(bands == 8 && r == 2)
     assert(math.abs(predicted - (1.0 - math.pow(1.0 - 0.64, 8))) < 1e-12)
     // tighter targets cost more bands; impossible targets degrade to
     // the best available banding instead of failing
-    assert(dedup.Dedup.lshPlan(targetRecall = 0.9999)._1 == 16)
-    assert(dedup.Dedup.lshPlan(k = 4, targetRecall = 1.0)._3 < 1.0)
+    assert(DedupSpec.lshPlan(targetRecall = 0.9999)._1 == 16)
+    assert(DedupSpec.lshPlan(k = 4, targetRecall = 1.0)._3 < 1.0)
     // empirical validation at the planned point: aggregate measured
     // recall over all J >= threshold truth pairs must meet the
     // prediction, with slack for ONE finite-sample miss (per-pair miss

@@ -125,49 +125,6 @@ class LayoutSpec extends AnyFunSuite {
       s"expected y-unbounded files in the single-dim layout: $xSorted")
   }
 
-  test("LayoutWriter: box reads touch few curve-clustered files, " +
-      "most row-ordered files") {
-    import graft.operators.LayoutWriter
-    val base = java.nio.file.Files.createTempDirectory("layout_writer")
-      .toString
-    val raw = Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_custkey").as("x"),
-        expr("cast(datediff(cast(o_orderdate as date), date'1970-01-01') as bigint)").as("y"))
-    val b = raw.agg(min("x"), max("x"), min("y"), max("y")).collect()(0)
-    val (x0, x1, y0, y1) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    // a ~20%-per-side box in the middle of the domain (~4% of the area)
-    def pct(lo: Long, hi: Long, p: Double): Long = lo + ((hi - lo) * p).toLong
-    val (bx0, bx1) = (pct(x0, x1, 0.4), pct(x0, x1, 0.6))
-    val (by0, by1) = (pct(y0, y1, 0.4), pct(y0, y1, 0.6))
-    for (curve <- Seq("morton", "hilbert")) {
-      val dir = s"$base/$curve"
-      LayoutWriter.writeCurveClustered(raw, col("x"), col("y"), dir,
-        numFiles = 16, curve = curve)
-      val stats = LayoutWriter.fileStats(spark, dir, "x", "y")
-      val n = stats.count()
-      assert(n >= 16, s"$curve: expected >=16 files, got $n")
-      val touched = LayoutWriter.filesTouched(stats, bx0, bx1, by0, by1)
-      // 2-D locality: a ~4%-area box must not touch most files. Curve
-      // cells straddling range cuts cost a few extra — allow half.
-      assert(touched <= n / 2,
-        s"$curve: box touched $touched of $n clustered files")
-      // row counts must be range-balanced (no empty/giant files)
-      val rows = stats.select(col("n_rows")).collect().map(_.getLong(0))
-      assert(rows.min > 0)
-    }
-    // contrast: insertion-order (orderkey-sorted) files — x and y are
-    // both uncorrelated with write order, so nearly every file
-    // intersects the same box
-    val linDir = s"$base/linear"
-    raw.repartitionByRange(16, col("o_orderkey"))
-      .sortWithinPartitions(col("o_orderkey"))
-      .write.mode("overwrite").parquet(linDir)
-    val linStats = LayoutWriter.fileStats(spark, linDir, "x", "y")
-    val linTouched = LayoutWriter.filesTouched(linStats, bx0, bx1, by0, by1)
-    assert(linTouched >= (linStats.count() * 3) / 4,
-      s"expected the linear layout to touch nearly all files, got $linTouched")
-  }
-
   test("hilbert walks the origin block: bijective, every step adjacent") {
     // The curve starts at (0,0) and fills the aligned 64x64 origin block
     // before leaving it, so its 4096 cells must map bijectively onto

@@ -212,17 +212,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(byId.values.forall(_.map(_.frameIdx).toSeq.sorted == Seq(0, 2, 5)))
   }
 
-  test("typed Aggregator computes weighted mean over a Dataset") {
-    import graft.functions.TypedAggregators._
-    val sq = spark
-    import sq.implicits._
-    val ds = Seq(
-      WeightedValue(10.0, 1.0),
-      WeightedValue(20.0, 3.0)).toDS()
-    val got = ds.select(weightedMean.toColumn).collect()(0)
-    assert(math.abs(got - 17.5) < 1e-12)
-  }
-
   test("exact-moment variance matches a direct computation") {
     val events = Tables.load(spark, sf, "events")
     val out = operators.Relational.valueVariance(events).collect()

@@ -137,7 +137,7 @@ object PairCostProbe {
     // ---- 3. PPJoin prefix-index candidates vs threshold ----
     thresholds.foreach { t =>
       val (cand, dt, sd, _, sw, pk) = measured {
-        graft.dedup.Dedup.jaccardPrefixCandidateCount(docs, threshold = t)
+        ScalingProbe.jaccardPrefixCandidateCount(docs, threshold = t)
       }
       println(f"PREFIXCOST label=$label t=$t cand_pairs=$cand sec=$dt%.1f " +
         f"spill_disk_mb=${sd / 1e6}%.0f shuffle_write_mb=${sw / 1e6}%.0f " +

@@ -24,9 +24,9 @@ object ProfileScaled {
         (d => graft.dedup.Dedup.jaccardPrefixPairs(d, threshold = 0.8)
           .count()),
       "prefix_cand04" ->
-        (d => graft.dedup.Dedup.jaccardPrefixCandidateCount(d)),
+        (d => ScalingProbe.jaccardPrefixCandidateCount(d)),
       "prefix_cand08" ->
-        (d => graft.dedup.Dedup
+        (d => ScalingProbe
           .jaccardPrefixCandidateCount(d, threshold = 0.8)),
       "cluster_canonical" ->
         (d => operators.Pipeline.clusterCanonical(d).count()),

@@ -263,7 +263,7 @@ class PropertySpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 4)) {
       val rows = df.select(
         dedup.Dedup.shingles(col("text"), n).as("fast"),
-        dedup.Dedup.shinglesComposed(col("text"), n).as("ref")).collect()
+        DedupSpec.shinglesComposed(col("text"), n).as("ref")).collect()
       rows.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
           s"n=$n diverged: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")

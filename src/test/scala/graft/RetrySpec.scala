@@ -22,11 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Every custom exec runs here: AsOfJoinExec (backward + forward),
   * BroadcastIntervalJoinExec (point probe; keyed inner + LEFT OUTER;
-  * interval probe), TopKPerGroupExec, and the AuditedJsonlSink DSv2
-  * write path (whose retried write task must publish exactly-once
-  * through the 2-phase commit). The binned
-  * over-ceiling fallback plan is retried too, so both sides of the
-  * broadcast-ceiling threshold hold under retry. */
+  * interval probe) and TopKPerGroupExec. The binned over-ceiling
+  * fallback plan is retried too, so both sides of the broadcast-ceiling
+  * threshold hold under retry. */
 class RetrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -161,37 +159,5 @@ class RetrySpec extends AnyFunSuite {
         col("cnt"), col("sum_cents"))
       .collect().map(_.toString).sorted.toSeq
     assert(streamed.nonEmpty && streamed == batch)
-  }
-
-  test("DSv2 audited sink: a write task that dies mid-write publishes " +
-      "exactly once after retry (2-phase commit)") {
-    val sq = spark; import sq.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_retry_sink").toString + "/out"
-    val df = spark.sparkContext.parallelize(1L to 100L, 3)
-      .mapPartitions { it =>
-        val attempt = TaskContext.get().attemptNumber()
-        it.zipWithIndex.map { case (x, i) =>
-          // die after 5 rows are already in the attempt's temp file:
-          // the abort path must discard them and the retried attempt's
-          // commit must be the only one published
-          if (attempt == 0 && i == 5) throw new RuntimeException(
-            "graft-retry-injection: writer killed mid-file")
-          x
-        }
-      }.toDF("id")
-    df.write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    val back = spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType))))
-      .json(dir + "/part-*.jsonl")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(back == (1L to 100L), s"exactly-once violated: got ${back.size} rows")
-    val manifest = scala.io.Source.fromFile(
-      new java.io.File(dir, "_MANIFEST"))
-    val lines = try manifest.getLines().toSeq finally manifest.close()
-    assert(lines.last == """{"total_rows":100}""")
   }
 }

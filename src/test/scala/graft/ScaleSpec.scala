@@ -114,103 +114,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(viaBloom == plain)
   }
 
-  test("FoldSelfCosine optimizer rule folds cosine_sim(a, a) to a constant") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark // ensure the shared suite session/context exists
-    // getOrCreate returns an existing active session (ignoring extensions),
-    // so detach it first; the new session shares the same SparkContext.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    try {
-      val df = Tables.load(ext, sf, "embeddings").limit(10)
-        .select(col("vec_id"),
-          functions.VectorFunctions.cosineSim(
-            col("embedding"), col("embedding")).as("self_cos"))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(!optimized.contains("cosine_sim"), optimized.take(400))
-      assert(df.collect().forall(_.getDouble(1) == 1.0))
-      // and the SQL-registered function resolves through extensions
-      Tables.load(ext, sf, "embeddings").createOrReplaceTempView("emb_ext")
-      val viaSql = ext.sql(
-        """SELECT cosine_sim(CAST(embedding AS ARRAY<DOUBLE>),
-                             CAST(embedding AS ARRAY<DOUBLE>)) AS c
-           FROM emb_ext LIMIT 5""").collect()
-      assert(viaSql.forall(_.getDouble(0) == 1.0))
-    } finally {
-      // don't stop `ext` (shared SparkContext); restore the suite session
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
-
-  test("BinTimeRangeJoin rewrites a pure range join away from BNLJ") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    try {
-      def rangeJoin(s: SparkSession) = {
-        val e = Tables.load(s, sf, "events").filter(col("event_id") < 2000)
-        val v = e.filter(col("event_type") === "view")
-          .select(col("event_id").as("view_id"), col("ts").as("view_ts"))
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts"))
-        // NO equi key: naive plan is BroadcastNestedLoopJoin
-        v.join(p,
-            col("purchase_ts") <= col("view_ts") &&
-              col("purchase_ts") >= col("view_ts") - expr("INTERVAL 10 MINUTES"))
-          .orderBy(col("view_id"), col("purchase_id"))
-      }
-      val rewritten = rangeJoin(ext)
-      val optimized = rewritten.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("__graft_bucket"), optimized.take(800))
-      val physical = rewritten.queryExecution.executedPlan.toString
-      assert(!physical.contains("BroadcastNestedLoopJoin"), physical.take(800))
-      // identical rows to the naive (unrewritten) plan on the base session
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
-      val naive = rangeJoin(base)
-      assert(naive.queryExecution.executedPlan.toString
-        .contains("BroadcastNestedLoopJoin"))
-      val expected = naive.collect().map(_.toSeq).toSeq
-      SparkSession.setActiveSession(ext)
-      SparkSession.setDefaultSession(ext)
-      val got = rewritten.collect().map(_.toSeq).toSeq
-      assert(got == expected,
-        s"rewritten rows (${got.length}) != naive rows (${expected.length})")
-      // negative: a join that already has an equi key is left alone
-      val e2 = Tables.load(ext, sf, "events").filter(col("event_id") < 2000)
-      val v2 = e2.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"),
-          col("ts").as("view_ts"))
-      val p2 = e2.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
-      val equiJoin = v2.join(p2,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") <= col("view_ts") &&
-          col("purchase_ts") >= col("view_ts") - expr("INTERVAL 10 MINUTES"))
-      assert(!equiJoin.queryExecution.optimizedPlan.toString
-        .contains("__graft_bucket"))
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
-
   test("cached DataFrame is served from InMemoryTableScan") {
     val df = Tables.load(spark, sf, "nation").cache()
     try {

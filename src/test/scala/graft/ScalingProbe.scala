@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions._
   * Output: one PROBE line per (operator, scale) with rows and seconds.
   */
 object ScalingProbe {
+  /** How many candidate pairs survive `Dedup.jaccardPrefixPairs`' prefix
+    * and length filters at `threshold`: the verify join's input volume,
+    * the quantity PPJoin's selectivity argument is about (SCALING.md).
+    * Bounded driver read (one count). ProfileScaled and PairCostProbe
+    * read it too. */
+  def jaccardPrefixCandidateCount(documents: DataFrame, n: Int = 3,
+      threshold: Double = 0.4): Long = {
+    val sh = graft.dedup.Dedup.shingleHashes(documents, n).persist()
+    val c = graft.dedup.Dedup.prefixCandidates(sh, threshold).count()
+    sh.unpersist()
+    c
+  }
+
   def main(args: Array[String]): Unit = {
     val only = args.toSet
     def sec(name: String)(body: => Unit): Unit =
@@ -306,8 +319,8 @@ object ScalingProbe {
       // candidate count must drop superlinearly vs t=0.4 (r8 verdict's
       // named concern — the t=0.4 verify shuffle constant)
       if (k > 0) {
-        val c4 = graft.dedup.Dedup.jaccardPrefixCandidateCount(d)
-        val c8 = graft.dedup.Dedup
+        val c4 = ScalingProbe.jaccardPrefixCandidateCount(d)
+        val c8 = ScalingProbe
           .jaccardPrefixCandidateCount(d, threshold = 0.8)
         println(s"PROBE op=prefix_candidates scale=$k t04=$c4 t08=$c8")
       }

@@ -106,7 +106,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r == 2L)
   }
 
-  test("cosine_sim is registered for SQL via extensions/register") {
+  test("cosine_sim is registered for SQL via VectorFunctions.register") {
     functions.VectorFunctions.register(spark)
     Tables.load(spark, TestSpark.sf, "embeddings")
       .createOrReplaceTempView("emb_sql_test")
@@ -119,14 +119,28 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("zvalue and word_shingles are registered for SQL") {
+    // the one SQL-function path registers all six functions on a
+    // Session.builder session; a second call replaces them in place
     functions.VectorFunctions.register(spark)
-    val z = spark.sql("SELECT zvalue(3L, 0L) AS z, zvalue(0L, 3L) AS z2")
+    functions.VectorFunctions.register(spark)
+    val r = spark.sql(
+      """SELECT zvalue(3L, 0L), zvalue(0L, 3L), word_shingles('a b c d', 3),
+           cosine_sim(array(3D, 4D), array(3D, 4D)), hilbert(5L, 9L),
+           bpe_tokens('lowest'),
+           sorted_intersect_count(array(1L, 3L, 7L), array(3L, 7L, 8L))""")
       .collect()(0)
-    assert(z.getLong(0) == 5L && z.getLong(1) == 10L)
-    val sh = spark.sql(
-      "SELECT word_shingles('a b c d', 3) AS s").collect()(0)
-      .getSeq[String](0)
-    assert(sh == Seq("a b c", "b c d"))
+    assert(r.getLong(0) == 5L && r.getLong(1) == 10L)
+    assert(r.getSeq[String](2) == Seq("a b c", "b c d"))
+    assert(r.getDouble(3) == 1.0)
+    assert(r.getLong(4) == functions.HilbertValue.xy2d(5L, 9L))
+    assert(r.getSeq[String](5) == functions.Bpe.tokenize("lowest").toSeq)
+    assert(r.getLong(6) == 2L)
+    // the shingle width is a plan-time constant: a column is refused
+    val e = intercept[IllegalArgumentException](spark.sql(
+      "SELECT word_shingles(t, n) FROM VALUES ('a b c', 2) AS v(t, n)")
+      .collect())
+    assert(e.getMessage.contains("word_shingles width must be an int literal"),
+      e.getMessage)
   }
 
   test("PQ ADC top-k recalls most of the exact top-10 and never returns " +

@@ -11,44 +11,6 @@ class SourcesSpec extends AnyFunSuite {
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toString
 
-  test("CSV round-trip preserves rows and values") {
-    val orders = Tables.load(spark, TestSpark.sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    val dir = tmp("graft_csv")
-    sources.Sources.writeCsv(orders, dir)
-    val back = sources.Sources.readCsv(spark, dir, orders.schema)
-    assert(back.count() == orders.count())
-    val sumA = orders.agg(sum("o_totalprice")).collect()(0).getDouble(0)
-    val sumB = back.agg(sum("o_totalprice")).collect()(0).getDouble(0)
-    assert(math.abs(sumA - sumB) < 1e-6)
-  }
-
-  test("JSONL round-trip preserves rows") {
-    val customer = Tables.load(spark, TestSpark.sf, "customer")
-    val dir = tmp("graft_jsonl")
-    sources.Sources.writeJsonl(customer, dir)
-    val back = sources.Sources.readJsonl(spark, dir, customer.schema)
-    assert(back.count() == customer.count())
-    assert(back.agg(sum("c_custkey")).collect()(0).getLong(0) ==
-      customer.agg(sum("c_custkey")).collect()(0).getLong(0))
-  }
-
-  test("ORC round-trip preserves rows and pushes predicates to the scan") {
-    val orders = Tables.load(spark, TestSpark.sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    val dir = tmp("graft_orc")
-    sources.Sources.writeOrc(orders, dir)
-    val back = sources.Sources.readOrc(spark, dir)
-    assert(back.count() == orders.count())
-    assert(back.agg(sum("o_orderkey")).collect()(0).getLong(0) ==
-      orders.agg(sum("o_orderkey")).collect()(0).getLong(0))
-    // predicate pushdown reaches the ORC scan like parquet
-    val filtered = back.filter(col("o_totalprice") > 100000.0)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("o_totalprice"),
-      plan.take(600))
-  }
-
   test("partitioned parquet layout enables partition pruning") {
     val events = Tables.load(spark, TestSpark.sf, "events")
       .withColumn("event_date", to_date(col("ts")))
@@ -61,6 +23,36 @@ class SourcesSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") &&
       plan.contains("event_date"), plan.take(600))
     assert(pruned.count() > 0)
+  }
+
+  test("bucketed tables of two directories with one String.hashCode " +
+      "stay apart: each directory's join reads its own rows") {
+    // "Aa" and "BB" have the same String.hashCode, so these two do too
+    val root = tmp("graft_bkt_dirs")
+    val (a, b) = (root + "/Aa", root + "/BB")
+    assert(a.hashCode == b.hashCode)
+    val li = Tables.load(spark, TestSpark.sf, "lineitem")
+      .select("l_orderkey", "l_quantity")
+    val ord = Tables.load(spark, TestSpark.sf, "orders")
+      .select("o_orderkey", "o_orderpriority")
+    li.write.parquet(a + "/lineitem.parquet")
+    ord.write.parquet(a + "/orders.parquet")
+    li.filter(col("l_orderkey") % 2 === 0).write.parquet(b + "/lineitem.parquet")
+    ord.filter(col("o_orderkey") % 3 === 0).write.parquet(b + "/orders.parquet")
+    def want(dir: String) = Tables.load(spark, dir, "lineitem")
+      .join(Tables.load(spark, dir, "orders"),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)), Cols.decSum(col("l_quantity"), 2))
+      .orderBy(col("o_orderpriority")).collect().toSeq
+    def got(dir: String) =
+      sources.Sources.bucketedJoinAgg(spark, dir).collect().toSeq
+    val (wantA, wantB) = (want(a), want(b))
+    assert(wantA != wantB)
+    assert(got(a) == wantA)
+    assert(got(b) == wantB)
+    // the second read of `a` is a SessionDirs hit after `b` was built
+    assert(got(a) == wantA)
   }
 
   test("kafka encode/decode round-trip is lossless incl. timestamps") {
@@ -191,212 +183,5 @@ class SourcesSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("range=[0,7)"), plan.take(900))
     assert(df.count() == 7L)
-  }
-
-  test("DSv2 audited JSONL sink: two-phase commit publishes parts + " +
-      "manifest; round-trip preserves rows") {
-    val dir = tmp("graft_sink") + "/out"
-    val orders = Tables.load(spark, TestSpark.sf, "orders")
-      .select("o_orderkey", "o_orderpriority", "o_totalprice")
-      .repartition(3)
-    orders.write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    val files = new java.io.File(dir).listFiles().map(_.getName).sorted
-    assert(files.count(_.endsWith(".jsonl")) == 3, files.mkString(","))
-    assert(files.contains("_MANIFEST"))
-    val manifest = scala.io.Source.fromFile(new java.io.File(dir, "_MANIFEST"))
-    val lines = try manifest.getLines().toSeq finally manifest.close()
-    assert(lines.last == s"""{"total_rows":${orders.count()}}""")
-    val back = spark.read.schema(orders.schema).json(dir + "/part-*.jsonl")
-    assert(back.count() == orders.count())
-    val sa = orders.agg(sum("o_orderkey"), sum("o_totalprice")).head()
-    val sb = back.agg(sum("o_orderkey"), sum("o_totalprice")).head()
-    assert(sa.getLong(0) == sb.getLong(0))
-    assert(math.abs(sa.getDouble(1) - sb.getDouble(1)) < 1e-6)
-  }
-
-  test("DSv2 audited JSONL sink: a re-published directory is REPLACED " +
-      "whole — no stale parts mix under the new manifest") {
-    import spark.implicits._
-    val dir = tmp("graft_sink_replace") + "/out"
-    // first publication: 3 parts
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").repartition(3)
-      .write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    assert(new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".jsonl")) == 3)
-    // replay/replace with FEWER partitions: old part-00002 must go
-    Seq((9L, "z")).toDF("id", "v").repartition(1)
-      .write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    val files = new java.io.File(dir).listFiles().map(_.getName)
-    assert(files.count(_.endsWith(".jsonl")) == 1, files.mkString(","))
-    val src = scala.io.Source.fromFile(new java.io.File(dir, "_MANIFEST"))
-    val lines = try src.getLines().toSeq finally src.close()
-    assert(lines.last == """{"total_rows":1}""")
-    val back = spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.StringType))))
-      .json(dir + "/part-*.jsonl")
-    assert(back.collect().map(_.getLong(0)).toSeq == Seq(9L))
-  }
-
-  test("DSv2 audited JSONL sink: non-finite doubles serialize as JSON " +
-      "null, not row-corrupting NaN tokens") {
-    import spark.implicits._
-    val dir = tmp("graft_sink_nan") + "/out"
-    Seq((1L, Double.NaN), (2L, Double.PositiveInfinity), (3L, 0.5))
-      .toDF("id", "x").repartition(1)
-      .write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType)))
-    val back = spark.read.schema(schema).json(dir + "/part-*.jsonl")
-      .orderBy("id").collect()
-    // all three ROWS survive (ids intact); the non-finite cells are null
-    assert(back.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-    assert(back(0).isNullAt(1) && back(1).isNullAt(1))
-    assert(back(2).getDouble(1) == 0.5)
-  }
-
-  test("DSv2 audited JSONL sink: timestamps round-trip losslessly " +
-      "(ISO-8601 — a numeric cell would read back seconds-scaled or null)") {
-    import spark.implicits._
-    val dir = tmp("graft_sink_ts") + "/out"
-    // one instant (TimestampType) + one wall-clock (TimestampNTZType),
-    // full micro precision, including a pre-epoch value (negative
-    // micros exercise the floorDiv/floorMod split)
-    val df = Seq(
-      (1L, java.time.Instant.parse("2024-03-01T12:34:56.123456Z"),
-        java.time.LocalDateTime.parse("2024-03-01T12:34:56.654321")),
-      (2L, java.time.Instant.parse("1969-12-31T23:59:59.000001Z"),
-        java.time.LocalDateTime.parse("1969-12-31T23:59:59.000001")))
-      .toDF("id", "t", "tn").repartition(1)
-    df.write.format("graft.sources.AuditedJsonlSink")
-      .option("path", dir).mode("append").save()
-    val back = spark.read.schema(df.schema).json(dir + "/part-*.jsonl")
-    // JSON read marks everything nullable — compare names + types
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.orderBy("id").collect().toSeq ==
-      df.orderBy("id").collect().toSeq)
-  }
-
-  test("DSv2 audited JSONL sink: abort leaves nothing visible") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import org.apache.spark.unsafe.types.UTF8String
-    val dir = tmp("graft_sink_abort") + "/out"
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("s", StringType)))
-    val bw = new sources.AuditedJsonlBatchWrite(schema, dir)
-    val w = new sources.JsonlWriterFactory(schema, dir).createWriter(0, 7L)
-    w.write(InternalRow(1L, UTF8String.fromString("x")))
-    val msg = w.commit()
-    // job-level failure AFTER a task committed: abort must delete temps
-    bw.abort(Array(msg))
-    val temp = new java.io.File(dir, "_temp")
-    assert(!temp.exists() || temp.listFiles().isEmpty)
-    assert(!new java.io.File(dir, "_MANIFEST").exists())
-    assert(Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .forall(!_.getName.endsWith(".jsonl")))
-  }
-
-  test("mergeSchema read unions widened batch schemas; old rows " +
-      "surface added columns as null") {
-    import spark.implicits._
-    val dir = tmp("graft_evolve")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.mode("append").parquet(dir)
-    Seq((3L, "c", 30), (4L, "d", 40)).toDF("id", "v", "extra")
-      .write.mode("append").parquet(dir)
-    val merged = sources.Sources.readMergedSchema(spark, dir)
-    assert(merged.columns.sorted.toSeq == Seq("extra", "id", "v"))
-    assert(merged.count() == 4L)
-    assert(merged.filter(col("extra").isNull).count() == 2L)
-    assert(merged.filter(col("id") === 3L).head().getAs[Int]("extra") == 30)
-  }
-
-  test("compaction rewrites a many-small-file table into few files " +
-      "with identical contents") {
-    val docs = Tables.load(spark, TestSpark.sf, "documents")
-    val inDir = tmp("graft_small") + "/t"
-    docs.repartition(64).write.parquet(inDir)
-    val outDir = tmp("graft_compact") + "/t"
-    val (before, after) =
-      sources.Sources.compact(spark, inDir, outDir, 256L * 1024 * 1024)
-    assert(before == 64, s"expected 64 input part files, got $before")
-    assert(after < 8, s"expected few output files, got $after")
-    val a = spark.read.parquet(inDir)
-    val b = spark.read.parquet(outDir)
-    assert(b.count() == a.count())
-    val sa = a.agg(sum(col("doc_id")), sum(col("n_chars"))).head()
-    val sb = b.agg(sum(col("doc_id")), sum(col("n_chars"))).head()
-    assert(sa == sb)
-  }
-
-  test("bloom-filter layout: every row group's footer carries the " +
-      "filter; point lookups answer identically") {
-    val docs = Tables.load(spark, TestSpark.sf, "documents")
-    val dir = tmp("graft_bloom") + "/t"
-    sources.Sources.writeWithBloom(docs.repartition(4), dir, "doc_id",
-      ndv = 10000L)
-    assert(sources.Sources.bloomFilterPresent(spark, dir, "doc_id"))
-    // a column NOT opted in carries no filter — the audit discriminates
-    assert(!sources.Sources.bloomFilterPresent(spark, dir, "source"))
-    val expected = docs.filter(col("doc_id") === 7L)
-      .select(col("doc_id"), col("source")).collect()
-    val got = spark.read.parquet(dir).filter(col("doc_id") === 7L)
-      .select(col("doc_id"), col("source")).collect()
-    assert(got.toSeq == expected.toSeq && got.nonEmpty)
-  }
-
-  test("CBO statistics: ANALYZE feeds exact row counts into Catalyst " +
-      "and filter selectivity estimates become bounded") {
-    val prev = spark.conf.getOption("spark.sql.cbo.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
-      val tbl = sources.Sources.analyzedTable(spark, TestSpark.sf, "orders")
-      val trueCount = spark.table(tbl).count()
-      // catalog row count is exact post-ANALYZE
-      val full = spark.table(tbl).queryExecution.optimizedPlan.stats
-      assert(full.rowCount.contains(BigInt(trueCount)))
-      // CBO selectivity: an equality filter on an analyzed column gets
-      // a row estimate STRICTLY below the table's and above zero —
-      // the file-size fallback can't produce either bound
-      val filtered = spark.table(tbl)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .queryExecution.optimizedPlan.stats
-      assert(filtered.rowCount.isDefined)
-      val est = filtered.rowCount.get
-      assert(est > 0 && est < BigInt(trueCount),
-        s"estimate $est not in (0, $trueCount)")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.cbo.enabled", v)
-        case None => spark.conf.unset("spark.sql.cbo.enabled")
-      }
-    }
-  }
-
-  test("ignoreCorruptFiles skips a torn file and keeps healthy rows; " +
-      "the strict default fails fast") {
-    import spark.implicits._
-    val dir = tmp("graft_corrupt")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir + "/t")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + "/t/part-torn.parquet"),
-      Array.fill[Byte](128)(0x5a))
-    val ok = sources.Sources.readIgnoreCorrupt(spark, dir + "/t")
-    assert(ok.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    intercept[org.apache.spark.SparkException] {
-      spark.read.parquet(dir + "/t").count()
-    }
   }
 }

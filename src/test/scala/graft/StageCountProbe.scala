@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.graftshim.ProbeShim
 
 /** Counts the jobs/stages/tasks a catalog query actually EXECUTES —
   * the arbiter for subtree-reuse claims that wall-clock on a noisy box
@@ -45,11 +45,11 @@ object StageCountProbe {
     })
     // jobs/stages/tasks/input rows/compiles of one run
     def measure(run: => Unit): (Int, Int, Int, Long, Long) = {
-      Shim.drainListenerBus(spark)
+      ProbeShim.drainListenerBus(spark)
       stages = 0; tasks = 0; jobs = 0; inputRows = 0L
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       run
-      Shim.drainListenerBus(spark)
+      ProbeShim.drainListenerBus(spark)
       (jobs, stages, tasks, inputRows,
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     }

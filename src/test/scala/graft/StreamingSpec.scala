@@ -44,61 +44,6 @@ class StreamingSpec extends AnyFunSuite {
       ("2024-01-01 11:00:00", "view", 1L, 3.0)))
   }
 
-  test("observe quality gate surfaces per-micro-batch metrics through " +
-      "StreamingQueryProgress — the same API as batch") {
-    val sq = spark
-    import sq.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    mem.addData((1L, "a b", 3L), (2L, "", 0L), (3L, "c", 1L))
-    val gated = operators.Pipeline.withQualityGate(
-      mem.toDF().toDF("doc_id", "text", "n_chars"))
-    val q = gated.writeStream.outputMode("append")
-      .format("memory").queryName("qg_stream").start()
-    q.processAllAvailable()
-    val m = q.lastProgress.observedMetrics.get("quality_gate")
-    q.stop()
-    assert(m != null, "observed metrics missing from progress")
-    assert(m.getAs[Long]("n_rows") == 3L)
-    assert(m.getAs[Long]("n_empty") == 1L)
-    assert(m.getAs[Long]("min_chars") == 0L)
-    assert(m.getAs[Long]("max_chars") == 3L)
-  }
-
-  test("foreachBatch publishes each micro-batch through the audited " +
-      "two-phase sink: one manifest per batch, atomically gated") {
-    val sq = spark
-    import sq.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_fb").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("id", "v").writeStream
-      .option("checkpointLocation", base + "/ckpt")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        // the standard exactly-once publish recipe: a batch-id-keyed
-        // directory through the two-phase sink — the _MANIFEST lands
-        // LAST, so a consumer that lists manifests never sees a torn
-        // batch, and a replayed batch re-publishes the same directory
-        df.write.format("graft.sources.AuditedJsonlSink")
-          .option("path", s"$base/batch-$id").mode("append").save()
-      }
-      .start()
-    mem.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    mem.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    val dirs = new java.io.File(base).listFiles()
-      .filter(_.getName.startsWith("batch-")).sortBy(_.getName)
-    assert(dirs.length == 2, dirs.map(_.getName).mkString(","))
-    val totals = dirs.map { d =>
-      val src = scala.io.Source.fromFile(new java.io.File(d, "_MANIFEST"))
-      val last = try src.getLines().toSeq.last finally src.close()
-      last.replaceAll("[^0-9]", "").toLong
-    }
-    assert(totals.toSeq == Seq(2L, 1L))
-  }
-
   test("dual-write sink appends history and maintains latest view") {
     val sq = spark
     import sq.implicits._
@@ -151,42 +96,6 @@ class StreamingSpec extends AnyFunSuite {
       spark, stream, s"$sink/hist", ckpt)
     q3.processAllAvailable(); q3.stop()
     assert(spark.read.parquet(s"$sink/hist").count() == 3)
-  }
-
-  test("stream-static as-of enrichment joins each batch to the latest " +
-      "dim snapshot and survives checkpoint restart") {
-    val sq = spark
-    import sq.implicits._
-    val sink = Files.createTempDirectory("graft_asof_sink").toString
-    val ckpt = Files.createTempDirectory("graft_asof_ckpt").toString
-    val srcDir = Files.createTempDirectory("graft_asof_src").toString
-    // dim snapshot history: user 1 was bronze from ts=1, gold from ts=5
-    val dim = Seq((1L, 1L, "bronze"), (1L, 5L, "gold"), (2L, 3L, "silver"))
-      .toDF("user_id", "ver", "tier")
-    val mk = (id: Long, user: Long, ver: Long) => (id, user, ver)
-    Seq(mk(1, 1L, 2L), mk(2, 1L, 7L)).toDF("event_id", "user_id", "ver")
-      .write.parquet(s"$srcDir/f1")
-    Seq(mk(3, 2L, 9L), mk(4, 3L, 9L)).toDF("event_id", "user_id", "ver")
-      .write.parquet(s"$srcDir/f2")
-    val schema = spark.read.parquet(s"$srcDir/f1").schema
-    def stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
-    def run(): Unit = {
-      val q = streaming.StreamingPipeline.startAsOfEnrich(
-        stream, dim, s"$sink/hist", ckpt, Seq("user_id"), Seq("ver"))
-      assert(q.awaitTermination(60000))
-    }
-    run()
-    val out = spark.read.parquet(s"$sink/hist")
-      .select(col("event_id"), col("r_tier")).collect()
-      .map(r => (r.getLong(0), r.get(1))).toMap
-    // event 1: user 1 at ver 2 -> bronze; event 2: ver 7 -> gold;
-    // event 3: user 2 at ver 9 -> silver; event 4: unknown user -> null
-    assert(out == Map(1L -> "bronze", 2L -> "gold", 3L -> "silver",
-      4L -> null))
-    // restart with the same checkpoint: no re-processing, no duplicates
-    run()
-    assert(spark.read.parquet(s"$sink/hist").count() == 4)
   }
 
   test("dual-write survives mid-batch failure replay without duplicates") {
@@ -300,26 +209,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(n == 2) // two sessions for user 1
   }
 
-  test("flatMapGroupsWithState keeps running per-user state across batches") {
-    val sq = spark
-    import sq.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = streaming.StreamingPipeline.runningUserState(spark, mem.toDF())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("state_test").start()
-    mem.addData(Ev(1, ts("2024-01-01 10:00:00"), 1L, "click", 10.0, "{}"))
-    q.processAllAvailable()
-    mem.addData(Ev(2, ts("2024-01-01 10:01:00"), 1L, "click", 20.0, "{}"))
-    q.processAllAvailable() // state must survive the batch boundary
-    q.stop()
-    val rows = spark.table("state_test")
-      .orderBy(col("event_id"))
-      .collect().map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("n_so_far"),
-        r.getAs[Double]("mean_so_far")))
-    assert(rows.toSeq == Seq((1L, 1L, 10.0), (2L, 2L, 15.0)))
-  }
-
   test("transformWithState anomaly detector flags spikes across batches") {
     val sq = spark
     import sq.implicits._
@@ -387,42 +276,6 @@ class StreamingSpec extends AnyFunSuite {
           spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-  }
-
-  test("rate-source producer emits serialized kafka-shaped messages") {
-    val df = streaming.StreamingPipeline.rateProducer(spark, rowsPerSecond = 100)
-    val q = df.writeStream.outputMode("append")
-      .format("memory").queryName("rate_test").start()
-    try {
-      // wait until at least one tick is processed
-      var tries = 0
-      while (spark.table("rate_test").isEmpty && tries < 50) {
-        Thread.sleep(200); tries += 1
-      }
-    } finally q.stop()
-    val rows = spark.table("rate_test").collect()
-    assert(rows.nonEmpty)
-    assert(rows.forall(r => r.getString(1).startsWith("{\"event_id\":")))
-  }
-
-  test("stream-stream interval join pairs views with recent purchases") {
-    val sq = spark
-    import sq.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    mem.addData(
-      Ev(1, ts("2024-01-01 10:00:00"), 1L, "purchase", 1.0, "{}"),
-      Ev(2, ts("2024-01-01 10:30:00"), 1L, "view", 1.0, "{}"), // within 1h
-      Ev(3, ts("2024-01-01 12:30:00"), 1L, "view", 1.0, "{}"), // too late
-      Ev(4, ts("2024-01-01 10:30:00"), 2L, "view", 1.0, "{}")) // other user
-    val q = streaming.StreamingPipeline.viewsJoinRecentPurchases(mem.toDF())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj_test").start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssj_test").collect()
-      .map(r => (r.getAs[Long]("view_id"), r.getAs[Long]("purchase_id")))
-    assert(rows.toSeq == Seq((2L, 1L)))
   }
 
   test("left-outer stream-stream join emits unmatched views after watermark") {

@@ -508,38 +508,6 @@ class TrainingOpsSpec extends AnyFunSuite {
         s"top bin rate ${out.last._5} below bottom ${out.head._5}")
   }
 
-  test("observe quality gate: metrics ride the consuming action with " +
-      "ONE scan, values match a direct computation") {
-    val docs = Tables.load(spark, TestSpark.sf, "documents")
-    val gated = operators.Pipeline.withQualityGate(docs)
-    // the consuming action must run THIS frame's own QueryExecution
-    // (count() builds a separate aggregate execution and the metrics
-    // land there — the production pattern reads them via a
-    // QueryExecutionListener, which sees every execution)
-    val nRows = gated.collect().length.toLong
-    val m = gated.queryExecution.observedMetrics("quality_gate")
-    assert(m.getAs[Long]("n_rows") == nRows)
-    assert(m.getAs[Long]("n_empty") == 0L)
-    val direct = docs.agg(
-      org.apache.spark.sql.functions.min(col("n_chars")),
-      org.apache.spark.sql.functions.max(col("n_chars"))).head()
-    assert(m.getAs[Long]("min_chars") == direct.getLong(0))
-    assert(m.getAs[Long]("max_chars") == direct.getLong(1))
-    // exactly one scan of the source: the gate is CollectMetrics inside
-    // the plan, not a second pass
-    val scans = gated.queryExecution.executedPlan.toString
-      .split("\n").count(_.contains("Scan parquet"))
-    assert(scans == 1, s"expected one scan, plan had $scans")
-    // crafted empties are counted
-    import spark.implicits._
-    val crafted = Seq((1L, "", 0L), (2L, "x y", 3L), (3L, null, 0L))
-      .toDF("doc_id", "text", "n_chars")
-    val g2 = operators.Pipeline.withQualityGate(crafted, "g2")
-    g2.collect()
-    assert(g2.queryExecution.observedMetrics("g2")
-      .getAs[Long]("n_empty") == 2L)
-  }
-
   test("waterfill: hand-computed levels, exact budget conservation, " +
       "saturation edge cases") {
     import spark.implicits._
